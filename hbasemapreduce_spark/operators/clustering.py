@@ -8,9 +8,10 @@ DataFrame-native core of the large-star/small-star method (Kiveris et
 al., "Connected Components in MapReduce and Beyond", SoCC'14 — public
 literature).  Each round is one equi-join + one aggregate; rounds
 needed = component diameter (near-dup clusters are shallow — single
-digits).  ``localCheckpoint`` truncates lineage so plans don't grow
-across iterations; convergence is a driver-side count, the only
-driver round-trip per iteration.
+digits).  An eager ``localCheckpoint`` every three rounds truncates
+lineage so plans don't grow, and the convergence flag is an observed
+metric of that same checkpoint job: one job round-trip per three
+rounds.
 
 The edge set is the EXACT (oracle-checked) blocked-Jaccard pair list,
 so the DuckDB oracle can rebuild identical clusters with a recursive
@@ -20,7 +21,7 @@ value-hash oracle, not just a rows-only check.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import query
@@ -64,77 +65,70 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _propagate_min_once(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """One min-label propagation round: each node takes the minimum of
-    its own label and its neighbours' labels; ``chg`` marks nodes whose
-    label shrank this round."""
-    neighbor_min = (
-        edges.join(labels, edges.id_b == labels.id)
-        .groupBy("id_a")
-        .agg(F.min("label").alias("nmin"))
-    )
-    return labels.join(neighbor_min, labels.id == neighbor_min.id_a, "left").select(
-        "id",
-        F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias("label"),
-        (F.coalesce("nmin", F.col("label")) < F.col("label")).alias("chg"),
-    )
+_ROUNDS_PER_CHECKPOINT = 3
 
 
 def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Iterative min-label connected components over an (id_a, id_b)
-    pair list — the shared harness behind x_dedup_clusters (text
-    near-dups) and x_dedup_phash_clusters (media near-dups).  Returns
-    (id, label) for every endpoint, label = component minimum.
+    pair list — the shared harness behind x_dedup_clusters,
+    x_dedup_phash_clusters and x_pipeline_entity_resolution (string
+    ids).  Returns (id, label) for every endpoint, label = component
+    minimum.  Pairs with a NULL endpoint are dropped (NULL names no node).
 
-    r13: TWO propagation rounds execute per eager ``localCheckpoint``
-    (the materialization barrier is the dominant per-round cost at
-    cluster scale — each barrier is a full driver job round-trip), so
-    the job count per converged run halves while the shuffle work per
-    round is unchanged.  Convergence granularity is identical to the
-    former every-other-round check: ``chg`` covers the SECOND round of
-    each pair, and a pair whose second round changed nothing is at the
-    fixpoint (labels only ever decrease).  Measured (sf0.1, interleaved
-    min-of-3, bit-identical label digests): text-pair CC 2.15 -> 1.91 s,
-    phash-pair CC 0.65 -> 0.54 s.  Pointer-doubling (label-table
-    shortcut join per round) was measured and REFUTED on this corpus:
-    rounds 6 -> 5 but wall time flat-to-worse (3.27 vs 3.35 s) — the
-    extra self-join costs more than the saved round at shallow
-    near-dup diameters; the loud non-convergence guard below is what
-    flags a corpus deep enough to revisit that.
+    Each pair becomes four edges, both directions plus a self-loop per
+    endpoint, so a round is one join + one ``min(label)`` per id_a; the
+    same aggregate over the self-loop alone is the previous label, which
+    gives ``chg``.  Round 1 runs over identity labels: a plain groupBy.
+    ``_ROUNDS_PER_CHECKPOINT`` rounds run per eager ``localCheckpoint``
+    (the barrier is a full job round-trip, the dominant per-round
+    cost), and ``max(chg)`` of the last round is observed on that same
+    job; a round that changed nothing is the fixpoint (labels only
+    decrease).  Refuted: pointer-doubling (rounds 6 -> 5, wall time
+    flat-to-worse at shallow near-dup diameters) and self-loops built
+    with ``distinct``, an extra shuffle (x_dedup_clusters at sf0.1 on
+    4 cores: 2.5 -> 4.1 s).
     """
-    edges = pairs.union(
-        pairs.select(F.col("id_b").alias("id_a"), F.col("id_a").alias("id_b"))
-    ).localCheckpoint()
-    # r13: round 1 propagates over IDENTITY labels, so its neighbor-min
-    # join collapses to a plain groupBy over the edge list —
-    # least(id_a, min(id_b)) — and the initial (id, label=id) relation,
-    # its distinct, and its checkpoint barrier disappear (the groupBy's
-    # id_a key set IS the node set).  Bit-identical to propagating over
-    # the identity labeling by definition.
-    labels = None
-    converged = False
-    for r in range(max_rounds // 2):  # diameter guard; clusters are shallow
-        if r == 0:
-            mid = edges.groupBy("id_a").agg(
-                F.least(F.col("id_a"), F.min("id_b")).alias("label")
-            ).select(F.col("id_a").alias("id"), "label")
-        else:
-            mid = _propagate_min_once(edges, labels).select("id", "label")
-        labels = _propagate_min_once(edges, mid).localCheckpoint()
-        if labels.filter("chg").limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        # fail LOUDLY: truncated propagation would return intermediate
-        # labels as if they were component minima — a wrong answer, not
-        # an error.  A component diameter > max_rounds means this corpus
-        # needs the large-star/small-star contraction (halves diameter
-        # per round) instead of plain min-label propagation.
-        raise RuntimeError(
-            "min_label_components: propagation did not converge in "
-            f"{max_rounds} rounds (component diameter > {max_rounds})"
+    a, b = F.col("id_a"), F.col("id_b")
+    edges = (
+        pairs.where(a.isNotNull() & b.isNotNull())
+        .select(
+            F.inline(
+                F.array(
+                    F.struct(a, b),
+                    F.struct(b.alias("id_a"), a.alias("id_b")),
+                    F.struct(a, a.alias("id_b")),
+                    F.struct(b.alias("id_a"), b),
+                )
+            )
         )
-    return labels.select("id", "label")
+        .localCheckpoint(eager=False)
+    )
+    labelled = edges.withColumn("label", b)  # round 1: identity labels, no join
+    rounds = -(-max_rounds // _ROUNDS_PER_CHECKPOINT) * _ROUNDS_PER_CHECKPOINT
+    for rnd in range(1, rounds + 1):  # diameter guard; clusters are shallow
+        labels = labelled.groupBy(a.alias("id")).agg(
+            F.min("label").alias("label"),
+            F.min(F.when(b == a, F.col("label"))).alias("own"),
+        )
+        if rnd % _ROUNDS_PER_CHECKPOINT == 0:
+            seen = Observation()
+            labels = (
+                labels.select("id", "label", (F.col("label") < F.col("own")).alias("chg"))
+                .observe(seen, F.max("chg").alias("chg"))
+                .localCheckpoint()
+            )
+            if not seen.get["chg"]:
+                return labels.select("id", "label")
+        labelled = edges.join(labels, b == labels.id).select("id_a", "id_b", "label")
+    # fail LOUDLY: truncated propagation would return intermediate
+    # labels as if they were component minima — a wrong answer, not an
+    # error.  A component diameter > max_rounds means this corpus needs
+    # the large-star/small-star contraction (halves diameter per round)
+    # instead of plain min-label propagation.
+    raise RuntimeError(
+        "min_label_components: propagation did not converge in "
+        f"{max_rounds} rounds (component diameter > {max_rounds})"
+    )
 
 
 # -- media near-dup clusters (CC over perceptual-hash pairs) -------------

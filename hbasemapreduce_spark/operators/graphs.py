@@ -15,9 +15,10 @@ relational operator, the way a 100 TB pipeline would chain them.
   distance from a seed set, the frontier-expansion building block.
 
 Scale shapes documented per operator; iteration count is FIXED (3), so
-the unrolled plan is static — no driver-side convergence loop at all
-(contrast x_dedup_clusters, which needs one because component diameter
-is data-dependent).
+the unrolled plan is static — no convergence loop at all (contrast
+x_dedup_clusters, which needs one because component diameter is
+data-dependent, and reads its convergence flag off each eager
+checkpoint job).
 """
 
 from __future__ import annotations
@@ -275,7 +276,8 @@ def graph_label_prop(spark: SparkSession, sf_dir: str) -> DataFrame:
     variants converge faster but are irreproducible, the wrong trade
     for a pipeline whose outputs must be auditable.  Fixed round count
     keeps the plan static (the fixpoint variant would add
-    x_dedup_clusters' driver-side convergence check).
+    x_dedup_clusters' convergence flag, observed on each eager
+    checkpoint).
 
     Scale shape per round: one equi-join of the label table with the
     edge list on src + two bounded hash aggregates ((node, lbl) counts,
@@ -354,7 +356,7 @@ def graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     only), re-relaxing the full reached set costs at most a constant
     factor with 3 rounds and keeps every round's plan IDENTICAL — no
     driver-side frontier-size check, fully static plan (contrast
-    x_dedup_clusters, which needs the convergence loop).  Rounds are
+    x_dedup_clusters, which needs a convergence loop).  Rounds are
     bounded (3), so the unrolled plan is static; unreached nodes simply
     never appear, no infinity sentinel needed.  MIN is idempotent and
     order-independent — bit-identical at any partition count.
@@ -576,8 +578,9 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     endpoints; output = surviving nodes with their subgraph degree.
     Fixed round count keeps the plan static (exact k-core peels to a
     fixed point; three rounds converge on this graph — asserted by the
-    idempotence property test — and production would loop with the
-    x_dedup_clusters driver-side convergence check).
+    idempotence property test — and production would loop like
+    x_dedup_clusters, observing a changed-flag on each eager
+    checkpoint).
 
     Scale shape per round: one degree hash-aggregate (map-side
     partials, one row per node) + two semi-join-shaped equi-joins of
@@ -741,13 +744,16 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
     # the first half-step's join degenerates to COUNT(*) per part times
     # that scalar (SUM of a constant over a part's cust-edges) — the
     # initial hub relation, its two distinct scans, and the first
-    # edge-score join disappear.  Bit-identical by definition; pinned by
-    # the seeded randomized differential against pure Python.
+    # edge-score join disappear.  A NULL cust never joins the hub
+    # vector, so its edges are filtered out of the count exactly as the
+    # join dropped them (and COUNT(DISTINCT cust) skips it too).
+    # Bit-identical by definition; pinned by the seeded randomized
+    # differential against pure Python, NULL-cust edges included.
     a1 = renorm(
         sql_over(
             "SELECT part, COUNT(*) * (SELECT CAST("
             f"{_SCALE} AS BIGINT) DIV COUNT(DISTINCT cust) FROM {{e}}) AS a "
-            "FROM {e} GROUP BY part",
+            "FROM {e} WHERE cust IS NOT NULL GROUP BY part",
             e=e,
         ),
         "part",

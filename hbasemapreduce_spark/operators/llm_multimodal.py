@@ -514,6 +514,8 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 continue
             ids, fidx, es = [], [], []
             for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
+                if text is None:  # NULL payload: zero frames, as the oracle
+                    continue
                 b = np.frombuffer(text.encode("utf-8"), dtype=np.uint8)
                 nf = len(b) // _AUDIO_FRAME
                 if nf == 0:

@@ -913,9 +913,8 @@ def pipeline_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("name_a", "name_b") <= 3)
     )
     # CLUSTER via the shared min-label CC harness (x_dedup_clusters'
-    # machinery — r13: two propagation rounds per checkpoint, see
-    # min_label_components); labels are strings minimized
-    # lexicographically, which the harness handles unchanged.
+    # machinery, see min_label_components); labels are strings
+    # minimized lexicographically, which the harness handles unchanged.
     from .clustering import min_label_components
 
     labels = min_label_components(

@@ -420,6 +420,15 @@ def _micros_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _count_of_dim(vec: str, dim: int, msg: str):
+    """``COUNT(*)`` for a per-dimension-sum aggregate that raises ``msg``
+    on a vector whose size is not ``dim`` (a NULL vector included): the
+    NULL-tolerant ``get`` sums beside it would skip the missing
+    coordinates while the row still counts in the divisor."""
+    bad = F.coalesce(F.size(vec), F.lit(-1)) != dim
+    return F.count(F.when(bad, F.raise_error(F.lit(msg))).otherwise(F.lit(1)))
+
+
 def _collapse(cent_rows: DataFrame) -> DataFrame:
     """(cid, cm) rows -> ONE array-of-structs row, the broadcastable
     scalar the zero-shuffle assignment pass consumes."""
@@ -494,8 +503,9 @@ def kmeans_centroids(
     out = (
         a1.groupBy("cluster")
         .agg(
-            *[F.sum(F.col("m")[i]).alias(f"s{i}") for i in range(dim)],
-            F.count("*").alias("n"),
+            *[F.sum(F.get("m", i)).alias(f"s{i}") for i in range(dim)],
+            _count_of_dim("m", dim, f"kmeans_centroids: vectors must have {dim} dims")
+            .alias("n"),
         )
         .select(
             F.col("cluster").alias("cid"),
@@ -547,7 +557,7 @@ def ml_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2) the update is one hash aggregate on (cluster, dim) — k*d output
     rows at ANY corpus size, map-side partials do the heavy lifting.
     Fixed iteration count keeps the plan static (production runs this
-    loop to convergence with a driver-side delta check, the
+    loop to convergence with a delta observed on each checkpoint, the
     x_dedup_clusters pattern).  Init = the k lowest vec_ids, the
     deterministic stand-in for k-means|| sampling."""
     e = _micros_table(spark, sf_dir)
@@ -938,8 +948,10 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
     c1 = (
         a1.groupBy("s", "cluster")
         .agg(
-            *[F.sum(F.col("sm")[i]).alias(f"v{i}") for i in range(_PQ_DSUB)],
-            F.count("*").alias("n"),
+            *[F.sum(F.get("sm", i)).alias(f"v{i}") for i in range(_PQ_DSUB)],
+            _count_of_dim(
+                "sm", _PQ_DSUB, f"pq_codebooks: vectors must have {_PQ_M * _PQ_DSUB} dims"
+            ).alias("n"),
         )
         .select(
             "s",

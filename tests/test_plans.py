@@ -839,3 +839,22 @@ def test_ivf_pair_blocking_is_equi_join_no_label(spark):
         "label may appear only in the final projection after the "
         "anti-join, never in pair generation"
     )
+
+
+def test_dedup_clusters_job_budget(spark):
+    # Connected components pays one job round-trip per materialization
+    # barrier, so the barrier count is the cost to hold.  Build plus the
+    # final write of x_dedup_clusters at sf0.001 run 11 jobs (3 rounds
+    # per eager checkpoint, convergence observed on the checkpoint job);
+    # the slack of one covers AQE re-planning, which can add or drop a
+    # job depending on the completion order of concurrent query stages.
+    sc = spark.sparkContext
+    group = "test_dedup_clusters_job_budget"
+    sc.setJobGroup(group, group)
+    try:
+        df = all_specs()["x_dedup_clusters"].fn(spark, SF_DIR)
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= 12, f"x_dedup_clusters ran {n_jobs} jobs (budget 12)"

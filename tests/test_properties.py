@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from hbasemapreduce_spark.catalog import load_table
 from hbasemapreduce_spark.registry import all_specs
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, assert_frames_match
 
 SPECS = all_specs()
 
@@ -3298,6 +3298,35 @@ def test_phash_signature_reads_only_the_256_byte_prefix(spark, tmp_path):
     )
     assert rows_a == rows_b
     assert len(rows_a) > 0  # the padded corpus still yields near-dup pairs
+
+
+def test_audio_energy_null_text_yields_zero_frames(spark, tmp_path):
+    """x_multimodal_audio_energy's numpy kernel must not crash on a NULL
+    payload: a NULL text has no bytes, so it yields zero frames — which
+    is also what the DuckDB oracle's unnest over a NULL range gives."""
+    import duckdb
+
+    from hbasemapreduce_spark.operators.llm_multimodal import (
+        multimodal_audio_energy,
+    )
+
+    docs = load_table(spark, SF_DIR, "documents")
+    nulled = docs.withColumn(
+        "text", F.when(F.col("doc_id") % 3 != 0, F.col("text"))
+    )
+    nulled.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
+    got = multimodal_audio_energy(spark, str(tmp_path))
+    assert got.count() > 0
+    assert got.filter(F.col("doc_id") % 3 == 0).count() == 0
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM read_parquet("
+        f"'{tmp_path}/documents.parquet/*.parquet')"
+    )
+    want = con.execute(SPECS["x_multimodal_audio_energy"].oracle).df()
+    con.close()
+    assert_frames_match(got.toPandas(), want, "x_multimodal_audio_energy")
 
 
 def test_substring_index_equals_first_split_token(spark):

@@ -9,6 +9,7 @@ from collections import Counter
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from hbasemapreduce_spark.functions.asof import asof_join
@@ -359,6 +360,10 @@ def test_co_hits_integer_matches_pure_python(spark):
     # h = E a, a again; every half-step L1-renormalized to 10^12 by
     # floor division).  Bit-exact integers: a wrong renorm order, a
     # rounding instead of floor, or a lost half-step fails exactly.
+    # Each trial adds NULL-cust edges with the oracle's join semantics:
+    # a NULL cust is no hub in the uniform start and never joins a hub
+    # vector, but it is a hub of its own after h = E a.  One part is
+    # reached only by a NULL cust, so it gets no first authority score.
     from hbasemapreduce_spark.operators.graphs import co_hits_integer
 
     rng = np.random.default_rng(19)
@@ -372,6 +377,8 @@ def test_co_hits_integer_matches_pure_python(spark):
                 )
             }
         )
+        shared, lonely = (None, edges[0][1]), (None, 9999)
+        edges += [[shared], [lonely], [shared, lonely]][trial]
 
         def renorm(scores):
             t = sum(scores.values())
@@ -380,16 +387,18 @@ def test_co_hits_integer_matches_pure_python(spark):
         def auth_step(h):
             a = Counter()
             for c, p in edges:
-                a[p] += h[c]
+                if c is not None and c in h:
+                    a[p] += h[c]
             return renorm(a)
 
         def hub_step(a):
             h = Counter()
             for c, p in edges:
-                h[c] += a[p]
+                if p in a:
+                    h[c] += a[p]
             return renorm(h)
 
-        custs = sorted({c for c, _ in edges})
+        custs = sorted({c for c, _ in edges if c is not None})
         h0 = {c: scale // len(custs) for c in custs}
         a1 = auth_step(h0)
         h1 = hub_step(a1)
@@ -409,21 +418,14 @@ def test_min_label_components_matches_union_find(spark):
     # Seeded random pair lists vs a pure-Python union-find: every
     # endpoint must get the exact minimum id of its connected
     # component.  Exercises the convergence loop itself (the riskiest
-    # code path: the every-other-round driver check and the chg flag),
-    # not just one propagation round.  max_rounds is generous because
-    # plain min-label propagation needs rounds >= the min node's
-    # eccentricity, and a sparse random graph can contain long chains.
+    # code path: several rounds per checkpoint and the chg flag read
+    # from the checkpoint job), not just one propagation round.
+    # max_rounds is generous because plain min-label propagation needs
+    # rounds >= the min node's eccentricity, and a sparse random graph
+    # can contain long chains.
     from hbasemapreduce_spark.operators.clustering import min_label_components
 
-    rng = np.random.default_rng(29)
-    for trial, (n, m) in enumerate([(50, 40), (60, 90), (80, 30)]):
-        pairs = sorted(
-            {
-                (int(a), int(b)) if a < b else (int(b), int(a))
-                for a, b in rng.integers(0, n, (m, 2))
-                if a != b
-            }
-        )
+    def union_find(pairs):
         parent = {}
 
         def find(x):
@@ -437,16 +439,49 @@ def test_min_label_components_matches_union_find(spark):
         comp = {}
         for v in parent:
             comp.setdefault(find(v), []).append(v)
-        expected = {
-            v: min(members) for members in comp.values() for v in members
+        return {v: min(members) for members in comp.values() for v in members}
+
+    def components(pairs, schema, max_rounds=100):
+        df = spark.createDataFrame(pairs, schema)
+        return {
+            r.id: r.label
+            for r in min_label_components(df, max_rounds=max_rounds).collect()
         }
 
-        df = spark.createDataFrame(pairs, "id_a long, id_b long")
-        got = {
-            r.id: r.label
-            for r in min_label_components(df, max_rounds=100).collect()
-        }
-        assert got == expected, f"trial {trial}"
+    rng = np.random.default_rng(29)
+    cases = []
+    for n, m in [(50, 40), (60, 90), (80, 30)]:
+        cases.append(
+            sorted(
+                {
+                    (int(a), int(b)) if a < b else (int(b), int(a))
+                    for a, b in rng.integers(0, n, (m, 2))
+                    if a != b
+                }
+            )
+        )
+    # a path whose minimum sits at one end: 14 rounds to reach the far
+    # end plus one quiet round, i.e. converged only at the 5th checkpoint
+    path = [int(v) for v in rng.permutation(np.arange(1, 15))]
+    chain = list(zip([0] + path[:-1], path)) + [(100, 101), (101, 102)]
+    cases.append(chain)
+    for trial, pairs in enumerate(cases):
+        got = components(pairs, "id_a long, id_b long")
+        assert got == union_find(pairs), f"trial {trial}"
+
+    # string ids, the x_pipeline_entity_resolution shape: labels are the
+    # lexicographic minimum, not the numeric one
+    words = [(f"n{a}", f"n{b}") for a, b in chain]
+    assert components(words, "id_a string, id_b string") == union_find(words)
+
+    # a pair with a NULL endpoint names no node and is dropped
+    with_null = cases[0] + [(None, 7), (8, None), (None, None)]
+    assert components(with_null, "id_a long, id_b long") == union_find(cases[0])
+
+    # the chain's minimum has eccentricity 14 > max_rounds: must raise,
+    # never return the intermediate labels
+    with pytest.raises(RuntimeError, match="did not converge"):
+        components(chain, "id_a long, id_b long", max_rounds=6)
 
 
 def test_bpe_train_core_matches_pure_python(spark):
@@ -628,6 +663,28 @@ def test_kmeans_centroids_matches_pure_python_lloyd(spark):
             for r in kmeans_centroids(spark, "", e=e, dim=4).collect()
         }
         assert got == expected, f"trial {trial}"
+
+
+@pytest.mark.parametrize("short", [True, False], ids=["short", "null"])
+def test_kmeans_and_pq_reject_short_vectors(spark, short):
+    # The per-dimension centroid sums would skip a short (or NULL)
+    # vector's missing coordinates while its row still counts in the
+    # divisor — a silently wrong centroid.  Both trainers must raise.
+    from hbasemapreduce_spark.operators.stats_ml import kmeans_centroids, pq_codebooks
+
+    rng = np.random.default_rng(47)
+    trainers = [
+        ("kmeans_centroids", 4, lambda e: kmeans_centroids(spark, "", e=e, dim=4)),
+        ("pq_codebooks", 64, pq_codebooks),
+    ]
+    for name, dim, train in trainers:
+        rows = [(v, [int(x) for x in rng.integers(0, 2_000_000, dim)]) for v in range(40)]
+        schema = "vec_id long, m array<long>"
+        assert train(spark.createDataFrame(rows, schema)).count() > 0
+        bad = rows[0][1][: dim - 3] if short else None
+        broken = spark.createDataFrame(rows + [(99, bad)], schema)
+        with pytest.raises(Exception, match=f"{name}: vectors must have {dim} dims"):
+            train(broken).collect()
 
 
 def test_cusum_chart_matches_sequential_recurrence(spark):
