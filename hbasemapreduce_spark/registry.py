@@ -7,6 +7,16 @@ oracle get the driver's full row-count + schema + value-hash check;
 keys without one get the weaker rows-only check (SURVEY.md §2 marks
 which — approx/float-path/map-ordering cases).
 
+Emission order is part of the contract surface: the driver's
+CORRECTNESS check covers the FIRST 50 keys of ``queries()``.  The order
+is derived, not kept by hand.  A key's evidence round is the round of
+the newest ``CORRECTNESS_r<N>.json`` in the repo root that contains it,
+or 0 if that entry failed or no artifact holds it.  Keys sort by
+(evidence round, name), so never-checked and failing keys lead, then
+the oldest evidence.  Each rows-only key is emitted directly before the
+full-hash twin that vouches for its values (``ROWS_ONLY_TWINS``).  The
+next artifact therefore rotates the window without a code edit.
+
 Determinism contract (SURVEY.md §2 "determinism rules"):
 - every computed column is aliased identically in Spark and SQL;
 - no raw TIMESTAMP column ever appears in checked output (epoch
@@ -20,9 +30,13 @@ Determinism contract (SURVEY.md §2 "determinism rules"):
 
 from __future__ import annotations
 
+import functools
 import importlib
+import json
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -81,803 +95,77 @@ def _load_all() -> None:
         importlib.import_module(mod)
 
 
-# SURVEY.md §2 contract keys, in driver-evidence priority order.  The
-# driver's CORRECTNESS check covers the FIRST 50 keys of `queries()` in
-# emission order (proven in r2: CORRECTNESS_r02's key set equals the r2
-# registry's first 50 exactly), so emission order is part of the
-# contract surface.  Round-3 rotation (VERDICT r2, items 1 and 3):
-#   1. the 10 contract keys outside r2's window (r1-verified, but their
-#      freshest driver evidence is one round old) lead;
-#   2. two beyond-contract keys whose r1 hash-fail dtype fixes still
-#      need driver confirmation slot in at emission positions 11-12
-#      (x_agg_pivot / x_contamination_ngram, both r3-green) — they can
-#      never re-enter the window from behind 60 contract keys otherwise;
-#   3. the 27 contract keys whose only driver evidence is r2;
-#   4. the 23 contract keys verified in BOTH r1 and r2 — the 12 that
-#      fall past position 50 all have double evidence, the best keys to
-#      leave out of a 50-key window;
-#   5. remaining beyond-contract keys, all under an `x_` prefix so even
-#      an alphabetical re-sort keeps them behind every contract key.
-_CONTRACT_PRIORITY = [
-    # -- outside r2's window (freshest evidence is r1): lead the r3 window --
-    "distinct_rows",
-    "scalar_string",
-    "scalar_date",
-    "scalar_math",
-    "scalar_json",
-    "scalar_array",
-    "scalar_map",
-    "dedup_exact",
-    "dedup_minhash",
-    "multimodal_join",
-    # (r3's emission positions 11-12 were x_agg_pivot/x_contamination_ngram)
-    # -- verified in r2 only --
-    "scan_project",
-    "scan_range",
-    "sink_partitioned",
-    "source_json_lines",
-    "sort_orderby",
-    "topk_global",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "win_rank",
-    "win_topk_per_group",
-    "win_running_sum",
-    "win_lag_delta",
+# SURVEY.md §2 contract keys.  Every other key carries an ``x_`` prefix,
+# so even a driver that re-sorts keys by name sees these 60 first.
+CONTRACT_KEYS = frozenset({
+    "scan_full", "scan_prefix", "scan_range", "scan_project", "page_limit",
+    "filter_value", "filter_compound", "filter_regex", "filter_in", "filter_null",
+    "join_inner", "join_left", "join_semi", "join_anti", "join_star",
+    "join_theta_range", "join_asof",
+    "agg_rowcount", "agg_cellcount", "agg_group_sum", "agg_multi", "agg_distinct",
+    "agg_approx_distinct", "agg_rollup", "agg_cube",
+    "win_rank", "win_topk_per_group", "win_running_sum", "win_lag_delta",
     "win_moving_avg",
-    "wordcount",
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_session",
-    "stream_late_data",
-    "stream_dedup",
-    "sim_cosine_topk",
-    "text_stats",
-    "text_tf_topterms",
-    "udf_scalar_pandas",
-    "udaf_grouped_pandas",
-    "udtf_explode_like",
-    # -- verified in both r1 and r2 (the window tail; last 12 fall out) --
-    "scan_full",
-    "scan_prefix",
-    "filter_value",
-    "filter_compound",
-    "filter_regex",
-    "filter_in",
-    "filter_null",
-    "page_limit",
-    "join_inner",
-    "join_left",
-    "join_semi",
-    "join_anti",
-    "join_star",
-    "join_theta_range",
-    "join_asof",
-    "agg_rowcount",
-    "agg_cellcount",
-    "agg_group_sum",
-    "agg_multi",
-    "agg_distinct",
-    "agg_approx_distinct",
-    "agg_rollup",
-    "agg_cube",
-]
-
-CONTRACT_KEYS = frozenset(_CONTRACT_PRIORITY)
-
-# Round-5 driver window (VERDICT r4, item 1).  Cumulative driver
-# evidence after r4: ALL 60 contract keys hash-green with r3-or-r4
-# evidence, plus 42 x_ keys — leaving 61 registered keys that have never
-# been inside a driver window.  A 50-key window cannot hold 61, so r5
-# spends EVERY slot on first-timers (r4 proved the rotation mechanics:
-# 38/38 first-timers green) and defers the 12 keys listed in
-# _R6_BACKLOG, chosen because each is either rows-only by design (the
-# driver check would be weakest there) or a small single-shape
-# projection/aggregate with multi-round local oracle evidence.
-# Priority inside the window follows the verdict: the 12 TPC-H ports,
-# then the 10 r4 operators, then the displaced r2-era keys, then the
-# remaining never-checked keys.  x_sim_knn_graph_ivf is the r5-built
-# scale variant (VERDICT r4 item 4) — new code, but its local oracle
-# check is the exact driver protocol.
-_R5_WINDOW = [
-    # -- 12 TPC-H ports (operators/tpch.py, added r4) --
-    "x_tpch_q4",
-    "x_tpch_q7",
-    "x_tpch_q8",
-    "x_tpch_q9",
-    "x_tpch_q11",
-    "x_tpch_q12",
-    "x_tpch_q13",
-    "x_tpch_q15",
-    "x_tpch_q16",
-    "x_tpch_q17",
-    "x_tpch_q20",
-    "x_tpch_q22",
-    # -- 10 operators added in r4 --
-    "x_stats_abtest",
-    "x_stats_linreg",
-    "x_shard_manifest",
-    "x_etl_cdc_apply",
-    "x_join_asof_tolerance",
-    "x_time_gap_histogram",
-    "x_win_overlap_concurrency",
-    "x_dedup_prefix",
-    "x_sim_knn_graph",
-    "x_pipeline_pretrain_export",
-    # -- displaced r2-era keys the r4 verdict names --
-    "x_sim_ann_lsh",
-    "x_agg_decile",
-    "x_join_dpp",
-    "x_layout_zorder",
-    "x_stream_stateful",
-    "x_sink_orc",
-    "x_sink_json_lines",
-    "x_source_csv",
-    "x_scan_partition_pruned",
-    # -- remaining never-driver-checked keys --
-    "x_agg_grouping_sets",
-    "x_agg_salted_twophase",
-    "x_bulkload_ranged",
-    "x_client_get",
-    "x_client_scan",
-    "x_etl_compact",
-    "x_etl_snapshot_diff",
-    "x_funnel_conversion",
-    "x_incremental_agg",
-    "x_join_bucketed",
-    "x_join_salted",
-    "x_multimodal_binary_stats",
-    "x_profile_table",
-    "x_retention_cohort",
-    "x_stream_hourly_top",
-    "x_stream_interval_join",
-    "x_text_unigram_lm",
-    "x_udtf_python",
-    # -- r5-built scale variant (VERDICT r4 item 4) --
-    "x_sim_knn_graph_ivf",
-]
-
-# Round-6 driver window.  After the r5 window runs, cumulative driver
-# evidence covers all 60 contract keys plus 90 x_ keys, leaving the 79
-# _R6_BACKLOG keys below as the never-driver-checked set.  A 50-key
-# window cannot hold 79, so r6 follows the same rotation discipline as
-# r5: every slot goes to a first-timer with a full-hash oracle,
-# prioritizing (a) the keys that have waited longest (deferred from the
-# r5 window) and (b) the architecturally substantive r5 operators —
-# graphs, pipelines, portable dedup, ANN/PQ, BPE, streaming twins —
-# over small single-shape window/time projections with multi-round
-# local oracle evidence.  The 29 deferred keys live in _R7_BACKLOG;
-# the 3 rows-only-by-design keys defer because the driver check is
-# weakest exactly there.
-_R6_WINDOW = [
-    # -- longest waiters: deferred from the r5 window (r4-era keys) --
-    "x_text_langid",  # upgraded r5: rows-only -> full-hash oracle
-    "x_multimodal_frame_sample",
-    "x_multimodal_resize",
-    "x_text_fingerprint",
-    "x_text_repetition",
-    "x_text_tokencount",
-    "x_text_length_histogram",
-    "x_text_quality",
-    "x_win_ntile",
-    "x_unpivot",
-    # -- graph suite (operators/graphs.py, added r5) --
-    "x_graph_pagerank",
-    "x_graph_triangles",
-    "x_graph_label_prop",
-    "x_graph_bfs",
-    "x_graph_kcore",
-    "x_graph_modularity",
-    "x_graph_jaccard",
-    # -- end-to-end pipelines --
-    "x_pipeline_entity_resolution",
-    "x_pipeline_rag_index",
-    # -- dedup family (portable twins + new strategies) --
-    "x_dedup_gram_containment",
-    "x_dedup_semantic",
-    "x_dedup_incremental",
-    "x_dedup_paragraph",
-    "x_dedup_minhash_portable",
-    "x_dedup_simhash_portable",
-    # -- similarity / ANN / quantization --
-    "x_sim_maxsim",
-    "x_sim_ivf_kmeans",
-    "x_sim_sparse_topk",
-    "x_sim_ivfpq",
-    "x_emb_pq",
-    "x_emb_gram_gemm",
-    "x_eval_ann_recall",
-    # -- ML / stats --
-    "x_ml_kmeans",
-    "x_ml_centroid_classify",
-    "x_stats_ks_drift",
-    "x_stats_spc",
-    "x_eval_rank_corr",
-    # -- text analysis --
-    "x_text_bpe_train",
-    "x_text_bpe_apply",
-    "x_text_chi2_terms",
-    "x_text_collocations",
-    "x_text_keywords",
-    # -- streaming twins --
-    "x_stream_chained_agg",
-    "x_stream_join_dim",
-    # -- quality / curation / retrieval --
-    "x_quality_rules",
-    "x_quality_monitor",
-    "x_rank_rrf",
-    "x_data_mixture",
-    "x_sql_text",
-    "x_udf_arrow",
-]
-
-# Never-driver-checked keys NOT in the r7 window (the window itself is
-# the promoted _R5_WINDOW, see _R7_WINDOW below).  Listed so the next
-# rotation starts from a committed plan, not git archaeology: the r8
-# window should lead with the oldest deferrals and the architecturally
-# substantive late-r6 keys (boost_round, var_stump, cuped, bootstrap,
-# jackknife, MMR, the phash pair+cluster chain, stream_srm) over small
-# single-shape projections, same discipline as r5/r6.  81 entries —
-# more than one 50-key window; these follow the r7 window in emission
-# order as the hedge.
-_R7_BACKLOG = [
-    # rows-only by design — the driver check is weakest here:
-    "x_agg_sketch_hll",
-    "x_dedup_simhash",
-    "x_agg_sketch_cms",
-    # small single-shape keys with multi-round local oracle evidence:
-    "x_time_fill_forward",
-    "x_sample_importance",
-    "x_win_ema",
-    "x_time_interp",
-    "x_feature_binning",
-    "x_win_cume_dist",
-    "x_etl_backfill",
-    "x_win_streak",
-    "x_win_drawdown",
-    "x_profile_skew",
-    "x_filter_bloom",
-    "x_feature_pit_matrix",
-    "x_win_rolling_median",
-    "x_mask_spans",
-    "x_privacy_kanon",
-    "x_time_autocorr",
-    "x_compact_binpack",
-    "x_agg_histogram2d",
-    "x_agg_diversity",
-    "x_time_peaks",
-    "x_feature_minmax",
-    "x_time_dow_profile",
-    "x_stats_mad",
-    "x_stats_benford",
-    "x_stats_gini",
-    "x_text_readability",
-    # new in r6 (after the r6 window was frozen) — first-eligible in r7:
-    "x_dedup_span",
-    "x_text_lm_score",
-    "x_eval_ndcg",
-    "x_contamination_semantic",
-    "x_ml_gini_stump",
-    "x_layout_hilbert",
-    "x_graph_hits",
-    "x_stats_cramers_v",
-    "x_time_m4",
-    "x_source_merge_schema",
-    "x_multimodal_audio_energy",
-    "x_stream_dup_rate",
-    "x_win_pareto",
-    "x_join_scd2_pit",
-    "x_time_cusum",
-    "x_feature_hashing",
-    "x_basket_lift",
-    "x_ml_ridge",
-    "x_eval_classification",
-    "x_ml_als_step",
-    "x_stats_bootstrap",
-    "x_agg_skyline",
-    "x_privacy_rr_freq",
-    "x_ml_logreg_step",
-    "x_eval_calibration",
-    "x_funnel_latency",
-    "x_stats_srm",
-    "x_feature_target_enc",
-    "x_multimodal_phash_dedup",
-    "x_eval_regression",
-    "x_path_transitions",
-    "x_stats_power",
-    "x_rank_mmr",
-    "x_eval_langid",
-    "x_stream_srm",
-    "x_ml_var_stump",
-    "x_ml_boost_round",
-    "x_funnel_window",
-    "x_stats_jackknife",
-    "x_dedup_phash_clusters",
-    "x_feature_quantile_norm",
-    "x_stats_cuped",
-    "x_graph_assortativity",
-    "x_agg_median_of_means",
-    "x_time_burstiness",
-    "x_agg_winsorized_mean",
-    "x_privacy_pseudonymize",
-    "x_time_sax",
-    "x_stats_did",
-    "x_eval_forecast",
-    "x_eval_auc",
-    # new in r7 (after the r7 window was frozen) — first-eligible in r8:
-    "x_multimodal_decode",
-    "x_join_asof_nearest",
-    "x_privacy_dp_counts",
-    "x_multimodal_decode_bmp",
-    "x_sim_ann_lsh_portable",
-    "x_agg_distinct_kmv",
-    "x_agg_sketch_cms_portable",
-]
-# Round-8 driver window (VERDICT r7 item 1).  The r7 driver artifact
-# landed green (CORRECTNESS_r07.json: 50/50), so the window rotates to
-# the first 50 _R7_BACKLOG entries — they were already next in emission
-# order, making the rotation exactly the plan staged at the end of r7.
-# Three keys are rows-only by design (x_agg_sketch_hll, x_dedup_simhash,
-# x_agg_sketch_cms — sketch/bucket membership is seed-dependent; each
-# has a full-hash portable twin already driver-checked in r6/r7); the
-# other 47 carry full-hash oracles.  This window contains every operator
-# touched by the r6 ADVICE fixes that still lacked driver confirmation
-# in-window (x_win_pareto, x_multimodal_audio_energy, x_basket_lift,
-# x_eval_classification) — the rest (x_ml_var_stump, x_ml_boost_round,
-# x_privacy_rr_freq) lead the r8 backlog / staged r9 window.
-_R8_WINDOW = list(_R7_BACKLOG[:50])
-
-# First-timers remaining after the r8 window (37 at rotation time).
-# New keys registered during round 8 are appended HERE so the
-# rotation-coverage invariant (tests/test_registry.py) stays true:
-# unchecked-by-any-driver-artifact == _R8_WINDOW ∪ _R8_BACKLOG.
-_R8_BACKLOG = [
-    *_R7_BACKLOG[50:],
-    # new in r8 (after the r8 window was frozen) — first-eligible in r9:
-    "x_layout_zonemap",
-    "x_eval_rouge_n",
-    "x_join_fuzzy_name",
-    "x_agg_quantile_bottomk",
-    "x_time_stl_lite",
-    "x_privacy_ldiversity",
-    "x_sample_priority",
-    "x_eval_wer",
-    "x_graph_clustering_coeff",
-    "x_multimodal_histogram",
-    "x_time_changepoint",
-    "x_profile_partition_balance",
-    "x_udx_cogrouped_pandas",
-    "x_udx_map_in_arrow",
-    "x_stream_tws_profile",
-    "x_udx_apply_in_arrow",
-    "x_time_seasonal_anomaly",
-    "x_ml_pca_power",
-    "x_dedup_cross_source",
-    "x_eval_chrf",
-]
-
-# Contract-key refresh order (VERDICT r7 item 2).  All 60 contract keys
-# carry driver evidence, but the oldest is 4-5 rounds stale (48 keys
-# last checked r3, 12 r4) while the code under them has since been
-# refactored onto shared helpers.  Once the first-timer backlog drains,
-# windows refill from this list: every contract key, ordered
-# oldest-driver-evidence-first (r3 before r4, ties broken by
-# _CONTRACT_PRIORITY order).  Derived from the landed CORRECTNESS
-# artifacts and pinned against them in tests/test_registry.py.
-_CONTRACT_REFRESH = [
-    # -- last driver-checked in r3 --
-    "distinct_rows",
-    "scalar_string",
-    "scalar_date",
-    "scalar_math",
-    "scalar_json",
-    "scalar_array",
+    "sort_orderby", "topk_global", "distinct_rows",
+    "set_union_all", "set_union_distinct", "set_intersect", "set_except",
+    "scalar_string", "scalar_date", "scalar_math", "scalar_json", "scalar_array",
     "scalar_map",
-    "dedup_exact",
-    "multimodal_join",
-    "scan_project",
-    "scan_range",
-    "sink_partitioned",
-    "source_json_lines",
-    "sort_orderby",
-    "topk_global",
-    "set_union_all",
-    "set_union_distinct",
-    "set_intersect",
-    "set_except",
-    "win_rank",
-    "win_topk_per_group",
-    "win_running_sum",
-    "win_lag_delta",
-    "win_moving_avg",
-    "wordcount",
-    "stream_tumbling",
-    "stream_sliding",
-    "stream_session",
-    "stream_late_data",
+    "stream_tumbling", "stream_sliding", "stream_session", "stream_late_data",
     "stream_dedup",
-    "sim_cosine_topk",
-    "text_stats",
-    "text_tf_topterms",
-    "udf_scalar_pandas",
-    "udaf_grouped_pandas",
-    "udtf_explode_like",
-    "scan_full",
-    "scan_prefix",
-    "filter_value",
-    "filter_compound",
-    "filter_regex",
-    "filter_in",
-    "filter_null",
-    "page_limit",
-    "join_inner",
-    "join_left",
-    "join_semi",
-    # -- last driver-checked in r4 --
-    "join_anti",
-    "join_star",
-    "join_theta_range",
-    "join_asof",
-    "agg_rowcount",
-    "agg_cellcount",
-    "agg_group_sum",
-    "agg_multi",
-    "agg_distinct",
-    "agg_rollup",
-    "agg_cube",
-    # -- rows-only-by-design contract keys, refreshed LAST (VERDICT r8
-    # item 7: window slots go to hash-checkable keys first; these two
-    # get only the weaker rows check from the driver, and their real
-    # value evidence lives in full-hash portable twins —
-    # x_dedup_minhash_portable pass r6, x_agg_distinct_kmv in the r9
-    # window).  dedup_minhash evidence r3, agg_approx_distinct r4. --
-    "dedup_minhash",
-    "agg_approx_distinct",
-]
+    "wordcount", "text_stats", "text_tf_topterms", "dedup_exact", "dedup_minhash",
+    "sim_cosine_topk", "multimodal_join",
+    "udf_scalar_pandas", "udaf_grouped_pandas", "udtf_explode_like",
+    "sink_partitioned", "source_json_lines",
+})
 
-# Round-9 driver window (VERDICT r8 item 1).  The r8 driver artifact
-# landed green (CORRECTNESS_r08.json: 50/50), so the window rotates to
-# the staged plan: the first 50 _R8_BACKLOG first-timers.  Every slot
-# carries a full-hash oracle (VERDICT r8 item 7: no rows-only keys in
-# window fronts until the backlog drains) — pinned in
-# tests/test_registry.py::test_r9_window_oracles.  This window holds
-# the three r6-ADVICE-fixed operators still lacking driver confirmation
-# (x_ml_var_stump, x_ml_boost_round, x_privacy_rr_freq), the
-# agg_approx_distinct full-hash twin x_agg_distinct_kmv, and the four
-# Spark-4 UDX surface keys.  Pre-validated 50/50 through the exact
-# driver protocol at sf0.01 before the r8 rotation landed.
-_R9_WINDOW = [*_R8_BACKLOG, *_CONTRACT_REFRESH][:50]
+# Each rows-only key (seed-dependent sketch/LSH membership, so no
+# oracle) -> the full-hash twin whose hash pass vouches for its values.
+ROWS_ONLY_TWINS = {
+    "dedup_minhash": "x_dedup_minhash_portable",
+    "agg_approx_distinct": "x_agg_distinct_kmv",
+    "x_agg_sketch_hll": "x_agg_distinct_kmv",
+    "x_dedup_simhash": "x_dedup_simhash_portable",
+    "x_agg_sketch_cms": "x_agg_sketch_cms_portable",
+    "x_sim_ann_lsh": "x_sim_ann_lsh_portable",
+}
 
-# First-timers remaining after the r9 window (7 at rotation time).
-# New keys registered during round 9 are appended HERE so the
-# rotation-coverage invariant (tests/test_registry.py) stays true:
-# unchecked-by-any-driver-artifact == _R9_WINDOW ∪ _R9_BACKLOG.
-_R9_BACKLOG = [
-    *[k for k in _R8_BACKLOG if k not in set(_R9_WINDOW)],
-    # new in r9 (after the r9 window was frozen) — first-eligible in r10:
-    "x_text_freq_spectrum",
-    "x_sim_bitext_margin",
-    "x_privacy_tcloseness",
-    "x_eval_bleu_components",
-    "x_multimodal_patchify",
-    "x_agg_kmv_merge",
-    "x_client_increment",
-    "x_stream_counter",
-    "x_agg_kmv_intersect",
-    "x_source_json_corrupt",
-    "x_stats_moments",
-    "x_sync_table",
-    "x_verify_replication",
-    "x_eval_mrr",
-    "x_region_split_points",
-    "x_client_scan_timerange",
-    "x_funnel_attribution",
-    "x_compact_major",
-    "x_client_append",
-    "x_eval_recall_at_k",
-]
-
-# Round-10 driver window (VERDICT r9 item 1).  The r9 driver artifact
-# landed green (CORRECTNESS_r09.json: 50/50 hash-match), so the window
-# rotates to the plan staged at the end of r9: all 27 remaining
-# first-timers (the entire never-driver-checked backlog — the r9
-# continuation's sync/replication/compaction/client-mutation/
-# retrieval-eval/Arrow-UDX additions), then the leading 23
-# _CONTRACT_REFRESH keys (oldest driver evidence first — r3-era, six
-# rounds stale), beginning the contract re-validation VERDICT r9 item
-# 2 orders.  Pre-validated 50/50 through the exact driver protocol at
-# sf0.01 before this rotation landed (BENCH_TREND r9 section).
-_R10_WINDOW = [*_R9_BACKLOG, *_CONTRACT_REFRESH][:50]
-
-# First-timers remaining after the r10 window: NONE at rotation time —
-# the r10 window drains the entire backlog.  New keys registered
-# during round 10 are appended HERE so the rotation-coverage invariant
-# (tests/test_registry.py) stays true: unchecked-by-any-pre-r10-driver-
-# artifact == _R10_WINDOW-first-timers ∪ _R10_BACKLOG.
-_R10_BACKLOG: list[str] = [
-    "x_ml_knn_classify",
-    "x_eval_pass_at_k",
-    "x_sql_pipe",
-    "x_compact_minor",
-    "x_scalar_variant",
-    "x_agg_kmv_difference",
-    "x_win_range_frame",
-    "x_stats_mann_whitney",
-    "x_stats_permutation",
-    "x_sink_csv",
-    "x_source_text",
-    "x_stream_upsert_sink",
-    "x_join_hint_strategy",
-    "x_etl_partition_evolution",
-]
-
-# Evidence re-checks for the r11 tail (VERDICT r9 items 4/5/6 + the r8
-# item-8 adjacency discipline): the three perf-weak keys that need one
-# clean driver number, and every remaining rows-only-by-design key
-# windowed ADJACENT to its full-hash portable twin so a single
-# artifact shows the run-clean rows-only entry next to the twin's hash
-# pass.
-_R11_RECHECK = [
-    "x_emb_gram_gemm",
-    "x_text_winnow",
-    "x_dedup_simhash",
-    "x_dedup_simhash_portable",
-    "x_agg_sketch_cms",
-    "x_agg_sketch_cms_portable",
-    "x_agg_sketch_hll",
-    "x_sim_ann_lsh",
-    "x_sim_ann_lsh_portable",
-    "x_join_bucketed",
-    "x_pipeline_curate",
-    # re-blocked in round 11 (VERDICT r10 item 2: candidate pairs moved
-    # from the label column to the trained IVF quantizer) — their r4
-    # driver evidence describes the OLD code, so they re-run in the r11
-    # window to land driver rows for the shipped implementation
-    "x_dedup_embedding",
-    "x_dedup_semantic",
-]
-
-# Round-11 driver window (VERDICT r10 item 1).  The r10 driver
-# artifact landed green (CORRECTNESS_r10.json: 50/50 hash-match), so
-# the window rotates to the staged plan — RECOMPOSED per the r10
-# ADVICE finding: the staged list's trailing [:50] trim silently
-# dropped the entire _R11_RECHECK tail (14 backlog + 4 adjacency + 35
-# refresh already exceed 50).  The fix is ADVICE option 1: the
-# re-checks move AHEAD of the contract-refresh remainder, so the trim
-# now falls on refresh keys (which have r3/r4 evidence and a staged
-# r12 slot) instead of on the re-checks (which exist to land fresh
-# driver numbers for the perf-weak keys — x_emb_gram_gemm above all —
-# and the rows-only/twin adjacencies).  Composition: the 14 round-10
-# first-timers lead (the only registered keys with zero driver
-# evidence); then the two rows-only CONTRACT keys each immediately
-# followed by their full-hash twin (VERDICT r9 item 6); then the 13
-# re-checks (the 11 staged ones plus the two keys whose candidate
-# blocking was re-built this round and whose r4 evidence therefore
-# describes retired code); then the oldest 19 of the 35 remaining
-# contract-refresh keys.  The 16 refresh keys this trim defers lead
-# _R12_WINDOW below.  Every key here ran hash-green (or clean
-# rows-only at its staged adjacency position) in this round's builder
-# replays of emission keys 1..100 through the exact driver protocol
-# at sf0.01 (BENCH_TREND round 11).
-_R11_WINDOW = [
-    *_R10_BACKLOG,
-    "dedup_minhash",
-    "x_dedup_minhash_portable",
-    "agg_approx_distinct",
-    "x_agg_distinct_kmv",
-    *_R11_RECHECK,
-    *[
-        k
-        for k in _CONTRACT_REFRESH
-        if k not in _R10_WINDOW
-        and k not in ("dedup_minhash", "agg_approx_distinct")
-    ],
-][:50]
-
-# New keys registered during round 11 are appended HERE so the
-# rotation-coverage invariant (tests/test_registry.py) stays true:
-# keys-without-driver-evidence == _R10_BACKLOG (in the r11 window) ∪
-# _R11_BACKLOG (leading the staged r12 window).
-_R11_BACKLOG: list[str] = [
-    "x_source_snapshot",
-    "x_source_snapshot_delta",
-    "x_etl_vacuum",
-    "x_agg_hdr_quantiles",
-    "x_agg_hdr_merge",
-    "x_time_downsample_lttb",
-    "x_agg_hdr_cdf",
-]
-
-# Beyond-contract evidence-refresh tranche for r12: the oldest-driver-
-# evidence x_ keys not already staged (2 r3-era, then r4-era, ordered
-# (evidence round, name) — re-derived from the CORRECTNESS_r* artifacts
-# in tests/test_registry.py so the pin cannot drift from the evidence).
-_R12_X_REFRESH = [
-    "x_agg_pivot",  # r3
-    "x_contamination_ngram",  # r3
-    "x_agg_mode",  # r4
-    "x_basket_pairs",  # r4
-    "x_cell_versions",  # r4
-    "x_client_mutate",  # r4
-    "x_dedup_clusters",  # r4
-    "x_dedup_ngram_jaccard",  # r4
-    "x_dedup_url",  # r4
-    "x_emb_gram",  # r4
-    "x_embedding_quantize",  # r4
-    "x_etl_scd2",  # r4
-    "x_etl_upsert",  # r4
-    "x_index_inverted",  # r4
-    "x_join_fuzzy",  # r4
-    "x_pack_chunks",  # r4
-    "x_rank_bm25",  # r4
-    "x_sample_balanced",  # r4
-    "x_sample_split",  # r4
-    "x_sample_stratified",  # r4
-    "x_session_paths",  # r4
-    "x_sim_ivf",  # r4
-    "x_stats_corr",  # r4
-    "x_stats_outliers",  # r4
-    "x_text_pii_mask",  # r4
-    "x_time_gapfill",  # r4
-    "x_time_ohlc",  # r4
-]
-
-# Keys whose RESULTS changed in round 12 (VERDICT r11 item 1 + item 6
-# family: the sub-quadratic probe/shortlist scaling rules — IVF pair
-# blocking moved from a constant probed fraction to 2·sqrt(nlist), the
-# kNN graph to nlist^0.75, IVF-PQ's ADC shortlist to 4·sqrt(n)).  Their
-# prior driver evidence proves the OLD policies, so they re-enter the
-# window ahead of the refresh tranche (the r10 ADVICE lesson: recheck
-# keys ride ahead of the [:50] trim).  x_dedup_embedding /
-# x_dedup_semantic were in the r11 window under the r11 policy — the
-# window-disjointness pin in tests/test_registry.py exempts exactly
-# this list for exactly that reason.
-_R12_RECHECK = [
-    "x_dedup_embedding",
-    "x_dedup_semantic",
-    "x_sim_knn_graph_ivf",
-    "x_sim_ivfpq",
-]
-
-# r12 window (rotated to the emission front this round).  Round-11
-# first-timers lead; then the r12 code-change re-checks; then the 16
-# contract-refresh keys the r11 recomposition deferred (the join/agg
-# families plus the two the re-check expansion displaced — after r12
-# lands, every contract key's driver evidence is ≤3 rounds old,
-# closing VERDICT r10 item 4); then the oldest-evidence
-# beyond-contract refresh tranche filling to 50 (the trim defers its
-# last 4 — x_stats_outliers, x_text_pii_mask, x_time_gapfill,
-# x_time_ohlc — to the staged r13 tail below).  Computed from the
-# pieces, not hard-coded, so the split stays true as lists evolve.
-_R12_WINDOW = [
-    *_R11_BACKLOG,
-    *_R12_RECHECK,
-    *[k for k in _CONTRACT_REFRESH if k not in _R10_WINDOW and k not in _R11_WINDOW],
-    *_R12_X_REFRESH,
-][:50]
-
-# New keys registered during round 12 are appended HERE so the
-# rotation-coverage invariant (tests/test_registry.py) stays true:
-# keys-without-driver-evidence == _R11_BACKLOG (leading the r12
-# window) ∪ _R12_BACKLOG (leading the staged r13 tail).
-_R12_BACKLOG: list[str] = [
-    "x_agg_heavy_hitters",  # Misra-Gries mergeable frequent-items
-    "x_time_ewma",  # exact dyadic-alpha EWMA
-    "x_time_holt",  # Holt level/trend/forecast, closed-form dyadic weights
-    "x_agg_decay_topk",  # time-decayed trending counters
-    "x_join_interval_overlap",  # grid-blocked interval-overlap pair join
-    "x_source_positional_deletes",  # deletion-vector read via _metadata.row_index
-]
-
-# Staged r13 tail (same-commit staging discipline): round-12
-# first-timers, then the refresh keys the r12 trim deferred.  Emission
-# positions 51.. start with this list, so a >50-key driver window or
-# an early r13 run picks it up with no further rotation edit.
-_R13_STAGE = [
-    *_R12_BACKLOG,
-    *[k for k in _R12_X_REFRESH if k not in set(_R12_WINDOW)],
-]
-
-# Round-7 driver window (VERDICT r6 item 2).  The r5 driver artifacts
-# never landed (no CORRECTNESS_r05/BENCH_r05 exist), so the entire
-# prepared _R5_WINDOW — the 12 TPC-H ports, the 10 r4 operators, the
-# displaced r2-era keys, and x_sim_knn_graph_ivf, all waiting since
-# round 4 — is promoted verbatim.  All 50 are first-timers; every key
-# carries a full-hash oracle except x_sim_ann_lsh (rows-only by design,
-# SURVEY §2 note — LSH bucket membership is seed-dependent).  The
-# _R7_BACKLOG keys follow immediately in emission order as the hedge
-# for a missing/late r7 artifact, same discipline as r5/r6.
-_R7_WINDOW = list(_R5_WINDOW)
+_ROOT = Path(__file__).resolve().parents[1]
+_ARTIFACT = re.compile(r"CORRECTNESS_r(\d+)\.json")
 
 
-# Historical: the r5 rotation's deferred set, retained as documentation
-# of how _R6_WINDOW/_R7_BACKLOG were derived (window ∪ r7-backlog must
-# equal this list plus keys added during round 5 — pinned in
-# tests/test_registry.py).
-_R6_BACKLOG = [
-    "x_agg_sketch_hll",  # rows-only by design
-    "x_text_langid",  # upgraded r5: rows-only -> full-hash oracle
-    "x_dedup_simhash",  # rows-only by design
-    "x_multimodal_frame_sample",
-    "x_multimodal_resize",
-    "x_text_fingerprint",
-    "x_text_repetition",
-    "x_text_tokencount",
-    "x_text_length_histogram",
-    "x_text_quality",
-    "x_win_ntile",
-    "x_unpivot",
-    # new in r5 (after the window was frozen) — first-eligible in r6:
-    "x_graph_pagerank",
-    "x_graph_triangles",
-    "x_time_fill_forward",
-    "x_sample_importance",
-    "x_agg_sketch_cms",
-    "x_ml_centroid_classify",
-    "x_graph_label_prop",
-    "x_emb_gram_gemm",
-    "x_ml_kmeans",
-    "x_graph_bfs",
-    "x_quality_rules",
-    "x_sim_maxsim",
-    "x_text_bpe_train",
-    "x_quality_monitor",
-    "x_sim_ivf_kmeans",
-    "x_dedup_gram_containment",
-    "x_stats_ks_drift",
-    "x_dedup_semantic",
-    "x_graph_jaccard",
-    "x_sim_sparse_topk",
-    "x_stats_mad",
-    "x_win_ema",
-    "x_text_chi2_terms",
-    "x_stream_chained_agg",
-    "x_pipeline_entity_resolution",
-    "x_time_interp",
-    "x_feature_binning",
-    "x_emb_pq",
-    "x_sim_ivfpq",
-    "x_dedup_incremental",
-    "x_sql_text",
-    "x_stats_spc",
-    "x_udf_arrow",
-    "x_pipeline_rag_index",
-    "x_stream_join_dim",
-    "x_win_cume_dist",
-    "x_etl_backfill",
-    "x_text_bpe_apply",
-    "x_dedup_paragraph",
-    "x_win_streak",
-    "x_graph_modularity",
-    "x_win_drawdown",
-    "x_graph_kcore",
-    "x_text_collocations",
-    "x_rank_rrf",
-    "x_data_mixture",
-    "x_eval_ann_recall",
-    "x_profile_skew",
-    "x_filter_bloom",
-    "x_feature_pit_matrix",
-    "x_win_rolling_median",
-    "x_mask_spans",
-    "x_dedup_minhash_portable",
-    "x_dedup_simhash_portable",
-    "x_privacy_kanon",
-    "x_stats_benford",
-    "x_eval_rank_corr",
-    "x_time_autocorr",
-    "x_stats_gini",
-    "x_compact_binpack",
-    "x_agg_histogram2d",
-    "x_text_readability",
-    "x_agg_diversity",
-    "x_time_peaks",
-    "x_text_keywords",
-    "x_feature_minmax",
-    "x_time_dow_profile",
-]
+def _read_evidence(root: Path) -> dict[str, int]:
+    """Key -> round of the newest CORRECTNESS artifact under ``root`` that
+    holds it, or 0 when that entry did not pass."""
+    artifacts = sorted(
+        (int(m.group(1)), p) for p in root.iterdir() if (m := _ARTIFACT.fullmatch(p.name))
+    )
+    evidence: dict[str, int] = {}
+    for rnd, path in artifacts:
+        for key, entry in json.loads(path.read_text()).items():
+            passed = entry.get("hash_match") is True or (
+                entry.get("err") == "no_oracle" and key in ROWS_ONLY_TWINS
+            )
+            evidence[key] = rnd if passed else 0
+    return evidence
+
+
+def emission_order(keys, evidence: dict[str, int]) -> list[str]:
+    """Sort ``keys`` by (evidence round, name), missing evidence as 0,
+    with each rows-only key directly before its twin."""
+    keys = set(keys)
+    held = {k for k in keys if ROWS_ONLY_TWINS.get(k) in keys}
+    order: list[str] = []
+    for k in sorted(keys - held, key=lambda k: (evidence.get(k, 0), k)):
+        order += sorted(r for r in held if ROWS_ONLY_TWINS[r] == k)
+        order.append(k)
+    return order
+
+
+@functools.cache
+def _ordered_keys(n_registered: int) -> list[str]:
+    # Registration only appends (duplicates raise), so the size names the
+    # registry's state; the artifacts are read once per process.
+    return emission_order(_REGISTRY, _read_evidence(_ROOT))
 
 
 def all_specs() -> dict[str, QuerySpec]:
@@ -890,21 +178,7 @@ def all_specs() -> dict[str, QuerySpec]:
     ]
     if stray:
         raise RuntimeError(f"beyond-contract keys must use the x_ prefix: {stray}")
-    window = set(_R12_WINDOW)
-    # Hedge + r13 staging: emission positions 51.. lead with the staged
-    # _R13_STAGE (round-12 first-timers, then the refresh keys the r12
-    # trim deferred), so a >50-key driver window or an early r13 run
-    # picks the staged plan up with no further rotation edit.
-    r13_tail = [k for k in _R13_STAGE if k not in window]
-    staged = window | set(r13_tail)
-    rest_contract = [k for k in _CONTRACT_REFRESH if k not in staged]
-    extras = sorted(
-        k
-        for k in _REGISTRY
-        if k not in CONTRACT_KEYS and k not in staged
-    )
-    order = [*_R12_WINDOW, *r13_tail, *rest_contract, *extras]
-    return {k: _REGISTRY[k] for k in order}
+    return {k: _REGISTRY[k] for k in _ordered_keys(len(_REGISTRY))}
 
 
 def queries() -> dict[str, QueryFn]:

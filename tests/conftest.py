@@ -1,4 +1,5 @@
-"""Shared fixtures: one SparkSession + a DuckDB oracle per session.
+"""Shared fixtures: one SparkSession, a DuckDB oracle and one registry-wide
+plan walk per session.
 
 The oracle comparison here mirrors the driver's t2 check (SURVEY.md §5):
 row count, schema (pandas dtypes after sorting columns by name), and
@@ -9,8 +10,11 @@ must be fixed in the query, not the test.
 
 from __future__ import annotations
 
+import contextlib
+import io
 import os
 import sys
+from dataclasses import dataclass
 
 import duckdb
 import numpy as np
@@ -40,6 +44,49 @@ def spark():
     configure(spark)
     yield spark
     spark.stop()
+
+
+def explain_text(df, mode: str = "formatted") -> str:
+    """``df.explain(mode)`` captured as a string."""
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode)
+    return buf.getvalue()
+
+
+@dataclass(frozen=True)
+class KeyPlan:
+    """One registry key built once at SF_DIR."""
+
+    width: int | None  # schema width; None if the build or analysis raised
+    plan: str | None  # formatted physical plan; None if anything raised
+    error: Exception | None
+
+    def formatted(self) -> str:
+        """The formatted plan, or the build's own exception re-raised."""
+        if self.plan is None:
+            raise self.error
+        return self.plan
+
+
+@pytest.fixture(scope="session")
+def registry_plans(spark) -> dict[str, KeyPlan]:
+    """Every registered key built and planned once, shared by the
+    registry-wide gates (no Python eval, BNLJ whitelist, no cartesian
+    product, every key analyzes)."""
+    from hbasemapreduce_spark.registry import all_specs
+
+    plans = {}
+    for key, spec in all_specs().items():
+        width = plan = error = None
+        try:
+            df = spec.fn(spark, SF_DIR)
+            width = len(df.schema.fields)
+            plan = explain_text(df)
+        except Exception as e:  # noqa: BLE001 — each gate reports it as before
+            error = e
+        plans[key] = KeyPlan(width, plan, error)
+    return plans
 
 
 @pytest.fixture(scope="session")

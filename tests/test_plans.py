@@ -16,15 +16,11 @@ import pytest
 
 from hbasemapreduce_spark.registry import all_specs
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, explain_text
 
 
 def plan_of(spark, key: str, mode: str = "formatted") -> str:
-    df = all_specs()[key].fn(spark, SF_DIR)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain(mode)
-    return buf.getvalue()
+    return explain_text(all_specs()[key].fn(spark, SF_DIR), mode)
 
 
 def test_scan_project_prunes_columns(spark):
@@ -234,7 +230,7 @@ def test_contamination_broadcasts_benchmark(spark):
     assert "BroadcastHashJoin" in plan
 
 
-def test_no_python_eval_outside_udx_multimodal(spark):
+def test_no_python_eval_outside_udx_multimodal(registry_plans):
     # Python (even Arrow-batched) belongs only where semantics demand
     # it; everywhere else the plan must stay inside the JVM.  The scan
     # covers every Python-exec node shape (row UDF = BatchEvalPython,
@@ -258,7 +254,7 @@ def test_no_python_eval_outside_udx_multimodal(spark):
     for key, s in all_specs().items():
         if s.category in allowed_categories or key in allowed_keys:
             continue
-        plan = plan_of(spark, key)
+        plan = registry_plans[key].formatted()
         if any(n in plan for n in python_nodes):
             offenders.append(key)
     assert not offenders, f"Python in the hot path: {offenders}"
@@ -344,7 +340,7 @@ _BNLJ_WHITELIST = {
 }
 
 
-def test_nested_loop_joins_only_where_whitelisted(spark):
+def test_nested_loop_joins_only_where_whitelisted(registry_plans):
     # A BroadcastNestedLoopJoin is O(n*m) compute even when one side is
     # small — acceptable ONLY when the broadcast side is bounded by
     # CONTENT (a scalar, a query set, centroids, language profiles),
@@ -354,17 +350,19 @@ def test_nested_loop_joins_only_where_whitelisted(spark):
         key
         for key, s in all_specs().items()
         if key not in _BNLJ_WHITELIST
-        and "BroadcastNestedLoopJoin" in plan_of(spark, key)
+        and "BroadcastNestedLoopJoin" in registry_plans[key].formatted()
     ]
     assert not offenders, f"unexpected nested-loop joins: {offenders}"
 
 
-def test_no_cartesian_product_anywhere(spark):
+def test_no_cartesian_product_anywhere(registry_plans):
     # A CartesianProduct node is O(n*m) with full materialization —
     # never acceptable; even the brute-force cosine top-k must be a
     # broadcast nested loop, not a shuffle cartesian.
     offenders = [
-        key for key in all_specs() if "CartesianProduct" in plan_of(spark, key)
+        key
+        for key in all_specs()
+        if "CartesianProduct" in registry_plans[key].formatted()
     ]
     assert not offenders, f"cartesian products: {offenders}"
 

@@ -1,49 +1,33 @@
-"""Registry ordering guards (VERDICT r1 item 7, r2 items 1/3/7, r3 item
-6, r4 item 1; r6 rotation continues the same discipline).
+"""Registry ordering guards and the all-keys plan-analysis smoke gate.
 
 The driver's CORRECTNESS check covers exactly the FIRST 50 keys of
-``queries()`` in emission order (proven in r2: CORRECTNESS_r02's key set
-equals the r2 registry's first 50).  Emission order is therefore part of
-the contract surface, and the intended r7 window is pinned here exactly
-so no future registration can reshuffle it.
+``queries()`` in emission order, so emission order is part of the
+contract surface.  The order is derived from the ``CORRECTNESS_r<N>.json``
+artifacts in the repo root: a key's evidence round is the round of the
+newest artifact that holds it (0 if that entry failed or none holds
+it), keys sort by (evidence round, name), and each rows-only key is
+emitted directly before its full-hash twin.  These tests assert that
+rule — against the real artifacts and against synthetic ones — rather
+than any particular window.
 
-Also hosts the all-keys plan-analysis smoke gate (VERDICT r3 item 3):
-round 3 shipped a plan-time AnalysisException (`x_cell_versions`) that
-the ~9-minute oracle suite would have caught but a quick pre-commit run
-did not.  ``test_every_registered_key_analyzes`` forces Catalyst analysis
-of every registered DataFrame at sf0.001 in seconds — no execution — so
-any plan-time failure in ANY key fails fast and locally.
+``test_every_registered_key_analyzes`` forces Catalyst analysis of every
+registered DataFrame at sf0.001 (no execution), so a plan-time failure
+in ANY key fails fast and locally.
 """
 
 from __future__ import annotations
 
 import json
 import pathlib
+import re
+import shutil
 
 from hbasemapreduce_spark.registry import (
-    _CONTRACT_PRIORITY,
-    _CONTRACT_REFRESH,
-    _R5_WINDOW,
-    _R6_BACKLOG,
-    _R6_WINDOW,
-    _R7_BACKLOG,
-    _R7_WINDOW,
-    _R8_BACKLOG,
-    _R8_WINDOW,
-    _R9_BACKLOG,
-    _R9_WINDOW,
-    _R10_BACKLOG,
-    _R10_WINDOW,
-    _R11_BACKLOG,
-    _R11_RECHECK,
-    _R11_WINDOW,
-    _R12_BACKLOG,
-    _R12_RECHECK,
-    _R12_WINDOW,
-    _R12_X_REFRESH,
-    _R13_STAGE,
     CONTRACT_KEYS,
+    ROWS_ONLY_TWINS,
+    _read_evidence,
     all_specs,
+    emission_order,
 )
 
 DRIVER_WINDOW = 50
@@ -51,312 +35,21 @@ DRIVER_WINDOW = 50
 _REPO = pathlib.Path(__file__).resolve().parent.parent
 
 
-def _driver_checked_keys(before_round: int | None = None) -> set[str]:
-    """Union of keys with driver correctness evidence, all rounds so far.
+PASS = {"hash_match": True, "err": None}
+FAIL = {"hash_match": False, "err": None}
+ROWS = {"hash_match": None, "err": "no_oracle"}  # a clean rows-only run
 
-    Globs CORRECTNESS_r*.json (two-digit rounds included).  Pass
-    ``before_round`` to bound the evidence at a rotation point: the
-    "window keys are first-timers" invariants are statements about the
-    evidence AT STAGING TIME, so they must not be falsified the moment
-    the current round's own artifact lands (the r7 failure mode —
-    ADVICE r7 item 4)."""
-    keys: set[str] = set()
-    for p in _REPO.glob("CORRECTNESS_r*.json"):
-        if before_round is not None and int(p.stem.split("_r")[1]) >= before_round:
-            continue
-        keys |= set(json.loads(p.read_text()).keys())
-    return keys
+
+def _write_artifact(root: pathlib.Path, rnd: int, entries: dict[str, dict]) -> None:
+    (root / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(entries))
 
 
 def test_contract_is_60_keys():
-    assert len(_CONTRACT_PRIORITY) == 60
-    assert len(CONTRACT_KEYS) == 60  # no duplicates
+    assert len(CONTRACT_KEYS) == 60
 
 
 def test_all_contract_keys_registered():
     assert CONTRACT_KEYS <= set(all_specs())
-
-
-def test_r9_window_is_pinned_exactly():
-    # VERDICT r8 item 1: the r9 window is the plan staged at the end of
-    # r8 — the first 50 _R8_BACKLOG entries, promoted verbatim now that
-    # CORRECTNESS_r08.json landed green.  (The [:50] truncation never
-    # reaches _CONTRACT_REFRESH because _R8_BACKLOG holds 57 keys, so
-    # the r8-era pre-validation of exactly this membership still holds.)
-    assert _R9_WINDOW == _R8_BACKLOG[:DRIVER_WINDOW]
-    assert len(_R9_WINDOW) == DRIVER_WINDOW
-    assert len(set(_R9_WINDOW)) == DRIVER_WINDOW
-    # CORRECTNESS_r09.json covered exactly this window — the rotation
-    # precondition for promoting _R10_WINDOW to the emission front.
-    import json as _json
-
-    r9 = _json.loads((_REPO / "CORRECTNESS_r09.json").read_text())
-    assert set(r9) == set(_R9_WINDOW)
-
-
-def test_r9_window_keys_never_driver_checked():
-    # Every r9 slot is spent on a first-timer: no key in the window had
-    # evidence in any artifact landed BEFORE the rotation (r1-r4,
-    # r6-r8; r5 never landed).  Bounded at round 9 so the r9 artifact
-    # itself cannot falsify this staging-time statement.
-    assert not (set(_R9_WINDOW) & _driver_checked_keys(before_round=9))
-
-
-def test_r8_window_keys_never_driver_checked():
-    # Historical staging-time statement for the r8 rotation, bounded at
-    # round 8 (the r8 artifact that later covered them does not count).
-    assert not (set(_R8_WINDOW) & _driver_checked_keys(before_round=8))
-
-
-def test_r8_window_now_driver_checked():
-    # Rotation precondition: the keys that just rotated OUT did so
-    # because the r8 driver artifact landed and covered all of them.
-    assert set(_R9_WINDOW) <= _driver_checked_keys()
-    assert set(_R8_WINDOW) <= _driver_checked_keys()
-    assert set(_R7_WINDOW) <= _driver_checked_keys()
-
-
-def test_r9_backlog_keys_lead_r10_window():
-    # The r10 rotation spends its first 27 slots on the entire
-    # never-driver-checked backlog (VERDICT r9 item 1) before any
-    # contract-refresh key.
-    assert _R10_WINDOW[: len(_R9_BACKLOG)] == _R9_BACKLOG
-
-
-def test_rotation_plan_covers_all_unchecked():
-    # Every key without driver evidence is accounted for by exactly one
-    # rotation list — nothing silently dropped.  New keys added during
-    # round 12 must be appended to _R12_BACKLOG to keep this invariant.
-    # Bounded at the staging round in each statement so the round's own
-    # artifact cannot falsify it (the r7 failure mode).
-    unchecked_r12 = set(all_specs()) - _driver_checked_keys(before_round=12)
-    assert unchecked_r12 == set(_R11_BACKLOG) | set(_R12_BACKLOG)
-    assert not (set(_R12_WINDOW) & set(_R12_BACKLOG))
-    # historical staging-time statement for the r11 rotation:
-    unchecked_r11 = set(all_specs()) - _driver_checked_keys(before_round=11)
-    assert unchecked_r11 == set(_R10_BACKLOG) | set(_R11_BACKLOG) | set(_R12_BACKLOG)
-    assert not (set(_R11_WINDOW) & set(_R11_BACKLOG))
-    # historical staging-time statements for the r10/r9 rotations:
-    unchecked_r10 = set(all_specs()) - _driver_checked_keys(before_round=10)
-    assert unchecked_r10 == (
-        set(_R9_BACKLOG) | set(_R10_BACKLOG) | set(_R11_BACKLOG) | set(_R12_BACKLOG)
-    )
-    assert not (set(_R10_WINDOW) & set(_R10_BACKLOG))
-    unchecked_r9 = set(all_specs()) - _driver_checked_keys(before_round=9)
-    assert unchecked_r9 - set(_R10_BACKLOG) - set(_R11_BACKLOG) - set(
-        _R12_BACKLOG
-    ) == set(_R9_WINDOW) | set(_R9_BACKLOG)
-
-
-def test_r10_window_is_pinned_exactly():
-    # VERDICT r9 item 1: the r10 window is the plan staged at the end
-    # of round 9 — all 27 remaining first-timers, then the leading 23
-    # contract-refresh keys.  Rotation precondition for promoting
-    # _R11_WINDOW: CORRECTNESS_r10.json landed and covered exactly this
-    # window, 50/50 green.
-    assert len(_R10_WINDOW) == DRIVER_WINDOW
-    assert len(set(_R10_WINDOW)) == DRIVER_WINDOW
-    assert _R10_WINDOW == [*_R9_BACKLOG, *_CONTRACT_REFRESH][:DRIVER_WINDOW]
-    r10 = json.loads((_REPO / "CORRECTNESS_r10.json").read_text())
-    assert set(r10) == set(_R10_WINDOW)
-
-
-def test_r11_window_is_pinned_exactly():
-    # VERDICT r10 item 1 + the r10 ADVICE recomposition: the r11 window
-    # led with the 14 round-10 first-timers (the only registered keys
-    # with zero driver evidence at staging time), then the rows-only
-    # contract keys each directly ahead of their full-hash twins, then
-    # the 13 re-checks (moved AHEAD of the refresh remainder so the
-    # [:50] trim cannot drop them — the r10 ADVICE finding), then the
-    # oldest remaining contract-refresh keys (the composition's 23/21
-    # contract slots left 16 for r12).  Rotation precondition for
-    # promoting _R12_WINDOW to the emission front:
-    # CORRECTNESS_r11.json landed and covered exactly this window.
-    assert len(_R11_WINDOW) == DRIVER_WINDOW
-    assert len(set(_R11_WINDOW)) == DRIVER_WINDOW
-    assert not (set(_R11_WINDOW) & set(_R10_WINDOW))
-    r11 = json.loads((_REPO / "CORRECTNESS_r11.json").read_text())
-    assert set(r11) == set(_R11_WINDOW)
-    # first-timers lead
-    assert _R11_WINDOW[: len(_R10_BACKLOG)] == _R10_BACKLOG
-    # twin adjacency: the rows-only contract key is directly followed
-    # by the portable twin whose hash pass vouches for its values
-    for weak, twin in (
-        ("dedup_minhash", "x_dedup_minhash_portable"),
-        ("agg_approx_distinct", "x_agg_distinct_kmv"),
-    ):
-        i = _R11_WINDOW.index(weak)
-        assert _R11_WINDOW[i + 1] == twin
-    # the ENTIRE re-check tail survives the trim (the r10 ADVICE bug:
-    # the old composition silently dropped the re-checks)
-    assert set(_R11_RECHECK) <= set(_R11_WINDOW)
-    # re-check keys all carry prior driver evidence (they re-run for
-    # perf/adjacency, not coverage)
-    assert set(_R11_RECHECK) <= _driver_checked_keys(before_round=10)
-
-
-def test_r12_window_is_pinned_exactly():
-    # The r12 window leads the emission front this round: round-11
-    # first-timers (the only keys with zero driver evidence), then the
-    # 4 r12 code-change re-checks (probe/shortlist scaling — VERDICT
-    # r11 items 1/6), then the final 16 contract-refresh keys
-    # (closing the 60-key refresh: r10 took 23, r11 took 21, r12 takes
-    # the final 16), then the oldest-evidence beyond-contract refresh
-    # tranche filling to 50.
-    assert len(_R12_WINDOW) == DRIVER_WINDOW
-    assert len(set(_R12_WINDOW)) == DRIVER_WINDOW
-    assert list(all_specs())[:DRIVER_WINDOW] == _R12_WINDOW
-    # first-timers lead, re-checks ride directly behind (ahead of the
-    # trim — the r10 ADVICE lesson)
-    assert _R12_WINDOW[: len(_R11_BACKLOG)] == _R11_BACKLOG
-    assert (
-        _R12_WINDOW[len(_R11_BACKLOG) : len(_R11_BACKLOG) + len(_R12_RECHECK)]
-        == _R12_RECHECK
-    )
-    # window-disjointness vs r11 holds EXCEPT the code-change
-    # re-checks: x_dedup_embedding / x_dedup_semantic were r11-window
-    # keys whose r11 evidence proves the superseded probe policy
-    assert not ((set(_R12_WINDOW) - set(_R12_RECHECK)) & set(_R11_WINDOW))
-    # re-check keys all carry prior driver evidence (they re-run
-    # because their code changed, not for coverage)
-    assert set(_R12_RECHECK) <= _driver_checked_keys(before_round=12)
-
-
-def test_r13_stage_is_staged():
-    # Same-commit staging discipline (VERDICT r8 item 4): emission
-    # positions 51.. lead with the staged r13 tail — round-12
-    # first-timers (_R12_BACKLOG), then the 4 beyond-contract refresh
-    # keys the r12 re-check insertion displaced past the [:50] trim.
-    assert len(set(_R13_STAGE)) == len(_R13_STAGE)
-    assert not (set(_R13_STAGE) & set(_R12_WINDOW))
-    assert _R13_STAGE[: len(_R12_BACKLOG)] == _R12_BACKLOG
-    displaced = [k for k in _R12_X_REFRESH if k not in set(_R12_WINDOW)]
-    assert _R13_STAGE[len(_R12_BACKLOG) :] == displaced
-    specs = list(all_specs())
-    assert specs[DRIVER_WINDOW : DRIVER_WINDOW + len(_R13_STAGE)] == _R13_STAGE
-
-
-def test_contract_refresh_completes_by_r12():
-    # VERDICT r10 item 4: after the staged r12 window lands, every
-    # contract key's driver evidence is ≤3 rounds old.  Pin the split:
-    # the three windows' contract slots partition all 60 contract keys.
-    r10c = [k for k in _R10_WINDOW if k in CONTRACT_KEYS]
-    r11c = [k for k in _R11_WINDOW if k in CONTRACT_KEYS]
-    r12c = [k for k in _R12_WINDOW if k in CONTRACT_KEYS]
-    assert len(r10c) + len(r11c) + len(r12c) == 60
-    assert set(r10c) | set(r11c) | set(r12c) == CONTRACT_KEYS
-
-
-def test_contract_refresh_order_matches_artifacts():
-    # _CONTRACT_REFRESH is all 60 contract keys, ordered
-    # oldest-driver-evidence-first (ties broken by _CONTRACT_PRIORITY
-    # position), EXCEPT the two rows-only-by-design keys which sort
-    # last regardless of evidence age (VERDICT r8 item 7: window slots
-    # go to hash-checkable keys first; dedup_minhash and
-    # agg_approx_distinct get only the weaker rows check, and their
-    # value evidence lives in full-hash portable twins).  Re-derived
-    # here from the artifacts the list was staged against (rounds <= 7,
-    # frozen so a future artifact that re-checks contract keys cannot
-    # falsify this pin at landing time; the list itself is re-derived
-    # at the next refresh rotation).
-    assert sorted(_CONTRACT_REFRESH) == sorted(_CONTRACT_PRIORITY)
-    rows_only = {"dedup_minhash", "agg_approx_distinct"}
-    specs = all_specs()
-    assert all(specs[k].oracle is None for k in rows_only)
-    latest: dict[str, int] = {}
-    for p in sorted(_REPO.glob("CORRECTNESS_r*.json")):
-        rnd = int(p.stem.split("_r")[1])
-        if rnd > 7:
-            continue
-        for k in json.loads(p.read_text()):
-            latest[k] = max(latest.get(k, 0), rnd)
-    expected = sorted(
-        _CONTRACT_PRIORITY,
-        key=lambda k: (
-            k in rows_only,
-            latest.get(k, 0),
-            _CONTRACT_PRIORITY.index(k),
-        ),
-    )
-    assert _CONTRACT_REFRESH == expected
-
-
-def test_r9_window_oracles():
-    # VERDICT r8 item 7: every r9 slot carries a full-hash oracle — no
-    # rows-only keys in window fronts until the first-timer backlog
-    # drains.  (The r10 window inherits this via the contract-refresh
-    # reorder, pinned above.)
-    specs = all_specs()
-    assert [k for k in _R9_WINDOW if specs[k].oracle is None] == []
-    assert [k for k in _R10_WINDOW if specs[k].oracle is None] == []
-
-
-def test_r11_window_oracles():
-    # The r11 window DELIBERATELY contains the rows-only-by-design keys
-    # (VERDICT r9 item 6: emit them adjacent to their hash-checked
-    # twins so the artifact shows run-clean rows-only entries beside
-    # twin hash passes).  Pin the exact rows-only membership so an
-    # accidental oracle regression on any other key is caught.
-    specs = all_specs()
-    missing = [k for k in _R11_WINDOW if specs[k].oracle is None]
-    assert missing == [
-        k
-        for k in _R11_WINDOW
-        if k
-        in {
-            "dedup_minhash",
-            "agg_approx_distinct",
-            "x_dedup_simhash",
-            "x_agg_sketch_cms",
-            "x_agg_sketch_hll",
-            "x_sim_ann_lsh",
-        }
-    ]
-
-
-def test_r6_window_plus_r7_backlog_cover_r6_backlog():
-    # Historical invariant: the r6 window + r7 backlog cover the r5
-    # rotation's deferred set (_R6_BACKLOG) exactly once each — the
-    # committed plan was followed.  (_R7_BACKLOG may additionally hold
-    # keys first registered during rounds 6-7; those are outside
-    # _R6_BACKLOG by construction.)
-    assert set(_R6_BACKLOG) <= set(_R6_WINDOW) | set(_R7_BACKLOG)
-    assert not (set(_R6_WINDOW) & set(_R7_BACKLOG))
-    assert len(set(_R6_WINDOW) & set(_R6_BACKLOG)) + len(
-        set(_R7_BACKLOG) & set(_R6_BACKLOG)
-    ) == len(_R6_BACKLOG)
-
-
-def test_r8_window_oracles():
-    # Every r8 slot carries a full-hash oracle except the three
-    # rows-only-by-design sketch keys (seed-dependent bucket/sketch
-    # membership — each has a full-hash portable twin already
-    # driver-checked: x_agg_distinct_kmv r7, x_dedup_simhash_portable
-    # r6, x_agg_sketch_cms_portable r7).
-    specs = all_specs()
-    missing = [k for k in _R8_WINDOW if specs[k].oracle is None]
-    assert missing == ["x_agg_sketch_hll", "x_dedup_simhash", "x_agg_sketch_cms"]
-
-
-def test_r7_window_oracles():
-    # Every r7 slot carries a full-hash oracle except x_sim_ann_lsh —
-    # rows-only by design (SURVEY §2: LSH bucket membership is
-    # seed-dependent), kept in the window because VERDICT r6 item 2
-    # orders the _R5_WINDOW promoted verbatim.
-    specs = all_specs()
-    missing = [k for k in _R7_WINDOW if specs[k].oracle is None]
-    assert missing == ["x_sim_ann_lsh"]
-
-
-def test_out_of_window_contract_keys_are_fresh():
-    # 16 contract keys enter the r12 window for refresh (the last
-    # tranche); the 44 outside it each carry r10/r11 driver evidence —
-    # that's why they can wait.
-    specs = list(all_specs())
-    out = [k for k in specs[DRIVER_WINDOW:] if k in CONTRACT_KEYS]
-    assert len(out) == 60 - len([k for k in _R12_WINDOW if k in CONTRACT_KEYS])
-    checked = _driver_checked_keys()
-    assert all(k in checked for k in out)
 
 
 def test_extras_sort_after_contract_even_if_driver_resorts():
@@ -367,47 +60,104 @@ def test_extras_sort_after_contract_even_if_driver_resorts():
     assert not any(k.startswith("x_") for k in keys[:60])
 
 
-def test_every_registered_key_analyzes(spark):
+def test_window_is_oldest_evidence_first():
+    # Re-derive the order from the real artifacts without the registry's
+    # helpers: newest artifact holding the key decides, a failed entry
+    # counts as no evidence, and a rows-only key rides on its twin's
+    # sort position, just ahead of it.
+    newest: dict[str, tuple[int, dict]] = {}
+    for p in _REPO.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", p.name)
+        if not m:
+            continue
+        for k, entry in json.loads(p.read_text()).items():
+            if int(m.group(1)) > newest.get(k, (0, {}))[0]:
+                newest[k] = (int(m.group(1)), entry)
+    specs = all_specs()
+
+    def evidence(k):
+        rnd, entry = newest.get(k, (0, {}))
+        ok = entry.get("hash_match") is True or (
+            specs[k].oracle is None and entry.get("err") == "no_oracle"
+        )
+        return rnd if ok else 0
+
+    def sort_key(k):
+        twin = ROWS_ONLY_TWINS.get(k)
+        if twin is None:
+            return (evidence(k), k, 1, "")
+        return (evidence(twin), twin, 0, k)
+
+    assert list(specs) == sorted(specs, key=sort_key)
+
+
+def test_rows_only_keys_precede_their_twins():
+    specs = all_specs()
+    order = list(specs)
+    rows_only = {k for k, s in specs.items() if s.oracle is None}
+    assert rows_only == set(ROWS_ONLY_TWINS)
+    for key in rows_only:
+        twin = ROWS_ONLY_TWINS[key]
+        assert specs[twin].oracle is not None, twin
+        assert order.index(key) < order.index(twin), key
+        # only other rows-only keys of the same twin may sit in between
+        between = order[order.index(key) + 1 : order.index(twin)]
+        assert all(ROWS_ONLY_TWINS.get(k) == twin for k in between), between
+
+
+def test_synthetic_evidence_orders_failing_and_unchecked_first(tmp_path):
+    plain = ["a_fresh", "b_old", "c_failed", "d_never", "e_refailed", "f_rows"]
+    assert emission_order(plain, _read_evidence(tmp_path)) == plain  # name order
+    _write_artifact(tmp_path, 1, {
+        "b_old": PASS, "c_failed": FAIL, "e_refailed": PASS,
+        "f_rows": ROWS,  # has an oracle, so a rows-only run is no evidence
+        "x_agg_sketch_hll": ROWS, "gone": PASS,
+    })
+    _write_artifact(tmp_path, 2, {
+        "a_fresh": PASS, "e_refailed": FAIL, "x_agg_distinct_kmv": PASS,
+    })
+    (tmp_path / "CORRECTNESS_r03_c8.json").write_text(json.dumps({"d_never": PASS}))
+    evidence = _read_evidence(tmp_path)
+    assert evidence == {
+        "b_old": 1, "c_failed": 0, "e_refailed": 0, "f_rows": 0,
+        "x_agg_sketch_hll": 1, "gone": 1, "a_fresh": 2, "x_agg_distinct_kmv": 2,
+    }
+    keys = [*plain, "x_agg_distinct_kmv", "x_agg_sketch_hll"]
+    assert emission_order(keys, evidence) == [
+        "c_failed", "d_never", "e_refailed", "f_rows",  # round 0, by name
+        "b_old",
+        "a_fresh", "x_agg_sketch_hll", "x_agg_distinct_kmv",  # rides on its twin
+    ]
+
+
+def test_next_artifact_rotates_the_window(tmp_path):
+    # Passing the current window in one more artifact moves all 50 keys
+    # behind every other key: no code edit rotates the window.
+    for p in _REPO.glob("CORRECTNESS_r*.json"):
+        shutil.copy(p, tmp_path)
+    specs = all_specs()
+    window = list(specs)[:DRIVER_WINDOW]
+    assert emission_order(specs, _read_evidence(tmp_path)) == list(specs)
+    nxt = 1 + max(_read_evidence(tmp_path).values())
+    _write_artifact(
+        tmp_path, nxt, {k: ROWS if specs[k].oracle is None else PASS for k in window}
+    )
+    rotated = emission_order(specs, _read_evidence(tmp_path))
+    assert sorted(rotated) == sorted(specs)
+    assert not set(rotated[:DRIVER_WINDOW]) & set(window)
+
+
+def test_every_registered_key_analyzes(registry_plans):
     """Plan-analysis smoke gate: force Catalyst analysis (schema
     resolution) of every registered key at sf0.001.  Catches any
     plan-time AnalysisException — like r3's `x_cell_versions`
     unix_micros-on-NTZ crash — in seconds, without executing a single
     job.  Schemas must also be non-empty: a query that resolves to zero
     columns is a registration bug."""
-    import tests.conftest as c
-
     failures = []
-    for key, spec in all_specs().items():
-        try:
-            schema = spec.fn(spark, c.SF_DIR).schema
-            if len(schema.fields) == 0:
-                failures.append(f"{key}: empty schema")
-        except Exception as e:  # noqa: BLE001 — collect all, report together
-            failures.append(f"{key}: {type(e).__name__}: {e}")
+    for key, p in registry_plans.items():
+        if p.width is None:
+            failures.append(f"{key}: {type(p.error).__name__}: {p.error}")
+        elif p.width == 0:
+            failures.append(f"{key}: empty schema")
     assert not failures, "plan-analysis failures:\n" + "\n".join(failures)
-
-
-def test_r12_x_refresh_matches_artifacts():
-    # The r12 beyond-contract refresh tranche is the oldest-driver-
-    # evidence x_ keys not already staged in the r11 window, ordered
-    # (latest evidence round, name), filling _R12_WINDOW to the 50-key
-    # cap.  Re-derived here from the CORRECTNESS artifacts (bounded at
-    # round 11, staging time) so the hard-coded pin cannot drift.
-    from hbasemapreduce_spark.registry import _R11_BACKLOG as r11b
-    from hbasemapreduce_spark.registry import _R12_X_REFRESH
-
-    latest: dict[str, int] = {}
-    for p in _REPO.glob("CORRECTNESS_r*.json"):
-        rnd = int(p.stem.split("_r")[1])
-        if rnd >= 11:
-            continue
-        for k in json.loads(p.read_text()):
-            latest[k] = max(latest.get(k, 0), rnd)
-    staged = set(_R11_WINDOW)
-    candidates = sorted(
-        (k for k in all_specs() if k.startswith("x_") and k in latest and k not in staged),
-        key=lambda k: (latest[k], k),
-    )
-    n_fill = DRIVER_WINDOW - len(r11b) - 16  # 16 deferred contract keys
-    assert _R12_X_REFRESH == candidates[:n_fill]
-    assert len(_R12_WINDOW) == DRIVER_WINDOW
