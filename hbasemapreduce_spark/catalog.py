@@ -70,33 +70,45 @@ def configure(spark: SparkSession) -> SparkSession:
     return spark
 
 
-# Schema cache: (abspath, mtime_ns, size) -> StructType.  Parquet schema
-# INFERENCE reads file footers on every spark.read.parquet call (measured
+# Schema cache: one (abspath, mtime_ns, size) triple per path read ->
+# StructType.  Parquet schema INFERENCE reads file footers on every
+# spark.read.parquet call, in a Spark job of its own (measured
 # ~100-150 ms per call on this box vs ~20 ms with an explicit schema);
 # a bench pass over the full registry pays it several hundred times for
-# ten distinct tables.  This is METADATA caching — the manifest/metastore
-# discipline every catalog-backed table format applies at scale (the
-# optimization guide's argument for Iceberg/Delta manifests, §6) — not
-# result caching: every query still computes from the parquet bytes.
-# The key carries the source's mtime+size (the staging.py version
-# discipline), so a regenerated table re-infers and can never be served
-# a stale schema.
-_SCHEMA_CACHE: dict[tuple[str, int, int], StructType] = {}
+# ten distinct tables and a handful of staged layouts.  This is
+# METADATA caching — the manifest/metastore discipline every
+# catalog-backed table format applies at scale (the optimization
+# guide's argument for Iceberg/Delta manifests, §6) — not result
+# caching: every query still computes from the parquet bytes.  The key
+# carries every path's version (the staging.py version discipline), so
+# a regenerated table or a rewritten file re-infers and can never be
+# served a stale schema; the absolute path keeps a moved checkout's
+# staged files apart from the original's; and a multi-path read is keyed
+# on the whole list, never on its first file.  A directory's stat
+# changes whenever an entry directly in it is added, removed or renamed,
+# which every Spark overwrite does (its commit goes through
+# ``_temporary`` and ``_SUCCESS``).  Callers that read back a directory
+# they have just rewritten pass the writer's own schema instead, so no
+# entry accumulates per call.
+_SCHEMA_CACHE: dict[tuple[tuple[str, int, int], ...], StructType] = {}
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """spark.read.parquet with footer inference memoized per file version."""
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
+    """spark.read.parquet with footer inference memoized per version of
+    every path (files or directories)."""
     try:
-        st = os.stat(path)
-        key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+        stats = [os.stat(p) for p in paths]
     except OSError:
-        return spark.read.parquet(path)  # let Spark raise its own error
+        return spark.read.parquet(*paths)  # let Spark raise its own error
+    key = tuple(
+        (os.path.abspath(p), st.st_mtime_ns, st.st_size) for p, st in zip(paths, stats)
+    )
     schema = _SCHEMA_CACHE.get(key)
     if schema is None:
-        df = spark.read.parquet(path)
+        df = spark.read.parquet(*paths)
         _SCHEMA_CACHE[key] = df.schema
         return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(schema).parquet(*paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -113,7 +125,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cast is value-preserving.
     """
     configure(spark)
-    df = _read_parquet(spark, f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     ts_type = dict(df.dtypes).get("ts")
     if name == "events" and ts_type == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))

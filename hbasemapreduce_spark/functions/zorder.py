@@ -18,8 +18,10 @@ integer arithmetic:
 min/max come from a 1-row broadcast aggregate (no collect), and the
 division is INTEGER division on both engines (Spark ``DIV``, DuckDB
 ``//``) — float floor(a/b) can round up across an integer boundary and
-is not used.  The interleave itself is generated from one bit loop for
-both engines, so they agree by construction.
+is not used.  The interleave itself is ONE SQL string
+(:func:`z_value_sql`) that both engines parse — Spark through a single
+``F.expr`` instead of ~200 chained py4j Column calls — so they agree by
+construction.
 """
 
 from __future__ import annotations
@@ -44,20 +46,16 @@ def normalize_sql(col: str, mn: str, mx: str) -> str:
     return f"CAST((({col} - {mn}) * {ZMAX}) // GREATEST({mx} - {mn}, 1) AS BIGINT)"
 
 
-def z_value(a: Column, b: Column) -> Column:
-    """Interleave the low ZBITS bits of two normalized integer columns:
-    bit i of `a` lands at z-bit 2i, bit i of `b` at 2i+1."""
-    a = a.cast("long")
-    b = b.cast("long")
-    z = F.lit(0).cast("long")
-    for i in range(ZBITS):
-        z = z.bitwiseOR(F.shiftleft(F.shiftright(a, i).bitwiseAND(F.lit(1)), 2 * i))
-        z = z.bitwiseOR(F.shiftleft(F.shiftright(b, i).bitwiseAND(F.lit(1)), 2 * i + 1))
-    return z
+def z_value(a: str, b: str) -> Column:
+    """Interleave the low ZBITS bits of two normalized integer columns,
+    named by `a` and `b`: bit i of `a` lands at z-bit 2i, bit i of `b`
+    at 2i+1.  Spark parses the same SQL string DuckDB runs."""
+    return F.expr(z_value_sql(a, b))
 
 
 def z_value_sql(a: str, b: str) -> str:
-    """DuckDB twin of :func:`z_value` — same loop, same bit layout."""
+    """The interleave as one SQL expression, valid in both Spark and
+    DuckDB."""
     terms = []
     for i in range(ZBITS):
         terms.append(f"(((CAST({a} AS BIGINT) >> {i}) & 1) << {2 * i})")

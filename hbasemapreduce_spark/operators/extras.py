@@ -814,7 +814,7 @@ def layout_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.crossJoin(F.broadcast(bounds))
         .withColumn("an", normalize("l_orderkey", "ok_mn", "ok_mx"))
         .withColumn("bn", normalize("l_partkey", "pk_mn", "pk_mx"))
-        .withColumn("zv", z_value(F.col("an"), F.col("bn")))
+        .withColumn("zv", z_value("an", "bn"))
     )
     return (
         zed.groupBy(F.shiftright("zv", 24).alias("z_bucket"))

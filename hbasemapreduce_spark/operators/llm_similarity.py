@@ -1515,41 +1515,54 @@ def sim_sparse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc joins nothing, so its posting never enters the shuffle (norms
     still include it).  Per-term join work is then bounded by the df
     cap squared; real systems add per-posting weight truncation on the
-    same plan.  Everything else is hash aggregates and a per-src
-    WindowGroupLimit top-k."""
+    same plan.  Every intermediate is derived ONCE: ``tf`` is one
+    aggregate, ``df`` a count over a term window on it (no second
+    aggregate joined back), and each doc's norm a sum over a doc window
+    on the kept postings, taken before the singleton cut and carried on
+    every posting, so the pair aggregate groups by both norms instead
+    of joining a norm table back twice.  Each unordered pair is scored
+    once (IEEE multiplication commutes, so both directions carry the
+    same sim) and one two-element ``inline`` emits both directions.
+    The rest is the posting self-join, one hash aggregate and a
+    per-src WindowGroupLimit top-k."""
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    dfq = tf.groupBy("term").agg(F.count("*").alias("df"))
     st = docs.agg(F.count("*").alias("n"))
     kept = (
-        tf.join(dfq, "term")
+        tf.select("*", F.count("*").over(Window.partitionBy("term")).alias("df"))
         .crossJoin(F.broadcast(st))
         .filter(F.col("df") <= F.expr("n DIV 10"))
-        .select("doc_id", "term", F.expr("tf * (1000000 DIV df)").alias("w"), "df")
+        .select("doc_id", "term", "df", F.expr("tf * (1000000 DIV df)").alias("w"))
     )
-    nrm = kept.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("w") * F.col("w")).cast("double")).alias("nrm")
+    ww = F.sum(F.col("w") * F.col("w")).over(Window.partitionBy("doc_id"))
+    p = (
+        kept.select("*", F.sqrt(ww.cast("double")).alias("nrm"))
+        .filter(F.col("df") >= 2)
+        .select("doc_id", "term", "w", "nrm")
     )
-    p = kept.filter(F.col("df") >= 2).select("doc_id", "term", "w")
     a, b = p.alias("a"), p.alias("b")
-    dots = (
+    sims = (
         a.join(b, (F.col("a.term") == F.col("b.term")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("src"), F.col("b.doc_id").alias("dst"))
+        .groupBy(
+            F.col("a.doc_id").alias("src"),
+            F.col("b.doc_id").alias("dst"),
+            F.col("a.nrm").alias("nrm_a"),
+            F.col("b.nrm").alias("nrm_b"),
+        )
         .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-    )
-    sym = dots.unionByName(
-        dots.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "dot")
-    )
-    na = nrm.selectExpr("doc_id AS src", "nrm AS nrm_a")
-    nb = nrm.selectExpr("doc_id AS dst", "nrm AS nrm_b")
-    scored = (
-        sym.join(na, "src")
-        .join(nb, "dst")
         .select(
             "src",
             "dst",
             F.round(F.col("dot").cast("double") / (F.col("nrm_a") * F.col("nrm_b")), 6).alias("sim"),
+        )
+    )
+    scored = sims.select(
+        F.inline(
+            F.array(
+                F.struct("src", "dst", "sim"),
+                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), "sim"),
+            )
         )
     )
     w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))

@@ -18,7 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.sqlbuild import sql_over
 from ..functions.text import tokens
 from ..registry import query
@@ -1945,7 +1945,7 @@ def source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     directory holds every live and dead commit, and globbing it is both
     wrong (isolation) and slow (object-store LIST)."""
     snaps = _stage_versioned_orders(spark, sf_dir)
-    s1 = spark.read.parquet(*snaps["s1"])
+    s1 = read_parquet(spark, *snaps["s1"])
     return s1.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("cnt"),
         F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
@@ -1993,7 +1993,7 @@ def source_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     snaps = _stage_versioned_orders(spark, sf_dir)
     s1 = set(snaps["s1"])
     delta_files = [f for f in snaps["s2"] if f not in s1]
-    delta = spark.read.parquet(*delta_files)
+    delta = read_parquet(spark, *delta_files)
     return delta.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("cnt"),
         F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long"))
@@ -2044,7 +2044,7 @@ def etl_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orphans = [f for f in all_files if f not in live]
     return (
-        spark.read.parquet(*orphans)
+        read_parquet(spark, *orphans)
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").cast("long").alias("cnt"),
@@ -2149,14 +2149,14 @@ def source_positional_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Position-to-key recovery is differentially tested
     (tests/test_properties.py) against the staged layout."""
     staged = _stage_posdelete_table(spark, sf_dir)
-    data = spark.read.parquet(os.path.join(staged["root"], "data")).select(
+    data = read_parquet(spark, os.path.join(staged["root"], "data")).select(
         "o_orderkey",
         "o_orderstatus",
         "o_totalprice",
         "bucket",
         F.col("_metadata.row_index").alias("pos"),
     )
-    dels = spark.read.parquet(os.path.join(staged["root"], "deletes"))
+    dels = read_parquet(spark, os.path.join(staged["root"], "deletes"))
     live = data.join(F.broadcast(dels), ["bucket", "pos"], "left_anti")
     return live.groupBy("o_orderstatus").agg(
         F.count("*").cast("long").alias("cnt"),

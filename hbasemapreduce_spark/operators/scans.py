@@ -21,8 +21,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..catalog import load_table
+from ..catalog import load_table, read_parquet
 from ..functions.staging import fingerprinted_dir, prune_superseded, source_ident
 from ..registry import query
 from .common import LINEITEM_SQL, lineitem_select
@@ -105,9 +106,10 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"sink_partitioned_{os.path.basename(sf_dir.rstrip('/'))}_"
         f"{source_ident(os.path.join(sf_dir, 'orders.parquet'))}",
     )
-    _write_partitioned_orders(orders, out)
+    schema = _write_partitioned_orders(orders, out)
     return (
-        spark.read.parquet(out)
+        spark.read.schema(schema)
+        .parquet(out)
         .groupBy(F.col("o_year").cast("long").alias("o_year"))
         .agg(F.count("*").alias("cnt"))
     )
@@ -146,7 +148,7 @@ def etl_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     compact_partitioned(spark, src_dir, out, "o_year")
     prune_superseded(_SCRATCH, tag, src)
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .groupBy(F.col("o_year").cast("long").alias("o_year"))
         .agg(
             F.count("*").alias("cnt"),
@@ -171,14 +173,14 @@ def scan_partition_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     analog of HBase region pruning."""
     out = _staged_partitioned_orders(spark, sf_dir)
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("o_year") == 1997)
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("cnt"))
     )
 
 
-def _write_partitioned_orders(orders: DataFrame, out: str) -> None:
+def _write_partitioned_orders(orders: DataFrame, out: str) -> StructType:
     """The one salted Hive-partitioned write both the sink operator and
     the staging helper use — repartition on (partition column, bounded
     salt) first: without it every write task emits a file into every
@@ -186,14 +188,14 @@ def _write_partitioned_orders(orders: DataFrame, out: str) -> None:
     failure); keying on the year ALONE would funnel each year through
     one task (a multi-TB single file at the 100 TB target).  The salt
     bounds both: <= _SINK_SALT files per year, each task one year
-    slice."""
-    (
-        orders.withColumn("o_year", F.year("o_orderdate"))
-        .repartition(F.col("o_year"), F.pmod(F.hash("o_orderkey"), F.lit(_SINK_SALT)))
-        .write.mode("overwrite")
-        .partitionBy("o_year")
-        .parquet(out)
+    slice.  Returns the written schema, which is also the read-back
+    schema (the partition column is last in both), so a caller reading
+    the fresh directory skips footer inference."""
+    df = orders.withColumn("o_year", F.year("o_orderdate")).repartition(
+        F.col("o_year"), F.pmod(F.hash("o_orderkey"), F.lit(_SINK_SALT))
     )
+    df.write.mode("overwrite").partitionBy("o_year").parquet(out)
+    return df.schema
 
 
 def compact_partitioned(spark: SparkSession, src_dir: str, out: str, partition_col: str) -> str:
@@ -255,7 +257,7 @@ def join_dpp(spark: SparkSession, sf_dir: str) -> DataFrame:
     derived through an aggregate threshold — 'years with >= 15% of
     orders' — does not qualify and silently falls back to a full scan,
     measured while building this.)"""
-    fact = spark.read.parquet(_staged_partitioned_orders(spark, sf_dir))
+    fact = read_parquet(spark, _staged_partitioned_orders(spark, sf_dir))
     dim = (
         load_table(spark, sf_dir, "orders")
         .filter((F.col("o_orderpriority") == "1-URGENT") & (F.col("o_totalprice") > 450000))
@@ -324,7 +326,7 @@ def bulkload_query(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SCRATCH, f"bulkload_{os.path.basename(sf_dir.rstrip('/'))}"
     )
     bulkload_ranged(orders, out, "o_orderkey", 8)
-    back = spark.read.parquet(out)
+    back = spark.read.schema(orders.schema).parquet(out)
     return back.groupBy("o_orderpriority").agg(
         F.count("*").alias("cnt"),
         F.min("o_orderkey").alias("min_key"),
@@ -427,10 +429,11 @@ def etl_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"backfill_{os.path.basename(sf_dir.rstrip('/'))}_"
         f"{source_ident(os.path.join(sf_dir, 'orders.parquet'))}",
     )
-    _write_partitioned_orders(orders, out)
+    schema = _write_partitioned_orders(orders, out)
     backfill_earliest_year(spark, orders, out)
     return (
-        spark.read.parquet(out)
+        spark.read.schema(schema)
+        .parquet(out)
         .groupBy(F.col("o_year").cast("long").alias("o_year"))
         .agg(
             F.count("*").alias("cnt"),
@@ -847,7 +850,7 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     marker = os.path.join(out, "_evolved")
     if not os.path.exists(marker):
         (
-            spark.read.parquet(src_dir)
+            read_parquet(spark, src_dir)
             .withColumn("o_month", F.month("o_orderdate"))
             .repartition(
                 F.col("o_year"),
@@ -861,7 +864,7 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         open(marker, "w").close()
     prune_superseded(_SCRATCH, tag, src)
     return (
-        spark.read.parquet(out)
+        read_parquet(spark, out)
         .filter(F.col("o_year") == 1997)
         .groupBy(
             F.col("o_year").cast("long").alias("o_year"),

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..catalog import configure, load_table
+from ..catalog import configure, load_table, read_parquet
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -62,7 +62,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             if os.path.exists(tmp):
                 os.remove(tmp)
     prune_superseded(scratch, tag, src)
-    raw_schema = spark.read.parquet(staged).schema
+    raw_schema = read_parquet(spark, staged).schema
     df = spark.readStream.schema(raw_schema).format("parquet").load(stage)
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
@@ -916,7 +916,7 @@ def upsert_sink_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             stage
         )
         open(marker, "w").close()
-    raw_schema = spark.read.parquet(stage).schema
+    raw_schema = read_parquet(spark, stage).schema
     ev = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -1008,7 +1008,7 @@ def hdr_sketch_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             stage
         )
         open(marker, "w").close()
-    raw_schema = spark.read.parquet(stage).schema
+    raw_schema = read_parquet(spark, stage).schema
     orders = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)
@@ -1100,7 +1100,7 @@ def decay_counter_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             stage
         )
         open(marker, "w").close()
-    raw_schema = spark.read.parquet(stage).schema
+    raw_schema = read_parquet(spark, stage).schema
     events = (
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", 1)

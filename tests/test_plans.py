@@ -396,7 +396,7 @@ def test_zorder_layout_tightens_both_key_spans(spark, tmp_path):
         li.crossJoin(F.broadcast(bounds))
         .withColumn("an", normalize("l_orderkey", "ok_mn", "ok_mx"))
         .withColumn("bn", normalize("l_partkey", "pk_mn", "pk_mx"))
-        .withColumn("zv", z_value(F.col("an"), F.col("bn")))
+        .withColumn("zv", z_value("an", "bn"))
         .select("l_orderkey", "l_partkey", "zv")
     )
     out = str(tmp_path / "zorder")
@@ -476,7 +476,7 @@ def test_hilbert_layout_at_least_as_tight_as_zorder(spark, tmp_path):
         return sum(fracs) / len(fracs)
 
     z = mean_frac(
-        base.withColumn("zv", z_value(F.col("an"), F.col("bn"))).select(
+        base.withColumn("zv", z_value("an", "bn")).select(
             "l_orderkey", "l_partkey", "zv"
         ),
         "zv",
@@ -839,6 +839,21 @@ def test_ivf_pair_blocking_is_equi_join_no_label(spark):
     )
 
 
+def _count_jobs(spark, group: str, action) -> int:
+    """Spark jobs started by ``action()`` under its own job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _build_and_write(spark, key: str) -> None:
+    all_specs()[key].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+
+
 def test_dedup_clusters_job_budget(spark):
     # Connected components pays one job round-trip per materialization
     # barrier, so the barrier count is the cost to hold.  Build plus the
@@ -846,13 +861,34 @@ def test_dedup_clusters_job_budget(spark):
     # per eager checkpoint, convergence observed on the checkpoint job);
     # the slack of one covers AQE re-planning, which can add or drop a
     # job depending on the completion order of concurrent query stages.
-    sc = spark.sparkContext
     group = "test_dedup_clusters_job_budget"
-    sc.setJobGroup(group, group)
-    try:
-        df = all_specs()["x_dedup_clusters"].fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    n_jobs = _count_jobs(spark, group, lambda: _build_and_write(spark, "x_dedup_clusters"))
     assert n_jobs <= 12, f"x_dedup_clusters ran {n_jobs} jobs (budget 12)"
+
+
+def test_sparse_topk_job_budget(spark):
+    # x_sim_sparse_topk derives each TF-IDF intermediate once: df and the
+    # doc norms are windows carried on the postings rather than
+    # aggregates joined back, and one inline emits both directions of a
+    # scored pair.  Build plus the final write at sf0.001 run 8 jobs (12
+    # when the kept postings were re-derived for each of their four uses
+    # and the pair aggregate was planned twice); slack of one as above.
+    # The documents footer is read first, so a cold schema cache does
+    # not count against the operator.
+    from hbasemapreduce_spark.catalog import load_table
+
+    load_table(spark, SF_DIR, "documents")
+    group = "test_sparse_topk_job_budget"
+    n_jobs = _count_jobs(spark, group, lambda: _build_and_write(spark, "x_sim_sparse_topk"))
+    assert n_jobs <= 9, f"x_sim_sparse_topk ran {n_jobs} jobs (budget 9)"
+
+
+@pytest.mark.parametrize("key", ["x_source_snapshot", "x_etl_vacuum"])
+def test_staged_snapshot_rebuild_runs_no_jobs(spark, key):
+    # The staged commit files never change once staged, so their footer
+    # schema is inferred once per file version (catalog.read_parquet): a
+    # second build plans the scan without running any Spark job.
+    fn = all_specs()[key].fn
+    fn(spark, SF_DIR)
+    n_jobs = _count_jobs(spark, f"test_staged_rebuild_{key}", lambda: fn(spark, SF_DIR))
+    assert n_jobs == 0, f"second build of {key} ran {n_jobs} jobs"

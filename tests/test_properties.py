@@ -722,7 +722,7 @@ def test_zvalue_interleave_roundtrip(spark):
     df = spark.range(0, 2000).select(
         (F.col("id") * 7919 % 65536).alias("a"), (F.col("id") * 104729 % 65536).alias("b")
     )
-    z = df.withColumn("zv", z_value(F.col("a"), F.col("b")))
+    z = df.withColumn("zv", z_value("a", "b"))
     back_a = F.lit(0).cast("long")
     back_b = F.lit(0).cast("long")
     for i in range(ZBITS):
@@ -1202,6 +1202,47 @@ def test_sparse_topk_rank_and_sim_bounds(spark):
         assert [rk for rk, _ in lst] == list(range(1, len(lst) + 1))
         sims = [s for _, s in lst]
         assert sims == sorted(sims, reverse=True)
+
+
+def test_sparse_topk_matches_oracle_on_edge_corpus(spark, tmp_path):
+    """x_sim_sparse_topk against its DuckDB oracle on a corpus built to
+    hit every cut: NULL and empty text, a double space (an empty token),
+    a term in every doc (above the max-df cut), a doc whose terms all
+    have df = 1 (a norm but no postings), a doc_id on two rows (their
+    terms pool into one vector) and a NULL doc_id (counts toward df,
+    never scored)."""
+    import random
+
+    import duckdb
+
+    from hbasemapreduce_spark.operators.llm_similarity import sim_sparse_topk
+
+    rng = random.Random(7)
+    vocab = [f"w{i}" for i in range(60)]
+    rows = [
+        (d, " ".join(["common", *rng.choices(vocab, k=rng.randint(1, 5))]))
+        for d in range(36)
+    ]
+    rows += [
+        (36, None),
+        (37, ""),
+        (38, ""),
+        (39, "only1 only2"),
+        (5, "w1 w1 extra5"),
+        (40, "w2  w3 common"),
+        (None, "w2 w3"),
+    ]
+    path = str(tmp_path / "documents.parquet")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(1).write.parquet(path)
+    got = sim_sparse_topk(spark, str(tmp_path))
+    assert got.count() > 0
+    assert got.filter(F.col("doc_id").isin(36, 39)).count() == 0
+
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    want = con.execute(SPECS["x_sim_sparse_topk"].oracle).df()
+    con.close()
+    assert_frames_match(got.toPandas(), want, "x_sim_sparse_topk")
 
 
 def test_mad_outlier_summary_bounds(spark):

@@ -5,7 +5,8 @@ effects — a concurrent reader of the old version must never lose its
 input just because another session computed the new path), and
 ``prune_superseded`` must remove only AGED superseded versions of the
 same (tag, identity), never the current version, never another tag or
-source.
+source.  ``catalog.read_parquet``'s schema cache must never serve a
+schema for a file version or a path list it was not inferred from.
 """
 
 from __future__ import annotations
@@ -13,6 +14,8 @@ from __future__ import annotations
 import os
 import time
 
+from hbasemapreduce_spark import catalog
+from hbasemapreduce_spark.catalog import read_parquet
 from hbasemapreduce_spark.functions.staging import (
     fingerprinted_dir,
     prune_superseded,
@@ -86,3 +89,29 @@ def test_version_change_renames_dir(tmp_path):
     src.write_bytes(b"v2-longer")  # new mtime+size -> new version
     d2 = fingerprinted_dir(str(scratch), "tag", str(src))
     assert d1 != d2
+
+
+def test_read_parquet_rereads_a_rewritten_file(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert read_parquet(spark, path).columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = read_parquet(spark, path)
+    assert df.columns == ["b", "c"]
+    assert [tuple(r) for r in df.collect()] == [("x", 1.5)]
+
+
+def test_read_parquet_keys_the_whole_path_list(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    first, second = str(tmp_path / "p1.parquet"), str(tmp_path / "p2.parquet")
+    pq.write_table(pa.table({"a": [1, 2]}), first)
+    pq.write_table(pa.table({"a": [3]}), second)
+    before = set(catalog._SCHEMA_CACHE)
+    assert read_parquet(spark, first).count() == 2
+    assert read_parquet(spark, first, second).count() == 3
+    assert len(set(catalog._SCHEMA_CACHE) - before) == 2
