@@ -7,36 +7,44 @@ only a ~2 KB TAIL of stdout, and r1/r2's single compact line with ~100
 per-query timings exceeded it (head — including the headline "value" —
 was cut off, "parsed": null both rounds).  So:
 
-- per-query timings go to an EARLIER stdout line (prefix "DETAIL ") and
-  to BENCH_DETAIL.json next to this script;
-- the FINAL stdout line is a tiny (<400 B) summary that always fits the
-  tail: {"metric","value","unit","sf","queries":{top-5 slowest},
-  "n_queries","startup_sec"}.
+- per-query timings and executor CPU-seconds go to an EARLIER stdout
+  line (prefix "DETAIL ") and to BENCH_DETAIL.json next to this script;
+- the FINAL stdout line is a small (<1 KB) summary that always fits the
+  tail (`summary_line`).
 
 Timing rules (SURVEY.md §5.5): one action per query via a noop-format
 write (full plan executes, nothing is collected to the driver — collect
 would measure Python serialization, not the engine), no caching, warm
 session (JVM startup excluded; reported separately as "startup_sec").
-Contention guard (VERDICT r2 item 6, two-phase since r8): phase 1 takes
-one guaranteed pass over every key; phase 2 re-times every key over 1 s
-cheapest-first with two more passes (reporting the MEDIAN of 3) until
-the wall budget runs out, so a single noisy neighbour on the box can't
-fabricate a 5x "regression" on an untouched file and the budget buys
-medians on the MOST keys rather than depth on whichever slow keys come
-first.  Sub-second queries keep the single-pass number to bound runtime.
+
+The harness has three parts:
+
+- fault-isolated two-phase timing (`time_queries`): phase 1 takes one
+  pass over every key; phase 2 re-times every key over 1 s cheapest-first
+  to a median of 3 while the wall budget lasts, and keys over
+  ALWAYS_RETIME_SEC even after it is spent;
+- one multi-threaded CPU probe (`cpu_probe_mt`) before and after timing,
+  kept as a box-speed label;
+- per-key executor CPU-seconds next to wall time.  Each pass runs under
+  the job group ``<key>@<pass>``, whose CPU time is read from Spark's
+  status store right after the pass, outside the timed region.  CPU
+  time is far less sensitive than wall time to hypervisor steal.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
-import shutil
+import re
 import statistics
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
+from etlbench.harness import StatusStore  # noqa: E402
 from hbasemapreduce_spark.catalog import configure  # noqa: E402
 from hbasemapreduce_spark.registry import all_specs  # noqa: E402
 
@@ -48,88 +56,27 @@ RETIME_PASSES = 3  # median-of-3 for queries over the threshold
 # indistinguishable from regressions.  Three extra passes on the few
 # keys this slow cost well under 30 s total.
 ALWAYS_RETIME_SEC = 2.5
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".scratch")
-
-
-def io_probe(scratch: str = _SCRATCH, probe_mib: int = 16) -> dict:
-    """Box-environment probe (VERDICT r4 item 2): BENCH_r04 measured
-    sink_partitioned at 6.01 s driver-run vs 0.85 s builder-run on an
-    unchanged plan — a 7x gap that can only be environmental.  This
-    records, in BENCH_DETAIL.json and the summary line, everything
-    needed to attribute such a gap: the .scratch census (stale staged
-    dirs would inflate overwrite-mode deletes), a raw fsync'd
-    write + read throughput probe on the same filesystem the sink keys
-    write to, and the 1-min load average (a busy box was already shown
-    to inflate the whole bench 1.5x — see memory: idle-box benching)."""
-    n_files = 0
-    n_bytes = 0
-    for root, _dirs, files in os.walk(scratch):
-        for fn in files:
-            try:
-                n_bytes += os.path.getsize(os.path.join(root, fn))
-                n_files += 1
-            except OSError:
-                pass
-    os.makedirs(scratch, exist_ok=True)
-    probe_path = os.path.join(scratch, "_io_probe.bin")
-    blob = b"\xa5" * (1 << 20)
-    t = time.perf_counter()
-    with open(probe_path, "wb") as f:
-        for _ in range(probe_mib):
-            f.write(blob)
-        f.flush()
-        os.fsync(f.fileno())
-    w_sec = time.perf_counter() - t
-    t = time.perf_counter()
-    with open(probe_path, "rb") as f:
-        while f.read(1 << 22):
-            pass
-    r_sec = time.perf_counter() - t
-    os.remove(probe_path)
-    return {
-        "scratch_files": n_files,
-        "scratch_mb": round(n_bytes / 1e6, 1),
-        "write_mbps": round(probe_mib / max(w_sec, 1e-9), 1),
-        "read_mbps": round(probe_mib / max(r_sec, 1e-9), 1),
-        "load1": round(os.getloadavg()[0], 1),
-        "cpu_probe_sec": cpu_probe(),
-        "cpu_probe_mt_sec": cpu_probe_mt(),
-    }
-
-
-def cpu_probe() -> float:
-    """Fixed CPU workload (seconds, lower = faster box): one 1200x1200
-    float64 matmul + a 2M-iteration pure-Python loop.  Round-5 finding:
-    the same commit measured ~2x slower wall-clock on a different
-    builder VM with IDENTICAL io probes — per-query timings can only be
-    compared across rounds after normalizing by a box-speed constant,
-    which this records in every BENCH_DETAIL/summary line."""
-    import numpy as np
-
-    rng = np.random.default_rng(42)
-    a = rng.random(2_000_000)
-    np.sort(a)  # fault pages before timing
-    best = float("inf")
-    for _ in range(3):  # min-of-3: robust to a transient noisy neighbour
-        t = time.perf_counter()
-        np.sort(a)  # single-threaded, cache-resident, deterministic
-        s = 0
-        for i in range(2_000_000):  # interpreter speed (pure Python)
-            s += i
-        best = min(best, time.perf_counter() - t)
-    return round(best, 3)
+# Global wall budget (r5): on a slow box most keys cross the 1 s retime
+# threshold, tripling wall time until the loop blows any outer timeout
+# and records NOTHING.  A first pass for every key always completes;
+# median-of-3 re-timing stops once the loop has spent the budget (those
+# keys report their single first pass, `passes` records which).
+BUDGET_SEC = 900.0
+# Janino compile cache (r12): the default 100 entries thrashes under this
+# registry — one full pass generates ~1100 codegen units, so every
+# re-timed pass recompiled every query (876 recompiles and 60 s for an
+# 80-key re-pass at the default vs ~0 and 28-31 s at 5000).  Static
+# conf, so it must be set before session start.
+CODEGEN_CACHE_ENTRIES = 5000
 
 
 def cpu_probe_mt(threads: int = 32) -> float:
     """Multi-threaded CPU probe (seconds, lower = faster): `threads`
     concurrent numpy sorts (GIL-released), sized to saturate every
     vCPU at once.  Round-7 finding: a box window measured 0.98 s/q vs
-    the 0.80 record with IDENTICAL single-thread cpu_probe — the
-    single-thread probe cannot see hypervisor steal that only appears
-    under full 32-thread load, which is exactly the load every Spark
-    stage applies.  Compare rounds by BOTH probes: if cpu_probe holds
-    but cpu_probe_mt inflates, whole-run deltas are steal, not code."""
+    the 0.80 record with an identical single-thread probe — only a
+    full-width load sees the hypervisor steal that every Spark stage
+    is exposed to.  Recorded before and after timing as a label."""
     import threading
 
     import numpy as np
@@ -159,45 +106,14 @@ def cpu_probe_mt(threads: int = 32) -> float:
     return round(best, 3)
 
 
-def sink_split_probe(spark, sf_dir: str) -> dict:
-    """Write-vs-read split for the sink_partitioned shape (VERDICT r4
-    item 2): times the salted partitionBy WRITE and the re-read+agg
-    READ separately, on a throwaway directory, so the slow half of a
-    driver-run regression is identifiable from BENCH_DETAIL alone."""
-    from pyspark.sql import functions as F
-
-    from hbasemapreduce_spark.catalog import load_table
-    from hbasemapreduce_spark.operators.scans import _write_partitioned_orders
-
-    out = os.path.join(
-        _SCRATCH, f"sink_split_probe_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
-    try:
-        orders = load_table(spark, sf_dir, "orders")
-        t = time.perf_counter()
-        _write_partitioned_orders(orders, out)
-        w_sec = time.perf_counter() - t
-        t = time.perf_counter()
-        (
-            spark.read.parquet(out)
-            .groupBy("o_year")
-            .agg(F.count("*").alias("cnt"))
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
-        )
-        r_sec = time.perf_counter() - t
-        return {"write_sec": round(w_sec, 3), "read_agg_sec": round(r_sec, 3)}
-    except Exception as e:  # noqa: BLE001 — a probe must never void the bench
-        return {"error": f"{type(e).__name__}: {e}"[:200]}
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
-
-
 def time_queries(
-    spark, specs, sf_dir: str, mid_sink: dict | None = None
-) -> tuple[dict[str, float], dict[str, int], dict[str, str]]:
+    spark, specs, sf_dir: str
+) -> tuple[dict[str, float], dict[str, int], dict[str, str], dict[str, float]]:
     """Time every spec with per-query fault isolation.
+
+    Returns (timings, passes, errors, cpu_sec): median wall seconds,
+    passes taken, the error of each key that failed its first pass, and
+    median executor CPU-seconds over the key's passes.
 
     Fault isolation (VERDICT r3 item 2): in round 3 a single plan-time
     AnalysisException aborted the whole bench (BENCH_r03 rc=1, zero
@@ -206,22 +122,28 @@ def time_queries(
     per-key.  Unit-tested with a deliberately-broken spec in
     tests/test_bench.py.
     """
+    sc = spark.sparkContext
+    status = StatusStore(spark)
+    cpu: dict[str, list[float]] = {}
 
-    def run_once(key: str) -> float:
+    def run_once(key: str, pass_no: int) -> float:
+        group = f"{key}@{pass_no}"
+        sc.setJobGroup(group, key)
         t = time.perf_counter()
         specs[key].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t
+        elapsed = time.perf_counter() - t
+        try:  # a telemetry read must never void a timing
+            status.drain()
+            cpu_s = status.counters([group], full=False)["cpu_s"]
+            cpu.setdefault(key, []).append(cpu_s)
+        except Exception as e:  # noqa: BLE001
+            print(
+                f"CPU READ ERROR {group}: {type(e).__name__}: {e}"[:300],
+                file=sys.stderr,
+            )
+        return elapsed
 
-    # Global wall budget (r5): on a slow builder VM (~2x — see
-    # BENCH_TREND "Box-speed normalization") most keys cross the 1 s
-    # retime threshold, tripling wall time until the 200+-key loop blows
-    # any outer timeout and records NOTHING.  A first pass for every key
-    # always completes; median-of-3 re-timing stops once the loop has
-    # spent the budget (those keys report their single first pass,
-    # `passes` records which).
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "900"))
     t_loop = time.perf_counter()
-
     timings: dict[str, float] = {}
     passes: dict[str, int] = {}
     errors: dict[str, str] = {}
@@ -232,38 +154,26 @@ def time_queries(
     # takes exactly one guaranteed pass over every key; phase 2 spends
     # whatever budget remains adding 2 more passes to every key over
     # the re-time threshold, CHEAPEST FIRST — maximizing the COUNT of
-    # keys that report a median rather than the depth on a few.  Keys
-    # over ALWAYS_RETIME_SEC are re-timed even after the budget is
-    # spent (VERDICT r6 item 3: a >2.5 s single pass on a busy box is
-    # indistinguishable from a regression).
+    # keys that report a median rather than the depth on a few.
     for key in specs:
         try:
-            timings[key] = round(run_once(key), 3)
+            timings[key] = round(run_once(key, 1), 3)
             passes[key] = 1
         except Exception as e:  # noqa: BLE001 — isolate ANY per-query failure
             errors[key] = f"{type(e).__name__}: {e}"[:300]
             print(f"ERROR {key}: {errors[key]}", file=sys.stderr)
-
-    # Mid-run probe (round-11 finding): a contention window that opens
-    # AFTER the pre-probe and closes BEFORE the post-probe inflates
-    # phase-1 medians while both endpoint probes look healthy — a
-    # 433 s run with ~2x inflation across unrelated keys sailed through
-    # the r9/r10 guards exactly this way.  Record the box state at the
-    # phase boundary so box_health sees inside the run.
-    if mid_sink is not None:
-        mid_sink.update(io_probe())
 
     retime = sorted(
         (k for k, t in timings.items() if t > RETIME_THRESHOLD_SEC),
         key=lambda k: timings[k],
     )
     for key in retime:
-        in_budget = (time.perf_counter() - t_loop) < budget
+        in_budget = (time.perf_counter() - t_loop) < BUDGET_SEC
         if not in_budget and timings[key] <= ALWAYS_RETIME_SEC:
             continue
         try:
             samples = [timings[key]] + [
-                run_once(key) for _ in range(RETIME_PASSES - 1)
+                run_once(key, p) for p in range(2, RETIME_PASSES + 1)
             ]
             timings[key] = round(statistics.median(samples), 3)
             passes[key] = len(samples)
@@ -273,266 +183,37 @@ def time_queries(
                 f"{type(e).__name__}: {e}"[:300],
                 file=sys.stderr,
             )
-    return timings, passes, errors
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    cpu_sec = {k: round(statistics.median(v), 3) for k, v in cpu.items()}
+    return timings, passes, errors, cpu_sec
 
 
-# Box-health guard thresholds (VERDICT r9 item 3: three r9 bench runs
-# hit three distinct mid-run box degradations — write throughput
-# collapsing 234.6 -> 7.2 MB/s inflated every Python-worker key
-# together and put the repo's slowest key at 21x its record in the
-# official artifact).  A run whose probes drift past these bounds is
-# marked `degraded: true` so the artifact attributes itself, and the
-# most-inflated keys (vs the newest archived per-key record) get a
-# bounded targeted retry whose per-key MIN replaces the contaminated
-# number — min across runs is the right statistic for contention noise
-# on a deterministic plan.
-HEALTH_MIN_WRITE_MBPS = 100.0
-HEALTH_MAX_CPU_DRIFT = 1.15
-HEALTH_RETRY_INFLATION = 1.5  # retry keys at >1.5x their archived record
-HEALTH_RETRY_BUDGET_SEC = 240.0
-
-
-HEALTH_MAX_HIST_RATIO = 1.3  # probe vs best archived probe on this box
-HEALTH_OUTLIER_RATIO = 3.0  # always-retried timing inflation vs record
-
-
-def box_health(
-    pre: dict, post: dict, hist: dict | None = None, mid: dict | None = None
-) -> dict:
-    """Classify the run's environment from the pre/mid/post probes.
-
-    Three signals: (a) pre->post DRIFT (the r9 mid-run collapse
-    signature), (b) ABSOLUTE comparison against the best archived
-    probes — the r10 finding: a run can START on a contended box
-    (cpu_probe_mt 0.537 vs the 0.336 record at run start, recovered
-    by run end), which drift alone cannot see because post/pre then
-    looks like an improvement — and (c) the MID-run probe at the
-    phase-1/phase-2 boundary — the r11 finding: a contention window
-    that opens after pre and closes before post inflates phase-1
-    medians ~2x across unrelated keys while both endpoint probes look
-    healthy."""
-    reasons = []
-    sides = [("pre", pre), ("post", post)]
-    if mid:
-        sides.insert(1, ("mid", mid))
-    for side, p in sides:
-        if p["write_mbps"] < HEALTH_MIN_WRITE_MBPS:
-            reasons.append(f"write_mbps_{side}={p['write_mbps']}")
-    for probe in ("cpu_probe_sec", "cpu_probe_mt_sec"):
-        drift = post[probe] / max(pre[probe], 1e-9)
-        if drift > HEALTH_MAX_CPU_DRIFT:
-            reasons.append(f"{probe}_drift={round(drift, 2)}")
-        if hist and probe in hist:
-            for side, p in sides:
-                r = p[probe] / max(hist[probe], 1e-9)
-                if r > HEALTH_MAX_HIST_RATIO:
-                    reasons.append(f"{probe}_{side}_vs_hist={round(r, 2)}")
-    return {"degraded": bool(reasons), "reasons": reasons}
-
-
-def _same_cpu(detail: dict, cpus: int) -> bool:
-    """True when an archived BENCH_DETAIL was taken at ``cpus`` cores.
-
-    r13 (VERDICT r12 item 6): the driver's 8-core scaling leg was
-    auto-archived by the next-round numbering rule, so an archive's
-    timings are only comparable to a run at the SAME core count —
-    records and probe history from a different-cpu artifact must not
-    tighten this run's thresholds.  Archives predating the ``cpus``
-    stamp were all 32-core except the known 8-core r13 leg (annotated
-    in-place), so a missing field means 32."""
-    return int(detail.get("cpus", 32)) == cpus
-
-
-def prior_probes(here: str, cpus: int = 32) -> dict:
-    """Best (fastest) archived cpu probes — the box-speed record the
-    absolute health comparison normalizes against.  Same-cpu archives
-    only (the probes themselves are fixed-width, but their surrounding
-    run shapes the warm-spin/health history they anchor)."""
-    import glob as _glob
-
-    best: dict[str, float] = {}
-    for path in _glob.glob(os.path.join(here, "BENCH_DETAIL_r*.json")):
-        try:
-            d = json.load(open(path))
-        except (OSError, json.JSONDecodeError):
-            continue
-        if not _same_cpu(d, cpus):
-            continue
-        # io_probe_mid exists from r11 archives on (ADVICE r11: a box's
-        # fastest-ever sample taken mid-run must tighten the record the
-        # warm-spin and the 1.3x health ratio compare against)
-        for side in ("io_probe_pre", "io_probe_mid", "io_probe_post"):
-            p = d.get(side) or {}
-            for probe in ("cpu_probe_sec", "cpu_probe_mt_sec"):
-                if probe in p:
-                    best[probe] = min(best.get(probe, float("inf")), p[probe])
-    return best
-
-
-def prior_records(here: str, cpus: int = 32) -> dict[str, float]:
-    """Per-key best timings from the newest archived BENCH_DETAIL_r*
-    taken at the SAME core count (VERDICT r12 item 6: the 8-core
-    scaling leg must not define 32-core records, nor vice versa)."""
-    import glob as _glob
-
-    paths = sorted(_glob.glob(os.path.join(here, "BENCH_DETAIL_r*.json")))
-    details = []
-    for p in paths:
-        try:
-            d = json.load(open(p))
-        except (OSError, json.JSONDecodeError):
-            continue
-        if _same_cpu(d, cpus):
-            details.append(d)
-    best: dict[str, float] = {}
-    for d in details[-3:]:  # last 3 same-cpu rounds: newest code, but a
-        # degraded newest round alone must not define the record
-        for k, v in d.get("queries", {}).items():
-            best[k] = min(best.get(k, float("inf")), v)
-    return best
-
-
-def retry_inflated(
-    spark,
-    specs,
-    sf_dir: str,
+def summary_line(
     timings: dict[str, float],
-    here: str,
-    threshold: float = HEALTH_RETRY_INFLATION,
-    cpus: int = 32,
-) -> list[str]:
-    """Targeted retry: re-time the keys most inflated vs their archived
-    records, most-inflated first, inside a bounded budget; keep the
-    per-key MIN.  Returns the keys retried.  Called with the default
-    1.5x threshold when the run is flagged degraded, and ALWAYS with
-    the 3x outlier threshold — the r10 finding: a 25x median-of-3
-    outlier (x_emb_pq 50.1 s vs its 1.97 s record, back to 2.1 s
-    isolated minutes later) survived a run whose end-of-run probes
-    looked healthy."""
-
-    records = prior_records(here, cpus)
-    inflated = sorted(
-        (
-            k
-            for k, t in timings.items()
-            if k in records and records[k] > 0.2 and t > threshold * records[k]
-        ),
-        key=lambda k: -(timings[k] / records[k]),
-    )
-    retried: list[str] = []
-    t0 = time.perf_counter()
-    for key in inflated:
-        if time.perf_counter() - t0 > HEALTH_RETRY_BUDGET_SEC:
-            break
-        try:
-            t = time.perf_counter()
-            specs[key].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            timings[key] = round(min(timings[key], time.perf_counter() - t), 3)
-            retried.append(key)
-        except Exception as e:  # noqa: BLE001 — keep the original timing
-            print(
-                f"HEALTH RETRY ERROR {key}: {type(e).__name__}: {e}"[:200],
-                file=sys.stderr,
-            )
-    return retried
-
-
-def repair_anomalies(
-    spark,
-    specs,
-    sf_dir: str,
-    timings: dict[str, float],
-    anomalies: list[str],
-    hist: dict,
-    *,
-    spin=None,
-    runner=None,
-) -> dict[str, list[float]]:
-    """One more chance for anomaly-flagged keys (VERDICT r11 item 2):
-    the r11 artifact archived 13.36 s for a key whose quiet-box record
-    is 4.49 s because every probe window the run offered was contended
-    — the retry machinery re-timed it INSIDE the same window.  This
-    pass runs AFTER the final health verdict: wait out the contention
-    once more (bounded warm-spin against the archived best), re-time
-    each anomaly exactly once, and archive the BETTER of the two with
-    both recorded — so a future reader sees {key: [flagged, repaired]}
-    instead of trusting a single-window ghost.  ``spin`` and ``runner``
-    are injection seams for the unit tests."""
-    spin = spin or (lambda: warm_spin(hist))
-    if runner is None:
-
-        def runner(key: str) -> float:
-            t = time.perf_counter()
-            specs[key].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            return time.perf_counter() - t
-
-    spin()
-    repairs: dict[str, list[float]] = {}
-    for key in anomalies:
-        try:
-            again = round(runner(key), 3)
-        except Exception as e:  # noqa: BLE001 — keep the flagged timing
-            print(
-                f"ANOMALY REPAIR ERROR {key}: {type(e).__name__}: {e}"[:200],
-                file=sys.stderr,
-            )
-            continue
-        repairs[key] = [timings[key], again]
-        timings[key] = min(timings[key], again)
-    return repairs
-
-
-# Pre-bench warm-spin (VERDICT r10 item 3): both r10 bench runs STARTED
-# on a contended box (pre cpu_probe_mt 1.5-1.94x the archived best) and
-# the official artifacts inherited inflated numbers for the
-# contention-sensitive keys.  Instead of timing into a known-bad window,
-# wait — bounded — until the multi-thread probe lands within
-# HEALTH_MAX_HIST_RATIO of the box's archived best, so artifacts stop
-# inheriting contended starts.  If the box never recovers inside the
-# bound, proceed anyway (converged:false is recorded; box_health will
-# flag the run degraded exactly as before).
-WARM_SPIN_MAX_SEC = 60.0
-WARM_SPIN_SLEEP_SEC = 5.0
-
-
-def warm_spin(
-    hist: dict,
-    *,
-    max_sec: float = WARM_SPIN_MAX_SEC,
-    ratio: float = HEALTH_MAX_HIST_RATIO,
-    probe=cpu_probe_mt,
-    sleep=time.sleep,
-    clock=time.perf_counter,
-) -> dict:
-    """Spin (probe, sleep, re-probe) until the box's multi-thread CPU
-    probe is within ``ratio`` of the archived best, or ``max_sec``
-    elapses.  Returns {"spun_sec", "samples", "converged"}; with no
-    archived history the first probe converges by definition.  The
-    probe/sleep/clock seams exist for the unit tests (tests/
-    test_bench.py) — injected fakes, no wall-clock dependence."""
-    best_hist = hist.get("cpu_probe_mt_sec")
-    t0 = clock()
-    samples: list[float] = []
-    while True:
-        s = probe()
-        samples.append(s)
-        if best_hist is None or s <= ratio * best_hist:
-            return {
-                "spun_sec": round(clock() - t0, 1),
-                "samples": samples,
-                "converged": True,
-            }
-        if clock() - t0 >= max_sec:
-            return {
-                "spun_sec": round(clock() - t0, 1),
-                "samples": samples,
-                "converged": False,
-            }
-        sleep(WARM_SPIN_SLEEP_SEC)
+    errors: dict[str, str],
+    cpu_sec: dict[str, float],
+    sf: float | None,
+    startup_sec: float,
+    cpu_mt_sec: list[float],
+) -> str:
+    """The FINAL stdout line: always inside the driver's ~2 KB tail."""
+    summary = {
+        "metric": "total_query_wall_sec",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        # top-5 slowest; the full map is in BENCH_DETAIL.json
+        "queries": dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5]),
+        "sf": sf,
+        "n_queries": len(timings),
+        "n_errors": len(errors),
+        "startup_sec": round(startup_sec, 2),
+        "executor_cpu_sec": round(sum(cpu_sec.values()), 3),
+        # box-speed label: multi-threaded CPU probe before and after timing
+        "cpu_mt_sec": cpu_mt_sec,
+    }
+    line = json.dumps(summary, separators=(",", ":"))
+    assert len(line) < 1024, f"final bench line too long ({len(line)} B)"
+    return line
 
 
 def main() -> None:
@@ -549,21 +230,11 @@ def main() -> None:
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")  # keep stdout clean
         .config("spark.driver.memory", "16g")
-        # Janino compile cache (r12, guide §1/§7: driver-side cost).  The
-        # default 100 entries thrashes under this registry: one full pass
-        # generates ~1100 whole-stage/expression codegen units, so EVERY
-        # re-timed pass recompiled EVERY query (measured: 876 recompiles
-        # and 60 s for an 80-key re-pass at the default vs ~0 recompiles
-        # and 28-31 s at 5000 — warm-pass time halved).  Sized to the
-        # working set with headroom; the entries are compiled classes
-        # (KBs each), bounded driver memory.  Static conf, so it must be
-        # set before session start; production value is the same — any
-        # long-lived driver serving a few hundred distinct operator
-        # shapes wants the cache to hold its whole working set.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "5000"),
-        )
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        # The status store evicts past 1000 jobs/stages, skipped stages
+        # first, and a key whose stage was evicted has no CPU figure.
+        .config("spark.ui.retainedJobs", "1000000")
+        .config("spark.ui.retainedStages", "1000000")
         .getOrCreate()
     )
     spark.sparkContext.setLogLevel("ERROR")
@@ -580,84 +251,30 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 — warm-up must never abort the run
             print(f"WARMUP ERROR {wk}: {e}", file=sys.stderr)
 
-    here = os.path.dirname(os.path.abspath(__file__))
-    n_cpus = int(cpus)
-    hist = prior_probes(here, n_cpus)
-    spin = warm_spin(hist)
-    probe_pre = io_probe()
-    probe_mid: dict = {}
-    timings, passes, errors = time_queries(spark, specs, sf_dir, mid_sink=probe_mid)
-    probe_post = io_probe()
-    health = box_health(probe_pre, probe_post, hist, mid=probe_mid)
-    # Extreme outliers (>3x their archived record) are retried even on
-    # a probes-healthy run — contention windows shorter than the run
-    # can poison a median-of-3 without moving the end-of-run probes.
-    retried = retry_inflated(
-        spark, specs, sf_dir, timings, here, threshold=HEALTH_OUTLIER_RATIO,
-        cpus=n_cpus,
-    )
-    if health["degraded"]:
-        # Broader pass on a flagged box (VERDICT r9 item 3), then
-        # re-probe — the FINAL health verdict describes the box the
-        # reported numbers actually came from.
-        retried += [
-            k
-            for k in retry_inflated(spark, specs, sf_dir, timings, here, cpus=n_cpus)
-            if k not in retried
-        ]
-        probe_post = io_probe()
-        health = box_health(probe_pre, probe_post, hist, mid=probe_mid)
-    health["retried_keys"] = retried
-    # anomalies: keys STILL far above record after the retry — either a
-    # real regression or a box that never recovered; named so the trend
-    # log can attribute them instead of a future judge guessing
-    records = prior_records(here, n_cpus)
+    cpu_mt_pre = cpu_probe_mt()
+    timings, passes, errors, cpu_sec = time_queries(spark, specs, sf_dir)
+    cpu_mt = [cpu_mt_pre, cpu_probe_mt()]
 
-    def _anomalies() -> list[str]:
-        return sorted(
-            k
-            for k, t in timings.items()
-            if k in records
-            and records[k] > 0.2
-            and t > HEALTH_OUTLIER_RATIO * records[k]
-        )
-
-    health["anomalies"] = _anomalies()
-    # VERDICT r11 item 2: anomaly keys get one final re-time after a
-    # fresh warm-spin; both numbers are archived, the better one wins.
-    if health["anomalies"]:
-        health["anomaly_repairs"] = repair_anomalies(
-            spark, specs, sf_dir, timings, health["anomalies"], hist
-        )
-        health["anomalies"] = _anomalies()
-    sink_split = sink_split_probe(spark, sf_dir)
-
-    total = round(sum(timings.values()), 3)
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     sf_val = float(sf) if sf else None
 
     detail = {
         "metric": "total_query_wall_sec",
-        "value": total,
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "queries": timings,
         "passes": passes,
         "errors": errors,
+        "cpu_sec": cpu_sec,
         "sf": sf_val,
-        "cpus": n_cpus,  # r13: archives are only comparable same-cpu
+        "cpus": int(cpus),  # r13: archives are only comparable same-cpu
         "n_queries": len(timings),
         "n_errors": len(errors),
         "startup_sec": round(startup, 2),
-        "io_probe_pre": probe_pre,
-        "io_probe_mid": probe_mid,
-        "io_probe_post": probe_post,
-        "sink_split": sink_split,
-        "health": health,
-        "degraded": health["degraded"],
-        "warm_spin": spin,
+        "executor_cpu_sec": round(sum(cpu_sec.values()), 3),
+        "cpu_mt_sec": cpu_mt,
     }
-    detail_path = os.path.join(here, "BENCH_DETAIL.json")
-    with open(detail_path, "w") as f:
+    with open(os.path.join(HERE, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
     # VERDICT r6 item 5: BENCH_DETAIL.json is overwritten each run and
     # BENCH_r0N.json keeps only the top-5 slowest, so per-key
@@ -665,60 +282,22 @@ def main() -> None:
     # full detail under the upcoming round's number (1 + the highest
     # existing driver BENCH_r0N artifact); the driver's own run is the
     # last one before snapshot, so its detail wins.
-    import glob as _glob
-    import re as _re
-
     rounds = [
         int(m.group(1))
-        for bp in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-        for m in [_re.search(r"BENCH_r(\d+)\.json$", bp)]
+        for bp in glob.glob(os.path.join(HERE, "BENCH_r*.json"))
+        for m in [re.search(r"BENCH_r(\d+)\.json$", bp)]
         if m
     ]
     nxt = (max(rounds) + 1) if rounds else 1
     # only the canonical sf belongs in the round archive: a builder-side
     # sf0.001 verification drive must not clobber the sf0.1 record
     # (it did once, r7 — restored from git)
-    if abs(float(detail.get("sf", 0)) - 0.1) < 1e-9:
-        with open(
-            os.path.join(here, f"BENCH_DETAIL_r{nxt:02d}.json"), "w"
-        ) as f:
+    if sf_val is not None and abs(sf_val - 0.1) < 1e-9:
+        with open(os.path.join(HERE, f"BENCH_DETAIL_r{nxt:02d}.json"), "w") as f:
             json.dump(detail, f, indent=1, sort_keys=True)
     # Earlier line: full per-query map for humans / logs that keep stdout.
     print("DETAIL " + json.dumps(detail, separators=(",", ":")))
-
-    # FINAL line: tiny, always inside the driver's ~2 KB tail capture.
-    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:5])
-    summary = {
-        "metric": "total_query_wall_sec",
-        "value": total,
-        "unit": "sec",
-        "queries": slowest,  # top-5 slowest; full map in BENCH_DETAIL.json
-        "sf": sf_val,
-        "n_queries": len(timings),
-        "n_errors": len(errors),
-        "startup_sec": round(startup, 2),
-        # environment attribution for I/O-bound keys (VERDICT r4 item 2):
-        # raw fsync'd write MB/s and 1-min load, before and after timing,
-        # plus the sink write-vs-read split — full probes in BENCH_DETAIL.
-        "io_w_mbps": [probe_pre["write_mbps"], probe_post["write_mbps"]],
-        "load1": [probe_pre["load1"], probe_post["load1"]],
-        "cpu_sec": [probe_pre["cpu_probe_sec"], probe_post["cpu_probe_sec"]],
-        "cpu_mt_sec": [
-            probe_pre["cpu_probe_mt_sec"],
-            probe_post["cpu_probe_mt_sec"],
-        ],
-        "sink_split": sink_split,
-        # box-health verdict (VERDICT r9 item 3): true means the probes
-        # drifted past bounds even after the targeted retry — treat the
-        # totals as box attribution, not engine regression.
-        "degraded": health["degraded"],
-        # [seconds spun pre-bench, 1 if the mt-probe reached 1.3x of the
-        # archived best before timing began] — VERDICT r10 item 3
-        "warm_spin": [spin["spun_sec"], int(spin["converged"])],
-    }
-    line = json.dumps(summary, separators=(",", ":"))
-    assert len(line) < 1024, f"final bench line too long ({len(line)} B)"
-    print(line)
+    print(summary_line(timings, errors, cpu_sec, sf_val, startup, cpu_mt))
     spark.stop()
 
 
