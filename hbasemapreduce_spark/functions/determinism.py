@@ -41,18 +41,6 @@ def dec_avg(col: Column | str, alias: str, scale: int = 2) -> Column:
     return (s / F.count(_c(col))).alias(alias)
 
 
-def sql_dec_sum(expr: str, alias: str, scale: int = 2) -> str:
-    """DuckDB-side twin of :func:`dec_sum`."""
-    return f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE) AS {alias}"
-
-
-def sql_dec_avg(expr: str, alias: str, scale: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST({expr} AS DECIMAL(18,{scale}))) AS DOUBLE)"
-        f" / COUNT({expr}) AS {alias}"
-    )
-
-
 # -- split long sums: the decimal sandwich at long-accumulation speed ----
 #
 # r13 (guide §2.3 narrower types / §1.2 per-task work): a decimal(18,s)

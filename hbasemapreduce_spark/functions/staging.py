@@ -1,21 +1,35 @@
-"""Scratch-space staging with identity + version keys.
+"""Scratch-space staging: the one owner of ``.scratch``.
 
 Any operator that materializes a derived copy of a source file (the
-partitioned-layout staging, the streaming drop-zone) keys the staged
-directory on BOTH:
+partitioned layouts, the versioned snapshot tables, the streaming
+drop-zones) or rewrites an output on every call (the sink round-trips)
+goes through this module.  The rule, stated once:
 
-- the source's identity — a hash of its absolute path, so two sources
-  that happen to share a basename can never clobber or serve each
-  other's copies;
-- the source's version — a hash of mtime+size, so a regenerated source
-  is re-staged and a stale copy is never silently served.
+- One root: :data:`SCRATCH`, ``<checkout>/.scratch``.  No other module
+  builds a scratch path (pinned by ``tests/test_staging.py``).
+- A staged copy lives in a directory keyed on BOTH the source's
+  identity (a hash of its absolute path, so two sources that share a
+  basename never clobber or serve each other's copies) and its version
+  (a hash of mtime+size, so a regenerated source is re-staged rather
+  than served stale).
+- :func:`staged` calls ``write(dir)`` only when the directory's
+  completion marker (:data:`MARKER`) is missing, and touches the marker
+  only after ``write`` returns: a write that raises or dies midway
+  leaves no marker, so the next call writes again instead of serving a
+  partial copy.  Spark's readers skip the ``_``-prefixed marker.
+- Superseded versions of the same (tag, source) are pruned after the
+  new version is marked, and only past an age grace window, so a
+  reader still draining the old version keeps its input.
+  (:func:`fingerprinted_dir` itself only names the directory: pruning
+  inside the naming step would delete a concurrent reader's input the
+  moment another session merely computed the new path.)
+- Outputs rewritten on every call get :func:`sink_dir`: keyed on the
+  source's identity only, with no version and no marker.
 
-Superseded versions of the same source are pruned by the CALLER, after
-the new version is fully staged, and only past an age grace window —
-``fingerprinted_dir`` itself only names the directory.  (Earlier
-revisions pruned eagerly inside the naming helper; a concurrent reader
-still draining the old staged dir could then have its input deleted
-mid-read the moment another session merely *computed* the new path.)
+Known gap: staged snapshot manifests (``operators/pipeline.py``) record
+ABSOLUTE file paths, and the keys above do not include the checkout's
+location, so a checkout moved together with its ``.scratch`` serves the
+old location's files (ROADMAP direction 5).
 """
 
 from __future__ import annotations
@@ -24,6 +38,14 @@ import hashlib
 import os
 import shutil
 import time
+from collections.abc import Callable
+
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
+)
+
+# completion marker of a staged directory, touched after its write returns
+MARKER = "_STAGED"
 
 # A superseded version dir must be at least this old (by its own mtime)
 # before pruning touches it: long enough for any in-flight reader that
@@ -43,11 +65,27 @@ def _version_fp(src_file: str) -> str:
 
 def fingerprinted_dir(scratch: str, tag: str, src_file: str) -> str:
     """Staging dir for (tag, source identity, source version).  Pure
-    naming — no filesystem side effects.  The caller decides what
-    "already staged" means (e.g. a _SUCCESS marker or the staged file
-    itself) and calls :func:`prune_superseded` once staging completes."""
+    naming — no filesystem side effects."""
     prefix = f"{tag}_{source_ident(src_file)}_"
     return os.path.join(scratch, f"{prefix}{_version_fp(src_file)}")
+
+
+def staged(tag: str, src_file: str, write: Callable[[str], object]) -> str:
+    """The staged copy of ``src_file`` under ``tag``: ``write(dir)`` runs
+    only if ``dir`` is not yet marked complete; returns ``dir``."""
+    out = fingerprinted_dir(SCRATCH, tag, src_file)
+    marker = os.path.join(out, MARKER)
+    if not os.path.exists(marker):
+        os.makedirs(out, exist_ok=True)
+        write(out)
+        open(marker, "w").close()
+    prune_superseded(SCRATCH, tag, src_file)
+    return out
+
+
+def sink_dir(tag: str, src_file: str) -> str:
+    """Output dir for (tag, source identity), overwritten by every call."""
+    return os.path.join(SCRATCH, f"{tag}_{source_ident(src_file)}")
 
 
 def prune_superseded(

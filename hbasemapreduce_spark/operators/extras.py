@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions.determinism import dec_sum
+from ..functions.staging import sink_dir
 from ..functions.zorder import (
     hilbert_ctes,
     hilbert_map,
@@ -30,8 +31,6 @@ from ..functions.zorder import (
     z_value_sql,
 )
 from ..registry import query
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 
 @query(
@@ -48,7 +47,7 @@ def source_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     with an explicit schema (the Mapper's hand-written parse, done by the
     CSV datasource), aggregate.  Round-trips through text exactly."""
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(_SCRATCH, f"source_csv_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = sink_dir("source_csv", os.path.join(sf_dir, "orders.parquet"))
     (
         orders.select(
             "o_orderkey",
@@ -1278,9 +1277,7 @@ def source_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is identical."""
     orders = load_table(spark, sf_dir, "orders")
     cut = F.lit("1997-01-01 00:00:00").cast("timestamp")
-    out = os.path.join(
-        _SCRATCH, f"merge_schema_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = sink_dir("merge_schema", os.path.join(sf_dir, "orders.parquet"))
     old, new = os.path.join(out, "g1"), os.path.join(out, "g2")
     (
         orders.filter(F.col("o_orderdate") < cut)

@@ -20,13 +20,10 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
 from ..functions.sqlbuild import sql_over
+from ..functions.staging import sink_dir, staged
 from ..functions.text import tokens
 from ..registry import query
 from .stats_ml import KMEANS_CENT_SQL as _KM_SQL
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch"
-)
 
 # Knuth multiplicative hash: deterministic, engine-portable (plain
 # bigint arithmetic — unlike rand(seed), identical in DuckDB), and
@@ -264,7 +261,7 @@ def sink_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..functions.determinism import dec_sum
 
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(_SCRATCH, f"sink_orc_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = sink_dir("sink_orc", os.path.join(sf_dir, "orders.parquet"))
     orders.select("o_orderkey", "o_orderstatus", "o_totalprice").write.mode(
         "overwrite"
     ).orc(out)
@@ -289,7 +286,7 @@ def sink_json_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     Timestamps are excluded from the payload by design: JSON round-trips
     of timestamps are the classic cross-engine drift source."""
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(_SCRATCH, f"sink_json_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = sink_dir("sink_json", os.path.join(sf_dir, "orders.parquet"))
     orders.select("o_orderkey", "o_orderpriority").write.mode("overwrite").json(out)
     typed = spark.read.schema("o_orderkey LONG, o_orderpriority STRING").json(out)
     return typed.groupBy("o_orderpriority").agg(
@@ -1750,7 +1747,7 @@ def sink_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema keeps the text parse a single projection (no inference
     job), and the aggregate is map-side combined."""
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(_SCRATCH, f"sink_csv_{os.path.basename(sf_dir.rstrip('/'))}")
+    out = sink_dir("sink_csv", os.path.join(sf_dir, "orders.parquet"))
     orders.select(
         "o_orderkey",
         "o_orderstatus",
@@ -1811,9 +1808,7 @@ def source_text(spark: SparkSession, sf_dir: str) -> DataFrame:
     block boundaries exactly like any other splittable source, so a
     100 TB TSV dump parallelizes per block."""
     docs = load_table(spark, sf_dir, "documents")
-    out = os.path.join(
-        _SCRATCH, f"source_text_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = sink_dir("source_text", os.path.join(sf_dir, "documents.parquet"))
     docs.select(
         F.concat_ws(
             "\t",
@@ -1859,25 +1854,18 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> dict:
       exists so x_etl_vacuum has real orphans to account, and as a
       second poison layer for any directory-globbing reader.
 
-    Staging is fingerprinted on the source and idempotent (_SUCCESS
-    marker); manifests are JSON file lists, exactly what a snapshot
-    read needs and nothing more.  Returns {"root", "s1", "s2"} with
-    each snapshot's absolute file list."""
+    Staged once per source version (functions/staging.staged);
+    manifests are JSON file lists, exactly what a snapshot read needs
+    and nothing more.  Returns {"root", "s1", "s2"} with each
+    snapshot's absolute file list."""
     import json
-
-    from ..functions.staging import fingerprinted_dir
-
-    src = os.path.join(sf_dir, "orders.parquet")
-    root = fingerprinted_dir(_SCRATCH, "snapshot_table_v2", src)
-    marker = os.path.join(root, "_SUCCESS")
 
     def _files(d: str) -> list[str]:
         return sorted(
             os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
         )
 
-    if not os.path.exists(marker):
-        os.makedirs(root, exist_ok=True)
+    def write(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
@@ -1903,7 +1891,8 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> dict:
         aborted.repartition(2).write.mode("overwrite").parquet(
             os.path.join(root, "c0_aborted")
         )
-        open(marker, "w").close()
+
+    root = staged("snapshot_table_v2", os.path.join(sf_dir, "orders.parquet"), write)
     out = {"root": root}
     for snap in ("s1", "s2"):
         with open(os.path.join(root, f"manifest_{snap}.json")) as fh:
@@ -2074,14 +2063,9 @@ def _stage_posdelete_table(spark: SparkSession, sf_dir: str) -> dict:
       the reader's job, which is exactly what the oracle's logical
       encoding of the deletion then proves correct.
 
-    Fingerprinted on the source and idempotent (_SUCCESS marker)."""
-    from ..functions.staging import fingerprinted_dir
+    Staged once per source version (functions/staging.staged)."""
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    root = fingerprinted_dir(_SCRATCH, "posdelete_table", src)
-    marker = os.path.join(root, "_SUCCESS")
-    if not os.path.exists(marker):
-        os.makedirs(root, exist_ok=True)
+    def write(root: str) -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey",
             "o_orderstatus",
@@ -2107,8 +2091,8 @@ def _stage_posdelete_table(spark: SparkSession, sf_dir: str) -> dict:
             .write.mode("overwrite")
             .parquet(os.path.join(root, "deletes"))
         )
-        open(marker, "w").close()
-    return {"root": root}
+
+    return {"root": staged("posdelete_table", os.path.join(sf_dir, "orders.parquet"), write)}
 
 
 @query(

@@ -24,11 +24,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..catalog import load_table, read_parquet
-from ..functions.staging import fingerprinted_dir, prune_superseded, source_ident
+from ..functions.staging import sink_dir, staged
 from ..registry import query
 from .common import LINEITEM_SQL, lineitem_select
-
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))), ".scratch")
 
 # files per Hive partition in partitioned writes: bounds the small-file
 # count AND the per-task write size (see sink_partitioned)
@@ -99,13 +97,7 @@ def sink_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning (directory-level, no file reads at all).
     """
     orders = load_table(spark, sf_dir, "orders")
-    # identity-keyed (path hash): two sf_dirs sharing a basename must not
-    # clobber each other's sink; no version key — overwritten every run
-    out = os.path.join(
-        _SCRATCH,
-        f"sink_partitioned_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{source_ident(os.path.join(sf_dir, 'orders.parquet'))}",
-    )
+    out = sink_dir("sink_partitioned", os.path.join(sf_dir, "orders.parquet"))
     schema = _write_partitioned_orders(orders, out)
     return (
         spark.read.schema(schema)
@@ -142,11 +134,11 @@ def etl_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     a threshold are rewritten.  File-count reduction is asserted in
     tests/test_plans.py (the oracle can only see rows, not files)."""
     src_dir = _staged_partitioned_orders(spark, sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    tag = f"compacted_{os.path.basename(sf_dir.rstrip('/'))}"
-    out = fingerprinted_dir(_SCRATCH, tag, src)
-    compact_partitioned(spark, src_dir, out, "o_year")
-    prune_superseded(_SCRATCH, tag, src)
+    out = staged(
+        "compacted",
+        os.path.join(sf_dir, "orders.parquet"),
+        lambda d: compact_partitioned(spark, src_dir, d, "o_year"),
+    )
     return (
         read_parquet(spark, out)
         .groupBy(F.col("o_year").cast("long").alias("o_year"))
@@ -204,33 +196,25 @@ def compact_partitioned(spark: SparkSession, src_dir: str, out: str, partition_c
     partition's rows in exactly one task, and a task writes one file per
     partition dir it touches.  (At real scale, repartition on
     (partition, bounded salt) instead to target ~128 MB-1 GB files —
-    the single-file form is the floor, not the universal answer.)
-    Skipped if `out` already carries a _SUCCESS marker."""
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        (
-            spark.read.parquet(src_dir)
-            .repartition(partition_col)
-            .write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(out)
-        )
+    the single-file form is the floor, not the universal answer.)"""
+    (
+        spark.read.parquet(src_dir)
+        .repartition(partition_col)
+        .write.mode("overwrite")
+        .partitionBy(partition_col)
+        .parquet(out)
+    )
     return out
 
 
 def _staged_partitioned_orders(spark: SparkSession, sf_dir: str) -> str:
-    """Stage orders as a Hive-partitioned (by o_year) parquet layout.
-
-    Identity + version keyed via functions/staging.py — see its module
-    docstring for the collision/staleness guarantees."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    tag = f"part_pruned_{os.path.basename(sf_dir.rstrip('/'))}"
-    out = fingerprinted_dir(_SCRATCH, tag, src)
-    if not os.path.exists(os.path.join(out, "_SUCCESS")):
-        _write_partitioned_orders(load_table(spark, sf_dir, "orders"), out)
-    # prune AFTER the new version is fully staged (_SUCCESS above), and
-    # only past the grace window — see functions/staging.py
-    prune_superseded(_SCRATCH, tag, src)
-    return out
+    """Stage orders as a Hive-partitioned (by o_year) parquet layout
+    (functions/staging.py states the keying and lifecycle rule)."""
+    return staged(
+        "part_pruned",
+        os.path.join(sf_dir, "orders.parquet"),
+        lambda d: _write_partitioned_orders(load_table(spark, sf_dir, "orders"), d),
+    )
 
 
 @query(
@@ -319,12 +303,8 @@ def bulkload_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same rows as the source table; the physical guarantees
     (disjoint per-file ranges, in-file sort) are layout properties the
     SQL oracle cannot see and are asserted in tests/test_plans.py."""
-    import os
-
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        _SCRATCH, f"bulkload_{os.path.basename(sf_dir.rstrip('/'))}"
-    )
+    out = sink_dir("bulkload", os.path.join(sf_dir, "orders.parquet"))
     bulkload_ranged(orders, out, "o_orderkey", 8)
     back = spark.read.schema(orders.schema).parquet(out)
     return back.groupBy("o_orderpriority").agg(
@@ -424,11 +404,7 @@ def etl_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition's rows; commit is a directory swap per touched partition
     — O(correction), never O(table)."""
     orders = load_table(spark, sf_dir, "orders")
-    out = os.path.join(
-        _SCRATCH,
-        f"backfill_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{source_ident(os.path.join(sf_dir, 'orders.parquet'))}",
-    )
+    out = sink_dir("backfill", os.path.join(sf_dir, "orders.parquet"))
     schema = _write_partitioned_orders(orders, out)
     backfill_earliest_year(spark, orders, out)
     return (
@@ -508,11 +484,7 @@ def source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the fault: doc_id % 7 == 3 lines never close their object
         F.when(F.pmod("doc_id", F.lit(7)) == 3, F.lit("")).otherwise(F.lit("}")),
     )
-    out = os.path.join(
-        _SCRATCH,
-        f"json_corrupt_{os.path.basename(sf_dir.rstrip('/'))}_"
-        f"{source_ident(os.path.join(sf_dir, 'documents.parquet'))}",
-    )
+    out = sink_dir("json_corrupt", os.path.join(sf_dir, "documents.parquet"))
     docs.select(line.alias("value")).write.mode("overwrite").text(out)
     parsed = (
         spark.read.schema("id LONG, n LONG, _corrupt_record STRING")
@@ -844,11 +816,8 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the rewrite runs per-year (only fat years evolve), never
     O(table)."""
     src_dir = _staged_partitioned_orders(spark, sf_dir)
-    src = os.path.join(sf_dir, "orders.parquet")
-    tag = f"part_evo_{os.path.basename(sf_dir.rstrip('/'))}"
-    out = fingerprinted_dir(_SCRATCH, tag, src)
-    marker = os.path.join(out, "_evolved")
-    if not os.path.exists(marker):
+
+    def evolve(out: str) -> None:
         (
             read_parquet(spark, src_dir)
             .withColumn("o_month", F.month("o_orderdate"))
@@ -861,8 +830,8 @@ def etl_partition_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("o_year", "o_month")
             .parquet(out)
         )
-        open(marker, "w").close()
-    prune_superseded(_SCRATCH, tag, src)
+
+    out = staged("part_evo", os.path.join(sf_dir, "orders.parquet"), evolve)
     return (
         read_parquet(spark, out)
         .filter(F.col("o_year") == 1997)

@@ -20,10 +20,15 @@ identical to the batch shuffle, so the scale story carries over.
 
 from __future__ import annotations
 
+import os
+import shutil
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import configure, load_table, read_parquet
+from ..functions.staging import SCRATCH, staged
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,42 +36,37 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     read; ts rebuilt from int64 nanos exactly as catalog.load_table).
 
     The file source needs a *directory* (its drop-zone); the testdata
-    table is a single file, so it is staged into .scratch once — in
-    production this directory is where micro-batch files land.
+    table is a single file, so it is staged once (functions/staging.py) —
+    in production this directory is where micro-batch files land.
     """
     configure(spark)
-    import os
-    import shutil
-
-    from ..functions.staging import fingerprinted_dir, prune_superseded
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     src = os.path.join(sf_dir, "events.parquet")
-    # identity+version keyed (see functions/staging.py): a regenerated
-    # source re-stages instead of being served stale
-    scratch = os.path.join(repo_root, ".scratch")
-    tag = f"stream_events_{os.path.basename(sf_dir.rstrip('/'))}"
-    stage = fingerprinted_dir(scratch, tag, src)
-    staged = os.path.join(stage, "events.parquet")
-    if not os.path.exists(staged):
-        os.makedirs(stage, exist_ok=True)
-        # Copy to a temp name in the same dir, then atomically rename:
-        # a crash mid-copy must never leave a truncated events.parquet
-        # at the completion-marker path (the version-keyed dir name would
-        # make every later run serve it as if complete).
-        tmp = f"{staged}.tmp.{os.getpid()}"
-        try:
-            shutil.copyfile(src, tmp)
-            os.replace(tmp, staged)
-        finally:
-            if os.path.exists(tmp):
-                os.remove(tmp)
-    prune_superseded(scratch, tag, src)
-    raw_schema = read_parquet(spark, staged).schema
-    df = spark.readStream.schema(raw_schema).format("parquet").load(stage)
+    stage = staged(
+        "stream_events", src, lambda d: shutil.copyfile(src, os.path.join(d, "events.parquet"))
+    )
+    raw_schema = read_parquet(spark, os.path.join(stage, "events.parquet")).schema
+    return _with_ts(spark.readStream.schema(raw_schema).format("parquet").load(stage))
+
+
+def _with_ts(df: DataFrame) -> DataFrame:
+    """``ts`` as session TIMESTAMP, rebuilt from int64 nanos exactly as
+    catalog.load_table does when the file stores them raw."""
     if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))"))
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
+
+
+def _drain(q, what: str) -> None:
+    """Wait for an availableNow query to finish, then stop it.
+
+    awaitTermination returns False on timeout with the query STILL
+    RUNNING — reading its sink then would return a partial result
+    masquerading as the complete one, so a timeout raises."""
+    try:
+        if not q.awaitTermination(300):
+            raise TimeoutError(f"{what} did not drain within 300s")
+    finally:
+        q.stop()
 
 
 def tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -177,14 +177,7 @@ def run_mirror_to_memory(
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        # awaitTermination returns False on timeout with the query STILL
-        # RUNNING — reading the sink then would return a partial result
-        # masquerading as the complete one
-        if not q.awaitTermination(300):
-            raise TimeoutError(f"{name} mirror did not drain within 300s")
-    finally:
-        q.stop()
+    _drain(q, f"{name} mirror")
     return spark.table(sink)
 
 
@@ -480,11 +473,7 @@ def run_hourly_top_foreachbatch(spark: SparkSession, sf_dir: str, out_dir: str) 
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("hourly_top foreachBatch did not drain within 300s")
-    finally:
-        q.stop()
+    _drain(q, "hourly_top foreachBatch")
     return spark.read.parquet(out_dir)
 
 
@@ -877,68 +866,47 @@ def compaction_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 MIRRORS["x_compact_major"] = compaction_stream
 
 
-def upsert_sink_run(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """foreachBatch MERGE-upsert mirror of x_stream_upsert_sink — the
-    21st executed streaming equality (tests/test_streaming.py), and
-    the only one exercising the foreachBatch SINK surface: the events
-    stream is staged into FOUR parquet files and consumed with
-    maxFilesPerTrigger=1, so availableNow drains through four real
-    micro-batches; each batch folds its purchases with the batch
-    key's own upsert_profile_fold and MERGEs into a versioned parquet
-    snapshot via upsert_profile_merge (write-new-then-swap — readers
-    never see a half-merged table, the Delta-less MERGE INTO
-    pattern).  Associativity of the fold monoid is the equality
-    argument: any batch split reproduces the one-shot batch fold.
+def _fold_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    table: str,
+    name: str,
+    project: Callable[[DataFrame], DataFrame],
+    partial: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+) -> DataFrame:
+    """The foreachBatch fold the three runner mirrors share.
 
-    Returns the final snapshot as a batch DataFrame."""
-    import os
-    import shutil
-
-    from ..functions.staging import fingerprinted_dir
-    from ..operators.streaming_batch import (
-        upsert_profile_deltas,
-        upsert_profile_fold,
-        upsert_profile_merge,
-    )
-
+    ``table`` is staged once per source version into FOUR parquet files
+    and read with maxFilesPerTrigger=1, so availableNow drains through
+    four real micro-batches.  Each batch's ``partial`` (over the
+    ``project``-ed stream) is folded into a versioned parquet snapshot
+    with ``merge(current, partial)``, written new and then swapped in:
+    readers never see a half-merged table.  Returns the final snapshot
+    as a batch DataFrame; the runner applies its finish step."""
     configure(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    src = os.path.join(sf_dir, f"{table}.parquet")
+    stage = staged(
+        f"stream4_{table}",
+        src,
+        lambda d: spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(d),
     )
-    scratch = os.path.join(repo_root, ".scratch")
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = f"upsert_src_{os.path.basename(sf_dir.rstrip('/'))}"
-    stage = fingerprinted_dir(scratch, tag, src)
-    marker = os.path.join(stage, "_staged_4way")
-    if not os.path.exists(marker):
-        os.makedirs(stage, exist_ok=True)
-        spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(
-            stage
-        )
-        open(marker, "w").close()
-    raw_schema = read_parquet(spark, stage).schema
-    ev = (
-        spark.readStream.schema(raw_schema)
+    stream = project(
+        spark.readStream.schema(read_parquet(spark, stage).schema)
         .option("maxFilesPerTrigger", 1)
         .format("parquet")
         .load(stage)
     )
-    if dict(ev.dtypes).get("ts") == "bigint":
-        ev = ev.withColumn(
-            "ts", F.expr("timestamp_micros(CAST(ts DIV 1000 AS BIGINT))")
-        )
-    ev = ev.withColumn("ts", F.col("ts").cast("timestamp"))
 
-    out_root = os.path.join(scratch, f"upsert_snap_{os.getpid()}")
+    out_root = os.path.join(SCRATCH, f"{name}_snap_{os.getpid()}")
     shutil.rmtree(out_root, ignore_errors=True)
     os.makedirs(out_root, exist_ok=True)
     snap = {"path": None}
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = upsert_profile_fold(upsert_profile_deltas(batch_df))
+        part = partial(batch_df)
         if snap["path"] is not None:
-            cur = spark.read.parquet(snap["path"])
-            part = upsert_profile_merge(cur, part)
+            part = merge(spark.read.parquet(snap["path"]), part)
         new_path = os.path.join(out_root, f"v{batch_id}")
         part.write.mode("overwrite").parquet(new_path)
         old = snap["path"]
@@ -947,21 +915,50 @@ def upsert_sink_run(spark: SparkSession, sf_dir: str) -> DataFrame:
             shutil.rmtree(old, ignore_errors=True)
 
     q = (
-        ev.writeStream.foreachBatch(merge_batch)
+        stream.writeStream.foreachBatch(merge_batch)
         .option("checkpointLocation", os.path.join(out_root, "_chk"))
         .trigger(availableNow=True)
         .start()
     )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("upsert mirror did not drain within 300s")
-    finally:
-        q.stop()
+    _drain(q, f"{name} mirror")
     assert snap["path"] is not None, "no micro-batch ever fired"
-    # materialize before the caller's comparison so the snapshot dir can
-    # be cleaned up by later runs without invalidating the result
-    final = spark.read.parquet(snap["path"])
-    return final
+    return spark.read.parquet(snap["path"])
+
+
+def _sum_cnt(*keys: str) -> Callable[[DataFrame, DataFrame], DataFrame]:
+    """Merge of count partials: sum ``cnt`` per ``keys``."""
+    return lambda cur, part: (
+        cur.unionAll(part).groupBy(*keys).agg(F.sum("cnt").cast("long").alias("cnt"))
+    )
+
+
+def upsert_sink_run(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """foreachBatch MERGE-upsert mirror of x_stream_upsert_sink — the
+    21st executed streaming equality (tests/test_streaming.py), and
+    the only one exercising the foreachBatch SINK surface: the events
+    stream drains through four micro-batches (_fold_stream); each
+    batch folds its purchases with the batch key's own
+    upsert_profile_fold and MERGEs into the versioned parquet snapshot
+    via upsert_profile_merge (the Delta-less MERGE INTO pattern).
+    Associativity of the fold monoid is the equality argument: any
+    batch split reproduces the one-shot batch fold.
+
+    Returns the final snapshot as a batch DataFrame."""
+    from ..operators.streaming_batch import (
+        upsert_profile_deltas,
+        upsert_profile_fold,
+        upsert_profile_merge,
+    )
+
+    return _fold_stream(
+        spark,
+        sf_dir,
+        "events",
+        "upsert",
+        _with_ts,
+        lambda batch: upsert_profile_fold(upsert_profile_deltas(batch)),
+        upsert_profile_merge,
+    )
 
 
 MIRRORS["x_stream_upsert_sink"] = upsert_sink_run  # foreachBatch runner form
@@ -970,90 +967,32 @@ MIRRORS["x_stream_upsert_sink"] = upsert_sink_run  # foreachBatch runner form
 def hdr_sketch_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch HDR-sketch merge mirror of x_agg_hdr_quantiles —
     the 22nd executed streaming equality, and the one that executes the
-    sketch ALGEBRA incrementally: the orders table is staged into FOUR
-    parquet files and consumed with maxFilesPerTrigger=1, so
-    availableNow drains through four real micro-batches; each batch
-    computes its own partial histogram (prio, b, sub, cnt) with
-    operators/aggregates.hdr_histogram, and foreachBatch MERGES it into
-    a versioned parquet sketch snapshot by summing bucket counts
-    (write-new-then-swap, the x_stream_upsert_sink pattern).  After the
-    drain, hdr_quantiles derives p50/p95/p99 from the merged sketch —
-    equal to the batch key's one-shot answer because bucket counts form
-    a commutative monoid under addition, whatever the batch split.
+    sketch ALGEBRA incrementally: the orders table drains through four
+    micro-batches (_fold_stream); each batch computes its own partial
+    histogram (prio, b, sub, cnt) with operators/aggregates.hdr_histogram,
+    and foreachBatch MERGES it into the versioned parquet sketch
+    snapshot by summing bucket counts.  After the drain, hdr_quantiles
+    derives p50/p95/p99 from the merged sketch — equal to the batch
+    key's one-shot answer because bucket counts form a commutative
+    monoid under addition, whatever the batch split.
 
     This is the production shape for streaming percentile dashboards:
     per-batch state is k-bounded (<=1024 buckets per group), the merge
     is associative so late/replayed batches fold in identically, and
     nothing ever sorts or retains the raw stream."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as FF
-
-    from ..functions.staging import fingerprinted_dir
     from ..operators.aggregates import hdr_histogram, hdr_quantiles
 
-    configure(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cents = (F.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
+    sketch = _fold_stream(
+        spark,
+        sf_dir,
+        "orders",
+        "hdr",
+        lambda orders: orders.select(F.col("o_orderpriority").alias("prio"), cents.alias("cents")),
+        hdr_histogram,
+        _sum_cnt("prio", "b", "sub"),
     )
-    scratch = os.path.join(repo_root, ".scratch")
-    src = os.path.join(sf_dir, "orders.parquet")
-    tag = f"hdr_src_{os.path.basename(sf_dir.rstrip('/'))}"
-    stage = fingerprinted_dir(scratch, tag, src)
-    marker = os.path.join(stage, "_staged_4way")
-    if not os.path.exists(marker):
-        os.makedirs(stage, exist_ok=True)
-        spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(
-            stage
-        )
-        open(marker, "w").close()
-    raw_schema = read_parquet(spark, stage).schema
-    orders = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    cents = (FF.col("o_totalprice").cast("decimal(18,2)") * 100).cast("long")
-    stream = orders.select(
-        FF.col("o_orderpriority").alias("prio"), cents.alias("cents")
-    )
-
-    out_root = os.path.join(scratch, f"hdr_snap_{os.getpid()}")
-    shutil.rmtree(out_root, ignore_errors=True)
-    os.makedirs(out_root, exist_ok=True)
-    snap = {"path": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = hdr_histogram(batch_df)
-        if snap["path"] is not None:
-            cur = spark.read.parquet(snap["path"])
-            part = (
-                cur.unionAll(part)
-                .groupBy("prio", "b", "sub")
-                .agg(FF.sum("cnt").cast("long").alias("cnt"))
-            )
-        new_path = os.path.join(out_root, f"v{batch_id}")
-        part.write.mode("overwrite").parquet(new_path)
-        old = snap["path"]
-        snap["path"] = new_path
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(out_root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("HDR sketch mirror did not drain within 300s")
-    finally:
-        q.stop()
-    assert snap["path"] is not None, "no micro-batch ever fired"
-    return hdr_quantiles(spark, spark.read.parquet(snap["path"]))
+    return hdr_quantiles(spark, sketch)
 
 
 MIRRORS["x_agg_hdr_quantiles"] = hdr_sketch_stream_run  # foreachBatch runner
@@ -1062,89 +1001,31 @@ MIRRORS["x_agg_hdr_quantiles"] = hdr_sketch_stream_run  # foreachBatch runner
 def decay_counter_stream_run(spark: SparkSession, sf_dir: str) -> DataFrame:
     """foreachBatch decayed-counter merge mirror of x_agg_decay_topk —
     the 23rd executed streaming equality, driving the decay algebra
-    through IncrementalExecution: the events table is staged into FOUR
-    parquet files and drained with maxFilesPerTrigger=1 under
-    availableNow, each micro-batch computes its own per-(user, day)
-    count partial (operators/aggregates.decay_day_counts), and
-    foreachBatch MERGES it into a versioned parquet snapshot by
-    summing counts (write-new-then-swap, the x_stream_upsert_sink
-    pattern).  After the drain, decay_topk_from_counts derives the
-    decayed scores and top-20 rank from the merged day counts — equal
-    to the batch key's one-shot answer because day counts form a
+    through IncrementalExecution: the events table drains through four
+    micro-batches (_fold_stream), each micro-batch computes its own
+    per-(user, day) count partial (operators/aggregates.decay_day_counts),
+    and foreachBatch MERGES it into the versioned parquet snapshot by
+    summing counts.  After the drain, decay_topk_from_counts derives
+    the decayed scores and top-20 rank from the merged day counts —
+    equal to the batch key's one-shot answer because day counts form a
     commutative monoid under addition, whatever the batch split.
 
     This is the production trending-counter shape: per-key state is
     bounded (<= K+1 live day buckets per user after vacuuming expired
     days), the merge is associative so late/replayed batches fold in
     identically, and the raw stream is never retained."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as FF
-
-    from ..functions.staging import fingerprinted_dir
     from ..operators.aggregates import decay_day_counts, decay_topk_from_counts
 
-    configure(spark)
-    repo_root = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    counts = _fold_stream(
+        spark,
+        sf_dir,
+        "events",
+        "decay",
+        lambda events: _with_ts(events).select("user_id", F.unix_micros("ts").alias("us")),
+        decay_day_counts,
+        _sum_cnt("user_id", "day"),
     )
-    scratch = os.path.join(repo_root, ".scratch")
-    src = os.path.join(sf_dir, "events.parquet")
-    tag = f"decay_src_{os.path.basename(sf_dir.rstrip('/'))}"
-    stage = fingerprinted_dir(scratch, tag, src)
-    marker = os.path.join(stage, "_staged_4way")
-    if not os.path.exists(marker):
-        os.makedirs(stage, exist_ok=True)
-        spark.read.parquet(src).repartition(4).write.mode("overwrite").parquet(
-            stage
-        )
-        open(marker, "w").close()
-    raw_schema = read_parquet(spark, stage).schema
-    events = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(stage)
-    )
-    stream = events.select(
-        "user_id", FF.unix_micros(FF.col("ts").cast("timestamp")).alias("us")
-    )
-
-    out_root = os.path.join(scratch, f"decay_snap_{os.getpid()}")
-    shutil.rmtree(out_root, ignore_errors=True)
-    os.makedirs(out_root, exist_ok=True)
-    snap = {"path": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        part = decay_day_counts(batch_df)
-        if snap["path"] is not None:
-            cur = spark.read.parquet(snap["path"])
-            part = (
-                cur.unionAll(part)
-                .groupBy("user_id", "day")
-                .agg(FF.sum("cnt").cast("long").alias("cnt"))
-            )
-        new_path = os.path.join(out_root, f"v{batch_id}")
-        part.write.mode("overwrite").parquet(new_path)
-        old = snap["path"]
-        snap["path"] = new_path
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(out_root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        if not q.awaitTermination(300):
-            raise TimeoutError("decay counter mirror did not drain within 300s")
-    finally:
-        q.stop()
-    assert snap["path"] is not None, "no micro-batch ever fired"
-    return decay_topk_from_counts(spark.read.parquet(snap["path"]))
+    return decay_topk_from_counts(counts)
 
 
 MIRRORS["x_agg_decay_topk"] = decay_counter_stream_run  # foreachBatch runner

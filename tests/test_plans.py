@@ -559,19 +559,12 @@ def test_backfill_touches_only_the_corrected_partition(spark):
     year was rewritten."""
     import os
 
-    from hbasemapreduce_spark.operators.scans import (
-        _SCRATCH,
-        _write_partitioned_orders,
-    )
-    from hbasemapreduce_spark.functions.staging import source_ident
+    from hbasemapreduce_spark.operators.scans import _write_partitioned_orders
+    from hbasemapreduce_spark.functions.staging import sink_dir
     from hbasemapreduce_spark.catalog import load_table
 
     orders = load_table(spark, SF_DIR, "orders")
-    out = os.path.join(
-        _SCRATCH,
-        f"backfill_test_{os.path.basename(SF_DIR.rstrip('/'))}_"
-        f"{source_ident(os.path.join(SF_DIR, 'orders.parquet'))}",
-    )
+    out = sink_dir("backfill_test", os.path.join(SF_DIR, "orders.parquet"))
     _write_partitioned_orders(orders, out)
 
     def snapshot():
@@ -741,9 +734,9 @@ def test_partition_evolution_prunes_both_levels(spark):
     p = plan_of(spark, "x_etl_partition_evolution")
     pf = [ln for ln in p.splitlines() if "PartitionFilters" in ln]
     assert pf and "o_year" in pf[0] and "1997" in pf[0]
-    from hbasemapreduce_spark.operators.scans import _SCRATCH
+    from hbasemapreduce_spark.functions.staging import SCRATCH
 
-    dirs = glob.glob(os.path.join(_SCRATCH, "part_evo_*", "o_year=1997", "o_month=*"))
+    dirs = glob.glob(os.path.join(SCRATCH, "part_evo_*", "o_year=1997", "o_month=*"))
     assert len(dirs) >= 2, "month-level directories missing"
 
 

@@ -5,21 +5,32 @@ effects — a concurrent reader of the old version must never lose its
 input just because another session computed the new path), and
 ``prune_superseded`` must remove only AGED superseded versions of the
 same (tag, identity), never the current version, never another tag or
-source.  ``catalog.read_parquet``'s schema cache must never serve a
-schema for a file version or a path list it was not inferred from.
+source.  ``staged`` writes once per source version, marks a directory
+complete only after its write returns, and prunes only after marking;
+``sink_dir`` keys on the source's full path.  No module but
+``functions/staging.py`` builds a scratch path or a staging marker.
+``catalog.read_parquet``'s schema cache must never serve a schema for a
+file version or a path list it was not inferred from.
 """
 
 from __future__ import annotations
 
+import ast
 import os
 import time
+from pathlib import Path
+
+import pytest
 
 from hbasemapreduce_spark import catalog
 from hbasemapreduce_spark.catalog import read_parquet
+from hbasemapreduce_spark.functions import staging
 from hbasemapreduce_spark.functions.staging import (
     fingerprinted_dir,
     prune_superseded,
+    sink_dir,
     source_ident,
+    staged,
 )
 
 
@@ -89,6 +100,120 @@ def test_version_change_renames_dir(tmp_path):
     src.write_bytes(b"v2-longer")  # new mtime+size -> new version
     d2 = fingerprinted_dir(str(scratch), "tag", str(src))
     assert d1 != d2
+
+
+@pytest.fixture
+def scratch(tmp_path, monkeypatch):
+    root = tmp_path / "scratch"
+    monkeypatch.setattr(staging, "SCRATCH", str(root))
+    return root
+
+
+def test_staged_writes_once_then_serves_the_marked_dir(tmp_path, scratch):
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"v1")
+    calls = []
+
+    def write(d):
+        calls.append(d)
+        _mk(d)
+
+    first = staged("tag", str(src), write)
+    second = staged("tag", str(src), write)
+    assert first == second == fingerprinted_dir(str(scratch), "tag", str(src))
+    assert calls == [first]
+    assert os.path.exists(os.path.join(first, staging.MARKER))
+
+
+def test_staged_failed_write_leaves_no_marker(tmp_path, scratch):
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"v1")
+    out = fingerprinted_dir(str(scratch), "tag", str(src))
+
+    def boom(d):
+        _mk(d)  # a partial copy on disk
+        raise RuntimeError("writer died")
+
+    with pytest.raises(RuntimeError):
+        staged("tag", str(src), boom)
+    assert not os.path.exists(os.path.join(out, staging.MARKER))
+    calls = []
+    assert staged("tag", str(src), calls.append) == out
+    assert calls == [out]  # the partial copy is rewritten, not served
+
+
+def test_staged_prunes_superseded_only_after_marking(tmp_path, scratch):
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"v1")
+    old_version = scratch / f"tag_{source_ident(str(src))}_0123456789"
+    _mk(str(old_version))
+    _age(str(old_version), 3600)  # past the grace window
+
+    def boom(d):
+        raise RuntimeError("writer died")
+
+    with pytest.raises(RuntimeError):
+        staged("tag", str(src), boom)
+    assert old_version.exists()  # new version never marked: old one kept
+    seen = []
+    staged("tag", str(src), lambda d: seen.append(old_version.exists()))
+    assert seen == [True]  # still there while the new version is written
+    assert not old_version.exists()  # and pruned once it is marked
+
+
+def test_sink_dir_keys_on_the_full_source_path(tmp_path, scratch):
+    # same file name and same scale-dir basename, different checkouts
+    a = tmp_path / "a" / "sf0.01" / "orders.parquet"
+    b = tmp_path / "b" / "sf0.01" / "orders.parquet"
+    da, db = sink_dir("sink", str(a)), sink_dir("sink", str(b))
+    assert da != db
+    assert os.path.dirname(da) == os.path.dirname(db) == str(scratch)
+    assert sink_dir("sink", str(a)) == da  # stable across calls
+
+
+# string constants that name a scratch root or a completion marker
+_STAGING_STRINGS = (".scratch", "_SUCCESS", "_evolved", "_staged_4way")
+# helpers only staging.py itself may use
+_STAGING_NAMES = {"fingerprinted_dir", "prune_superseded", "repo_root"}
+
+
+def _staging_idiom_uses(path: Path) -> list[str]:
+    tree = ast.parse(path.read_text())
+    docstrings = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if id(node) not in docstrings:
+                hits = [s for s in _STAGING_STRINGS if s in node.value]
+                found += [f"{path}:{node.lineno} {s!r}" for s in hits]
+        elif isinstance(node, ast.Name) and node.id in _STAGING_NAMES:
+            found.append(f"{path}:{node.lineno} {node.id}")
+        elif isinstance(node, ast.alias) and node.name in _STAGING_NAMES:
+            found.append(f"{path}:{node.lineno} import {node.name}")
+    return found
+
+
+def test_only_staging_module_owns_scratch():
+    # One copy of the stage-if-missing idiom: any other module that
+    # builds a .scratch path or keeps its own marker goes through
+    # functions/staging.py instead.
+    pkg = Path(staging.__file__).resolve().parents[1]
+    own = Path(staging.__file__).resolve()
+    found = [
+        use
+        for path in sorted(pkg.rglob("*.py"))
+        if path.resolve() != own
+        for use in _staging_idiom_uses(path)
+    ]
+    assert found == [], found
+    assert _staging_idiom_uses(own)  # the scan does see the idiom where it lives
 
 
 def test_read_parquet_rereads_a_rewritten_file(spark, tmp_path):
