@@ -76,7 +76,6 @@ def brute_force_topk(
 _XXH_P1 = 0x9E3779B185EBCA87
 _XXH_P2 = 0xC2B2AE3D27D4EB4F
 _XXH_P3 = 0x165667B19E3779F9
-_XXH_P4 = 0x85EBCA77C2B2AE63
 _XXH_P5 = 0x27D4EB2F165667C5
 _M64 = (1 << 64) - 1
 

@@ -184,9 +184,12 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-value ``label`` column, which made within-block pair generation
     O(n²/10) at 100 TB).  Candidates come from
     :func:`..llm_similarity.ivf_candidate_pairs`: a pair qualifies iff
-    either end probes the other end's home list (nprobe=7 of nlist =
-    ceil(n/25) trained lists), so per-vector candidate fan-out is
-    bounded by list occupancy (~25 × nprobe) at ANY corpus size.  Exact
+    either end probes the other end's home list (nprobe =
+    max(7, ceil(2·sqrt(nlist))) of nlist = ceil(n/25) trained lists;
+    the rule and its measurements are stated once, at
+    ``llm_similarity._PAIR_PROBES_SQL``), so per-vector candidate
+    fan-out is bounded by list occupancy (~25 × nprobe) at ANY corpus
+    size.  Exact
     float64 rerank on survivors, sim rounded to 6 dp, raw-threshold
     0.4 — same output contract as the label-blocked original; the
     oracle computes the identical trained quantizer + probe rule in

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import configure, load_table, read_parquet
-from ..functions.staging import SCRATCH, staged
+from ..functions.staging import sink_dir, staged
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -883,7 +883,10 @@ def _fold_stream(
     ``project``-ed stream) is folded into a versioned parquet snapshot
     with ``merge(current, partial)``, written new and then swapped in:
     readers never see a half-merged table.  Returns the final snapshot
-    as a batch DataFrame; the runner applies its finish step."""
+    as a batch DataFrame; the runner applies its finish step.  The
+    snapshot dir is keyed on (``name``, source) and cleared by every
+    call, so a later call on the same source invalidates the frame an
+    earlier one returned."""
     configure(spark)
     src = os.path.join(sf_dir, f"{table}.parquet")
     stage = staged(
@@ -898,7 +901,7 @@ def _fold_stream(
         .load(stage)
     )
 
-    out_root = os.path.join(SCRATCH, f"{name}_snap_{os.getpid()}")
+    out_root = sink_dir(f"{name}_snap", src)
     shutil.rmtree(out_root, ignore_errors=True)
     os.makedirs(out_root, exist_ok=True)
     snap = {"path": None}

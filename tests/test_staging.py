@@ -173,8 +173,8 @@ def test_sink_dir_keys_on_the_full_source_path(tmp_path, scratch):
 
 # string constants that name a scratch root or a completion marker
 _STAGING_STRINGS = (".scratch", "_SUCCESS", "_evolved", "_staged_4way")
-# helpers only staging.py itself may use
-_STAGING_NAMES = {"fingerprinted_dir", "prune_superseded", "repo_root"}
+# the scratch root and the helpers only staging.py itself may use
+_STAGING_NAMES = {"SCRATCH", "fingerprinted_dir", "prune_superseded", "repo_root"}
 
 
 def _staging_idiom_uses(path: Path) -> list[str]:

@@ -4,6 +4,8 @@ and (where the sink mode allows a full view) agree with the batch twin.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hbasemapreduce_spark.registry import all_specs
@@ -364,6 +366,19 @@ def test_stream_upsert_foreachbatch_matches_batch(spark):
     g = sorted(map(tuple, got.collect()))
     b = sorted(map(tuple, want.collect()))
     assert g == b and len(g) > 0
+
+
+def test_fold_mirror_leaves_no_per_process_snapshot_dir(spark):
+    """The fold mirrors' snapshot root is keyed on (mirror, source), not
+    on the process: a per-pid dir would be left behind by every process
+    that ran a mirror."""
+    import glob
+
+    from hbasemapreduce_spark.functions.staging import SCRATCH
+    from hbasemapreduce_spark.streaming.mirrors import upsert_sink_run
+
+    upsert_sink_run(spark, SF_DIR).collect()
+    assert glob.glob(os.path.join(SCRATCH, f"*_snap_{os.getpid()}")) == []
 
 
 def test_hdr_sketch_foreachbatch_matches_batch(spark):
