@@ -18,7 +18,10 @@ Layout:
     operators/  one module per SURVEY.md §2 category; each query is a
                 pure function (spark, sf_dir) -> DataFrame
     functions/  reusable operator building blocks (as-of join,
-                sessionize, minhash, cosine top-k, determinism helpers)
+                sessionize, minhash, cosine top-k, determinism: the
+                decimal sandwich and the engine-portable hashes KNUTH
+                and the md5-hex parse hex_int / hex_int_sql /
+                hex_int_duck / hex_digit_duck)
     streaming/  Structured Streaming mirrors of §2.8 batch queries
 """
 

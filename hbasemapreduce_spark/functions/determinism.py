@@ -16,6 +16,24 @@ partition count — i.e., at 1000 executors as much as at local[32].
 
 Timestamps never appear raw in checked output (pandas dtype drift
 between engines); use :func:`fmt_date` / epoch-second bigints instead.
+
+Hashes that both engines must compute bit for bit are spelled here and
+nowhere else, one spelling per engine:
+
+- md5 hex digits parsed base-16 (:func:`hex_int` as a Spark Column,
+  :func:`hex_int_sql` as Spark SQL text, :func:`hex_int_duck` and
+  :func:`hex_digit_duck` as DuckDB text — DuckDB has no base-16
+  ``conv``, so its spelling sums the digits).  Use md5 wherever two
+  draws of one key must be independent (sketch hashes, noise, LSH
+  permutations): it mixes all bits, the low ones included.
+- :data:`KNUTH`, the multiplicative hash ``(key * KNUTH) % m``, only
+  for splits of integer keys (train/holdout, A/B variants, shards,
+  fixed-rate samples): plain bigint arithmetic, uncorrelated with key
+  order, and ``key * KNUTH`` stays far below 2^63 at any realistic id
+  range.  An odd multiplier preserves the key's 2-adic valuation (its
+  trailing zero bits), so two Knuth "draws" of one key are not
+  independent: a noise difference built from them cancels to exactly
+  zero.
 """
 
 from __future__ import annotations
@@ -106,3 +124,34 @@ def srm_chi2_micro() -> Column:
         "CAST(CAST(1000000 AS DECIMAL(38,0)) * (obs_a - obs_b) "
         "* (obs_a - obs_b) DIV (obs_a + obs_b) AS BIGINT)"
     )
+
+
+# -- engine-portable hashes ----------------------------------------------
+
+KNUTH = 2654435761
+
+_HEX_DIGITS = "0123456789abcdef"
+
+
+def hex_int(col: Column | str, start: int, n: int) -> Column:
+    """``n`` hex digits of ``col`` from 1-based ``start`` as a bigint."""
+    return F.conv(F.substring(col, start, n), 16, 10).cast("long")
+
+
+def hex_int_sql(expr: str, start: int | str, n: int) -> str:
+    """Spark SQL twin of :func:`hex_int`; ``start`` may be SQL text."""
+    return f"CAST(conv(substring({expr}, {start}, {n}), 16, 10) AS BIGINT)"
+
+
+def hex_digit_duck(expr: str, pos: int | str) -> str:
+    """DuckDB: the hex digit of ``expr`` at 1-based ``pos`` (an int or
+    SQL text) as an integer 0-15."""
+    return f"(strpos('{_HEX_DIGITS}', substr({expr}, {pos}, 1)) - 1)"
+
+
+def hex_int_duck(expr: str, start: int, n: int) -> str:
+    """DuckDB twin of :func:`hex_int`: the digits as a weighted sum."""
+    terms = " + ".join(
+        f"{hex_digit_duck(expr, start + i)} * {16 ** (n - 1 - i)}" for i in range(n)
+    )
+    return f"CAST({terms} AS BIGINT)"

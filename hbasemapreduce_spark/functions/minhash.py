@@ -67,10 +67,8 @@ anomalously and every corpus-sized stage is a single codegen'd pass.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .sqlbuild import sql_over
 
 
 def expand_bag(
@@ -177,7 +175,8 @@ def minhash_pairs_from_occurrences(
     occ = occ.localCheckpoint(eager=False)
     # r12 build-cost optimization: the signature aggregate (n_hashes min
     # accumulators), band projection, candidate self-join and verify are
-    # each ONE spark.sql call over transient views (sqlbuild.sql_over) —
+    # each ONE spark.sql call over its input DataFrames (passed as
+    # keyword arguments, registered as temp views for that call) —
     # identical operator trees to the former DataFrame-API chain (same
     # expressions, proven A/B bit-identical), but parsed+analyzed once
     # per stage instead of re-analyzed on every intermediate DataFrame.
@@ -198,7 +197,8 @@ def minhash_pairs_from_occurrences(
         )
         for b in range(n_bands)
     )
-    banded_slim = sql_over(
+    spark = occ.sparkSession
+    banded_slim = spark.sql(
         f"SELECT id, n, bd.band AS band, bd.bh AS bh "
         f"FROM (SELECT id, {mins}, COUNT(*) AS n FROM {{occ}} GROUP BY id) "
         f"LATERAL VIEW explode(array({band_structs})) t AS bd",
@@ -214,7 +214,7 @@ def minhash_pairs_from_occurrences(
     # antitone in the denominator, so bound >= J for every candidate —
     # dropping pairs with bound < t is lossless even at the float
     # boundary.
-    cand = sql_over(
+    cand = spark.sql(
         "SELECT DISTINCT a.id AS id_a, b.id AS id_b "
         "FROM {banded} a JOIN {banded} b "
         "ON a.band = b.band AND a.bh = b.bh AND a.id < b.id "
@@ -228,14 +228,14 @@ def minhash_pairs_from_occurrences(
     # explode (not a two-branch union) keeps cand referenced once here;
     # referenced by both the id_a and id_b joins below — without the
     # checkpoint each side re-scans the corpus-sized occ relation.
-    cand_sets = sql_over(
+    cand_sets = spark.sql(
         "SELECT o.id, collect_list(o.h) AS hs FROM {occ} o "
         "LEFT SEMI JOIN (SELECT explode(array(id_a, id_b)) AS id "
         "FROM {cand}) c ON o.id = c.id GROUP BY o.id",
         occ=occ,
         cand=cand,
     ).localCheckpoint(eager=False)
-    return sql_over(
+    return spark.sql(
         "SELECT id_a, id_b, CAST(inter AS DOUBLE) / CAST(sa + sb - inter AS DOUBLE) AS jaccard "
         "FROM (SELECT c.id_a, c.id_b, "
         "  size(array_intersect(a.hs, b.hs)) AS inter, "
@@ -266,9 +266,9 @@ def simhash_signatures(
     Integer sums are exact and order-independent -> the fingerprint is
     identical at any partition count.
     """
-    # r12 build-cost optimization: one sql_over call per stage in place
+    # r12 build-cost optimization: one spark.sql call per stage in place
     # of the 64-accumulator agg + 64-term OR chain built column-by-column
-    # (identical expressions, A/B-proven bit-identical; see sqlbuild.py).
+    # (identical expressions, A/B-proven bit-identical).
     exploded = df.select(F.col(id_col).alias("id"), F.explode(items_col).alias("item")).select(
         "id", F.xxhash64("item").alias("h")
     )
@@ -284,7 +284,7 @@ def simhash_signatures(
         )
         for j in range(64)
     )
-    return sql_over(
+    return exploded.sparkSession.sql(
         f"SELECT id, {terms} AS sh "
         f"FROM (SELECT id, {sums_sql} FROM {{ex}} GROUP BY id)",
         ex=exploded,
@@ -322,11 +322,11 @@ def simhash_pairs(
         # pipeline from executing twice (same fix as minhash_pairs)
         .localCheckpoint(eager=False)
     )
-    # Candidate self-join + hamming verify as one sql_over call (r12
+    # Candidate self-join + hamming verify as one spark.sql call (r12
     # build-cost optimization; sh is functionally dependent on id, so
     # DISTINCT over all four columns equals the former
     # dropDuplicates([id_a, id_b])).
-    return sql_over(
+    return banded.sparkSession.sql(
         "SELECT id_a, id_b, CAST(bit_count(sh_a ^ sh_b) AS BIGINT) AS hamming "
         "FROM (SELECT DISTINCT a.id AS id_a, b.id AS id_b, "
         "  a.sh AS sh_a, b.sh AS sh_b "

@@ -19,7 +19,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, load_tables
-from ..functions.determinism import dec_avg, dec_sum, split_sum_parts, split_sum_total
+from ..functions.determinism import (
+    KNUTH,
+    dec_sum,
+    hex_int,
+    hex_int_duck,
+    split_sum_parts,
+    split_sum_total,
+)
 from ..registry import query
 
 
@@ -177,24 +184,13 @@ _KMV_K = 64  # sketch size; relative error ~ 1/sqrt(k) ~ 12%
 _KMV_DOMAIN = 1 << 48  # 12 hex chars of md5
 
 
-def _kmv_hex12_duck(expr: str) -> str:
-    """12 hex chars of ``expr`` parsed to BIGINT in DuckDB (no base-16
-    conv(): spell out the digits, same trick as x_filter_bloom)."""
-    terms = " + ".join(
-        f"(strpos('0123456789abcdef', substr({expr}, {1 + i}, 1)) - 1) "
-        f"* {16 ** (11 - i)}"
-        for i in range(12)
-    )
-    return "CAST(" + terms + " AS BIGINT)"
-
-
 @query(
     "x_agg_distinct_kmv",
     category="agg",
     oracle=(
         "WITH d AS (SELECT DISTINCT l_returnflag AS grp, l_partkey FROM lineitem), "
         "hd AS (SELECT DISTINCT grp, "
-        f"  {_kmv_hex12_duck('md5(CAST(l_partkey AS VARCHAR))')} AS h FROM d), "
+        f"  {hex_int_duck('md5(CAST(l_partkey AS VARCHAR))', 1, 12)} AS h FROM d), "
         "rk AS (SELECT grp, h, row_number() OVER ("
         "  PARTITION BY grp ORDER BY h) AS rn FROM hd), "
         f"kth AS (SELECT grp, MAX(CASE WHEN rn = {_KMV_K} THEN h END) AS h_k, "
@@ -232,9 +228,7 @@ def agg_distinct_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hd = d.select(
         "grp",
-        F.conv(F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("h"),
+        hex_int(F.md5(F.col("l_partkey").cast("string")), 1, 12).alias("h"),
     ).distinct()
     w = Window.partitionBy("grp").orderBy("h")
     kth = (
@@ -377,7 +371,7 @@ _QBK_K = 128  # bottom-k sample size; quantile rank error ~ 1/sqrt(k)
         "  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
         "  FROM events), "
         "h AS (SELECT grp, event_id, cents, "
-        f"  {_kmv_hex12_duck('md5(CAST(event_id AS VARCHAR))')} AS hh FROM e), "
+        f"  {hex_int_duck('md5(CAST(event_id AS VARCHAR))', 1, 12)} AS hh FROM e), "
         "rk AS (SELECT grp, event_id, cents, row_number() OVER ("
         "  PARTITION BY grp ORDER BY hh, event_id) AS rn FROM h), "
         f"samp AS (SELECT grp, event_id, cents FROM rk WHERE rn <= {_QBK_K}), "
@@ -431,9 +425,7 @@ def agg_quantile_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "grp",
         "event_id",
         "cents",
-        F.conv(F.substring(F.md5(F.col("event_id").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("hh"),
+        hex_int(F.md5(F.col("event_id").cast("string")), 1, 12).alias("hh"),
     )
     ws = Window.partitionBy("grp").orderBy("hh", "event_id")
     samp = (
@@ -497,7 +489,7 @@ def agg_quantile_bottomk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # match IS the proof of the KMV merge identity.
         "WITH d AS (SELECT DISTINCT l_partkey FROM lineitem), "
         "hd AS (SELECT DISTINCT "
-        f"  {_kmv_hex12_duck('md5(CAST(l_partkey AS VARCHAR))')} AS h FROM d), "
+        f"  {hex_int_duck('md5(CAST(l_partkey AS VARCHAR))', 1, 12)} AS h FROM d), "
         "rk AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM hd), "
         f"kth AS (SELECT MAX(CASE WHEN rn = {_KMV_K} THEN h END) AS h_k, "
         f"  CAST(COUNT(*) AS BIGINT) AS n_sketch FROM rk WHERE rn <= {_KMV_K}), "
@@ -536,9 +528,7 @@ def agg_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     hd = li.select(
         F.col("l_returnflag").alias("shard"),
-        F.conv(F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 12), 16, 10)
-        .cast("long")
-        .alias("h"),
+        hex_int(F.md5(F.col("l_partkey").cast("string")), 1, 12).alias("h"),
     ).distinct()
     # n_true counts distinct KEYS (pre-hash), matching the oracle's
     # COUNT(*) over distinct l_partkey — counting distinct hashes
@@ -586,6 +576,52 @@ def agg_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Shared by the KMV intersect and difference keys: each side's distinct
+# hash set (A and R return flags) and theta, the k-th smallest hash of
+# their union, with the union sketch's size.
+_KMV_THETA_SQL = (
+    "WITH a AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
+    "  WHERE l_returnflag = 'A'), "
+    "b AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
+    "  WHERE l_returnflag = 'R'), "
+    f"ha AS (SELECT DISTINCT {hex_int_duck('md5(CAST(k AS VARCHAR))', 1, 12)} "
+    "  AS h FROM a), "
+    f"hb AS (SELECT DISTINCT {hex_int_duck('md5(CAST(k AS VARCHAR))', 1, 12)} "
+    "  AS h FROM b), "
+    "u AS (SELECT h FROM ha UNION SELECT h FROM hb), "
+    "rk AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM u), "
+    f"th AS (SELECT MAX(h) AS theta, CAST(COUNT(*) AS BIGINT) AS n_union_sk "
+    f"  FROM rk WHERE rn <= {_KMV_K}), "
+)
+
+
+def _kmv_theta(li: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Spark twin of _KMV_THETA_SQL: (ha, hb, th)."""
+
+    def side(flag: str) -> DataFrame:
+        return (
+            li.filter(F.col("l_returnflag") == flag)
+            .select("l_partkey")
+            .distinct()
+            .select(hex_int(F.md5(F.col("l_partkey").cast("string")), 1, 12).alias("h"))
+            .distinct()
+        )
+
+    ha = side("A").localCheckpoint(eager=False)
+    hb = side("R").localCheckpoint(eager=False)
+    th = (
+        ha.unionByName(hb)
+        .distinct()
+        .select("h", F.row_number().over(Window.orderBy("h")).alias("rn"))
+        .filter(F.col("rn") <= _KMV_K)
+        .agg(
+            F.max("h").alias("theta"),
+            F.count("*").cast("long").alias("n_union_sk"),
+        )
+    )
+    return ha, hb, th
+
+
 @query(
     "x_agg_kmv_intersect",
     category="agg",
@@ -594,19 +630,8 @@ def agg_kmv_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         # distinct hash sets, union bottom-k and its theta, the common
         # hashes below theta, and the exact true intersection riding
         # along for the error-visibility column.
-        "WITH a AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
-        "  WHERE l_returnflag = 'A'), "
-        "b AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
-        "  WHERE l_returnflag = 'R'), "
-        f"ha AS (SELECT DISTINCT {_kmv_hex12_duck('md5(CAST(k AS VARCHAR))')} "
-        "  AS h FROM a), "
-        f"hb AS (SELECT DISTINCT {_kmv_hex12_duck('md5(CAST(k AS VARCHAR))')} "
-        "  AS h FROM b), "
-        "u AS (SELECT h FROM ha UNION SELECT h FROM hb), "
-        "rk AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM u), "
-        f"th AS (SELECT MAX(h) AS theta, CAST(COUNT(*) AS BIGINT) AS n_union_sk "
-        f"  FROM rk WHERE rn <= {_KMV_K}), "
-        "com AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_common "
+        _KMV_THETA_SQL
+        + "com AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_common "
         "  FROM ha JOIN hb USING (h) CROSS JOIN th WHERE ha.h <= th.theta), "
         "tru AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true_inter "
         "  FROM a JOIN b USING (k)), "
@@ -644,36 +669,7 @@ def agg_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a k-bounded hash equi-join — nothing corpus x corpus; the
     1-row theta scalar broadcasts."""
     li = load_table(spark, sf_dir, "lineitem")
-
-    def side(flag: str) -> DataFrame:
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .select("l_partkey")
-            .distinct()
-            .select(
-                F.conv(
-                    F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 12),
-                    16,
-                    10,
-                )
-                .cast("long")
-                .alias("h")
-            )
-            .distinct()
-        )
-
-    ha = side("A").localCheckpoint(eager=False)
-    hb = side("R").localCheckpoint(eager=False)
-    u = ha.unionByName(hb).distinct()
-    w = Window.orderBy("h")
-    th = (
-        u.select("h", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= _KMV_K)
-        .agg(
-            F.max("h").alias("theta"),
-            F.count("*").cast("long").alias("n_union_sk"),
-        )
-    )
+    ha, hb, th = _kmv_theta(li)
     com = (
         ha.join(hb, "h")
         .crossJoin(F.broadcast(th.select("theta")))
@@ -714,19 +710,8 @@ def agg_kmv_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_agg_kmv_difference",
     category="agg",
     oracle=(
-        "WITH a AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
-        "  WHERE l_returnflag = 'A'), "
-        "b AS (SELECT DISTINCT l_partkey AS k FROM lineitem "
-        "  WHERE l_returnflag = 'R'), "
-        f"ha AS (SELECT DISTINCT {_kmv_hex12_duck('md5(CAST(k AS VARCHAR))')} "
-        "  AS h FROM a), "
-        f"hb AS (SELECT DISTINCT {_kmv_hex12_duck('md5(CAST(k AS VARCHAR))')} "
-        "  AS h FROM b), "
-        "u AS (SELECT h FROM ha UNION SELECT h FROM hb), "
-        "rk AS (SELECT h, row_number() OVER (ORDER BY h) AS rn FROM u), "
-        f"th AS (SELECT MAX(h) AS theta, CAST(COUNT(*) AS BIGINT) AS n_union_sk "
-        f"  FROM rk WHERE rn <= {_KMV_K}), "
-        "onl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_only "
+        _KMV_THETA_SQL
+        + "onl AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_only "
         "  FROM ha CROSS JOIN th WHERE ha.h <= th.theta "
         "  AND NOT EXISTS (SELECT 1 FROM hb WHERE hb.h = ha.h)), "
         "tru AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_true_diff FROM a "
@@ -761,36 +746,7 @@ def agg_kmv_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
     bottom-k window per side, a |2k|-row union window, one k-bounded
     anti-join; the 1-row theta scalar broadcasts."""
     li = load_table(spark, sf_dir, "lineitem")
-
-    def side(flag: str) -> DataFrame:
-        return (
-            li.filter(F.col("l_returnflag") == flag)
-            .select("l_partkey")
-            .distinct()
-            .select(
-                F.conv(
-                    F.substring(F.md5(F.col("l_partkey").cast("string")), 1, 12),
-                    16,
-                    10,
-                )
-                .cast("long")
-                .alias("h")
-            )
-            .distinct()
-        )
-
-    ha = side("A").localCheckpoint(eager=False)
-    hb = side("R").localCheckpoint(eager=False)
-    u = ha.unionByName(hb).distinct()
-    w = Window.orderBy("h")
-    th = (
-        u.select("h", F.row_number().over(w).alias("rn"))
-        .filter(F.col("rn") <= _KMV_K)
-        .agg(
-            F.max("h").alias("theta"),
-            F.count("*").cast("long").alias("n_union_sk"),
-        )
-    )
+    ha, hb, th = _kmv_theta(li)
     onl = (
         ha.join(hb, "h", "left_anti")
         .crossJoin(F.broadcast(th.select("theta")))
@@ -944,7 +900,7 @@ def hdr_quantiles(spark: SparkSession, h: DataFrame) -> DataFrame:
 _HDR_MERGE_ORACLE = (
     "WITH c AS (SELECT o_orderpriority AS prio, "
     "  CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, "
-    "  (o_orderkey * 2654435761) % 2 AS half FROM orders), "
+    f"  (o_orderkey * {KNUTH}) % 2 AS half FROM orders), "
     "bk AS (SELECT prio, half, length(bin(cents)) - 1 AS b, "
     "  (cents >> greatest(length(bin(cents)) - 5, 0)) & 15 AS sub FROM c), "
     "h_half AS (SELECT prio, half, b, sub, COUNT(*) AS cnt "
@@ -981,7 +937,7 @@ def agg_hdr_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("prio"),
         cents.alias("cents"),
-        F.pmod(F.col("o_orderkey") * 2654435761, F.lit(2)).alias("half"),
+        F.pmod(F.col("o_orderkey") * KNUTH, F.lit(2)).alias("half"),
     )
     b = F.length(F.bin(F.col("cents"))) - 1
     sub = F.expr(
@@ -1076,7 +1032,7 @@ _HH_K = 20  # summary size: at most K surviving counters per summary
 # aggregate, and each shard's summary touches only its top-(K+1)
 # counters (a WindowGroupLimit, never the full vocabulary sort).
 _HH_SQL = (
-    "tok AS (SELECT (doc_id * 2654435761) % 2 AS half, "
+    f"tok AS (SELECT (doc_id * {KNUTH}) % 2 AS half, "
     "  unnest(string_split(text, ' ')) AS token FROM documents), "
     "c AS (SELECT half, token, CAST(COUNT(*) AS BIGINT) AS c "
     "  FROM tok GROUP BY 1, 2), "
@@ -1140,7 +1096,7 @@ def agg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     token ASC) tie-broken rank, and integer arithmetic only — no
     sampling, no hashing beyond the shard split."""
     tok = load_table(spark, sf_dir, "documents").select(
-        F.pmod(F.col("doc_id") * 2654435761, F.lit(2)).alias("half"),
+        F.pmod(F.col("doc_id") * KNUTH, F.lit(2)).alias("half"),
         F.explode(F.split("text", " ")).alias("token"),
     )
     c = tok.groupBy("half", "token").agg(F.count("*").cast("long").alias("c"))

@@ -27,10 +27,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.sqlbuild import sql_over
+from ..functions.determinism import KNUTH, hex_int_duck, hex_int_sql
 from ..registry import query
-
-_KNUTH = 2654435761  # engine-portable multiplicative hash (pipeline.py)
 
 _FUNNEL = ["view", "click", "purchase"]
 
@@ -186,7 +184,7 @@ def pack_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_sample_split",
     category="pipeline",
     oracle=(
-        f"WITH b AS (SELECT doc_id, lang, (doc_id * {_KNUTH}) % 100 AS bucket FROM documents) "
+        f"WITH b AS (SELECT doc_id, lang, (doc_id * {KNUTH}) % 100 AS bucket FROM documents) "
         "SELECT doc_id, lang, CASE WHEN bucket < 80 THEN 'train' "
         "WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split FROM b"
     ),
@@ -201,7 +199,7 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: stateless per-row projection — no shuffle at all."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    bucket = F.pmod(F.col("doc_id") * F.lit(_KNUTH), F.lit(100))
+    bucket = F.pmod(F.col("doc_id") * F.lit(KNUTH), F.lit(100))
     return docs.select(
         "doc_id",
         "lang",
@@ -214,7 +212,7 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="analytics",
     oracle=(
         f"SELECT doc_id, lang, n_chars FROM documents "
-        f"WHERE (doc_id * {_KNUTH}) % 4000 < least(n_chars, 2000)"
+        f"WHERE (doc_id * {KNUTH}) % 4000 < least(n_chars, 2000)"
     ),
 )
 def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,7 +232,7 @@ def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checked against the DuckDB twin, not just its size."""
     docs = load_table(spark, sf_dir, "documents")
     return docs.filter(
-        F.pmod(F.col("doc_id") * F.lit(_KNUTH), F.lit(4000))
+        F.pmod(F.col("doc_id") * F.lit(KNUTH), F.lit(4000))
         < F.least(F.col("n_chars"), F.lit(2000))
     ).select("doc_id", "lang", "n_chars")
 
@@ -243,7 +241,7 @@ def sample_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_sample_balanced",
     category="analytics",
     oracle=(
-        f"WITH h AS (SELECT doc_id, lang, (doc_id * {_KNUTH}) % 1000000 AS hk "
+        f"WITH h AS (SELECT doc_id, lang, (doc_id * {KNUTH}) % 1000000 AS hk "
         "FROM documents), "
         "rk AS (SELECT doc_id, lang, "
         "  row_number() OVER (PARTITION BY lang ORDER BY hk, doc_id) AS rn FROM h) "
@@ -263,7 +261,7 @@ def sample_balanced(spark: SparkSession, sf_dir: str) -> DataFrame:
     single shuffle a per-class aggregation needs; no sampling collect,
     no two-pass count-then-filter."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    hk = F.pmod(F.col("doc_id") * F.lit(_KNUTH), F.lit(1_000_000))
+    hk = F.pmod(F.col("doc_id") * F.lit(KNUTH), F.lit(1_000_000))
     w = Window.partitionBy("lang").orderBy(hk.asc(), F.col("doc_id").asc())
     return (
         docs.select("doc_id", "lang", F.row_number().over(w).alias("pick_rank"))
@@ -624,7 +622,7 @@ def basket_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     proven identical to the join form (sorted-set pairs == a < b join
     pairs, same per-pair order counts; DuckDB oracle green)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return sql_over(
+    return spark.sql(
         # r13: collect_list + one in-row array_distinct(array_sort(...))
         # replaces collect_set, and the pair expansion is two stacked
         # generators instead of the interpreted nested
@@ -1222,7 +1220,7 @@ def basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     subquery (former broadcast cross-join — same value, one fewer BNLJ
     node).  Integer expressions unchanged; DuckDB oracle green."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return sql_over(
+    return spark.sql(
         # r13: same collect_list + two-generator pair expansion as
         # x_basket_pairs / graphs._undirected_edges (digest-identical)
         "WITH sets AS (SELECT array_distinct(array_sort(collect_list(l_partkey))) AS ps "
@@ -1324,7 +1322,7 @@ _RR_KEEP_PPM = 750_000  # report truth with prob 3/4; lie uniform over k
         "WITH sl AS (SELECT list(s ORDER BY s) AS segs, "
         "  CAST(COUNT(*) AS BIGINT) AS k FROM "
         "  (SELECT DISTINCT c_mktsegment AS s FROM customer)), "
-        "rep AS (SELECT CASE WHEN (c_custkey * 2654435761) % 1000000 "
+        f"rep AS (SELECT CASE WHEN (c_custkey * {KNUTH}) % 1000000 "
         f"    < {_RR_KEEP_PPM} THEN c_mktsegment "
         f"    ELSE segs[CAST((c_custkey * {_RR_H2}) % k AS INT) + 1] "
         "  END AS seg FROM customer CROSS JOIN sl), "
@@ -1372,7 +1370,7 @@ def privacy_rr_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rep = cust.crossJoin(F.broadcast(sl)).select(
         F.when(
-            (F.col("c_custkey") * _KNUTH) % 1_000_000 < _RR_KEEP_PPM,
+            (F.col("c_custkey") * KNUTH) % 1_000_000 < _RR_KEEP_PPM,
             F.col("c_mktsegment"),
         )
         .otherwise(
@@ -1433,9 +1431,9 @@ def privacy_rr_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # is useless here: odd * key mod 2^32 PRESERVES the key's 2-adic
 # valuation, so two such "independent" draws are always equal and the
 # noise cancels to exactly zero (caught in review; the first shipped
-# spelling had this bug).  md5 — the house portable-hash idiom — mixes
-# low bits properly; each draw parses 12 hex chars (48 bits) of
-# md5(salt || key) in both engines.
+# spelling had this bug).  md5 mixes low bits properly (the hash
+# contract in functions/determinism.py); each draw parses 12 hex chars
+# (48 bits) of md5(salt || key) in both engines.
 _DP_V2_CAP = 20  # per-draw cap: P(exceed) = 2^-20, keeps u=0 finite
 
 
@@ -1449,19 +1447,13 @@ def _dp_v2_sql(u: str) -> str:
 
 
 def _dp_hash_duck(salt: str, key: str) -> str:
-    """48-bit integer from md5(salt || key) in DuckDB — the shared
-    12-hex-char parse (one definition, aggregates._kmv_hex12_duck)."""
-    from .aggregates import _kmv_hex12_duck
-
-    return _kmv_hex12_duck(f"md5('{salt}' || CAST({key} AS VARCHAR))")
+    """48-bit integer from md5(salt || key) in DuckDB."""
+    return hex_int_duck(f"md5('{salt}' || CAST({key} AS VARCHAR))", 1, 12)
 
 
 def _dp_hash_spark(salt: str, key: str) -> str:
-    """The same 48-bit draw in Spark SQL via conv(md5-hex, 16, 10)."""
-    return (
-        f"CAST(conv(substring(md5(concat('{salt}', CAST({key} AS STRING))), "
-        "1, 12), 16, 10) AS BIGINT)"
-    )
+    """The same 48-bit draw in Spark SQL."""
+    return hex_int_sql(f"md5(concat('{salt}', CAST({key} AS STRING)))", 1, 12)
 
 
 @query(
@@ -1612,7 +1604,7 @@ _PSEUDO_M = 2_147_483_647  # Mersenne prime 2^31-1; coprime multiplier hash
     category="analytics",
     oracle=(
         "WITH ev AS (SELECT event_type, user_id, "
-        f"  (user_id * 2654435761 + 40503) % {_PSEUDO_M} AS pseudo "
+        f"  (user_id * {KNUTH} + 40503) % {_PSEUDO_M} AS pseudo "
         "  FROM events), "
         "u AS (SELECT event_type, user_id, MIN(pseudo) AS pseudo, "
         "  CAST(COUNT(*) AS BIGINT) AS n_ev FROM ev GROUP BY 1, 2) "
@@ -1642,7 +1634,7 @@ def privacy_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "user_id",
-        ((F.col("user_id") * 2654435761 + 40503) % _PSEUDO_M).alias("pseudo"),
+        ((F.col("user_id") * KNUTH + 40503) % _PSEUDO_M).alias("pseudo"),
     )
     u = ev.groupBy("event_type", "user_id").agg(
         F.min("pseudo").alias("pseudo"),
@@ -1742,7 +1734,28 @@ _PRI_DOMAIN = 1 << 48  # 12 hex chars of md5
 @query(
     "x_sample_priority",
     category="analytics",
-    oracle="WITH d AS (SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS w   FROM documents WHERE n_chars > 0), h AS (SELECT lang, doc_id, w,   CAST((strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 17592186044416 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1) * 1099511627776 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 3, 1)) - 1) * 68719476736 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 4, 1)) - 1) * 4294967296 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 5, 1)) - 1) * 268435456 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 6, 1)) - 1) * 16777216 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 7, 1)) - 1) * 1048576 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 8, 1)) - 1) * 65536 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 9, 1)) - 1) * 4096 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 10, 1)) - 1) * 256 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 11, 1)) - 1) * 16 + (strpos('0123456789abcdef', substr(md5(CAST(doc_id AS VARCHAR)), 12, 1)) - 1) * 1 AS BIGINT) + 1 AS h1 FROM d), q AS (SELECT lang, doc_id, w, (w * 281474976710656) // h1 AS pri FROM h), rk AS (SELECT lang, doc_id, w, pri, row_number() OVER (  PARTITION BY lang ORDER BY pri DESC, doc_id) AS rn FROM q), tau AS (SELECT lang, COALESCE(MAX(CASE WHEN rn = 33   THEN pri END), 0) AS tau FROM rk GROUP BY lang), samp AS (SELECT lang, doc_id, w FROM rk WHERE rn <= 32), est AS (SELECT s.lang, CAST(COUNT(*) AS BIGINT) AS k_used,   CAST(SUM(CASE WHEN s.w > t.tau THEN s.w ELSE t.tau END) AS BIGINT)     AS est_total_chars,   CAST(SUM(s.doc_id) AS BIGINT) AS sample_id_sum   FROM samp s JOIN tau t ON s.lang = t.lang GROUP BY 1), tru AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,   CAST(SUM(w) AS BIGINT) AS true_total_chars FROM d GROUP BY 1) SELECT tr.lang, tr.n_docs, tr.true_total_chars, e.k_used, CAST(t.tau AS BIGINT) AS tau, e.est_total_chars, e.sample_id_sum FROM tru tr JOIN est e ON tr.lang = e.lang JOIN tau t ON tr.lang = t.lang",
+    oracle=(
+        "WITH d AS (SELECT lang, doc_id, CAST(n_chars AS BIGINT) AS w "
+        "  FROM documents WHERE n_chars > 0), "
+        "h AS (SELECT lang, doc_id, w, "
+        f"  {hex_int_duck('md5(CAST(doc_id AS VARCHAR))', 1, 12)} + 1 AS h1 FROM d), "
+        f"q AS (SELECT lang, doc_id, w, (w * {_PRI_DOMAIN}) // h1 AS pri FROM h), "
+        "rk AS (SELECT lang, doc_id, w, pri, row_number() OVER ("
+        "  PARTITION BY lang ORDER BY pri DESC, doc_id) AS rn FROM q), "
+        f"tau AS (SELECT lang, COALESCE(MAX(CASE WHEN rn = {_PRI_K + 1} "
+        "  THEN pri END), 0) AS tau FROM rk GROUP BY lang), "
+        f"samp AS (SELECT lang, doc_id, w FROM rk WHERE rn <= {_PRI_K}), "
+        "est AS (SELECT s.lang, CAST(COUNT(*) AS BIGINT) AS k_used, "
+        "  CAST(SUM(CASE WHEN s.w > t.tau THEN s.w ELSE t.tau END) AS BIGINT) "
+        "    AS est_total_chars, "
+        "  CAST(SUM(s.doc_id) AS BIGINT) AS sample_id_sum "
+        "  FROM samp s JOIN tau t ON s.lang = t.lang GROUP BY 1), "
+        "tru AS (SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs, "
+        "  CAST(SUM(w) AS BIGINT) AS true_total_chars FROM d GROUP BY 1) "
+        "SELECT tr.lang, tr.n_docs, tr.true_total_chars, e.k_used, "
+        "CAST(t.tau AS BIGINT) AS tau, e.est_total_chars, e.sample_id_sum "
+        "FROM tru tr JOIN est e ON tr.lang = e.lang JOIN tau t ON tr.lang = t.lang"
+    ),
 )
 def sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup, JACM 2007): the
@@ -1794,8 +1807,7 @@ def sample_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         "w",
         F.expr(
             f"(w * {_PRI_DOMAIN}) DIV "
-            "(CAST(conv(substring(md5(CAST(doc_id AS STRING)), 1, 12), 16, 10) "
-            "AS BIGINT) + 1)"
+            f"({hex_int_sql('md5(CAST(doc_id AS STRING))', 1, 12)} + 1)"
         ).alias("pri"),
     )
     w_rk = Window.partitionBy("lang").orderBy(F.desc("pri"), F.asc("doc_id"))
@@ -1847,12 +1859,12 @@ _PBAL_BUCKETS = 32  # model shuffle width
     oracle=(
         "WITH b AS ("
         "  SELECT 'l_orderkey' AS shuffle_key, "
-        f"  ((l_orderkey % {_PBAL_BUCKETS}) * {2654435761 % _PBAL_BUCKETS}) "
+        f"  ((l_orderkey % {_PBAL_BUCKETS}) * {KNUTH % _PBAL_BUCKETS}) "
         f"    % {_PBAL_BUCKETS} AS bkt FROM lineitem "
         "  UNION ALL "
         "  SELECT 'l_returnflag', "
         "  (CASE l_returnflag WHEN 'A' THEN 0 WHEN 'N' THEN 1 ELSE 2 END "
-        f"    * 2654435761) % {_PBAL_BUCKETS} FROM lineitem), "
+        f"    * {KNUTH}) % {_PBAL_BUCKETS} FROM lineitem), "
         "c AS (SELECT shuffle_key, bkt, CAST(COUNT(*) AS BIGINT) AS cnt "
         "  FROM b GROUP BY 1, 2) "
         "SELECT shuffle_key, "
@@ -1893,7 +1905,7 @@ def profile_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     b1 = li.select(
         F.lit("l_orderkey").alias("shuffle_key"),
         (
-            (F.col("l_orderkey") % _PBAL_BUCKETS) * (_KNUTH % _PBAL_BUCKETS)
+            (F.col("l_orderkey") % _PBAL_BUCKETS) * (KNUTH % _PBAL_BUCKETS)
             % _PBAL_BUCKETS
         ).alias("bkt"),
     )
@@ -1904,7 +1916,7 @@ def profile_partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     b2 = li.select(
         F.lit("l_returnflag").alias("shuffle_key"),
-        ((flag_code * _KNUTH) % _PBAL_BUCKETS).alias("bkt"),
+        ((flag_code * KNUTH) % _PBAL_BUCKETS).alias("bkt"),
     )
     c = (
         b1.unionByName(b2)

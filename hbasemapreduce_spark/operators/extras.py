@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.determinism import dec_sum
+from ..functions.determinism import dec_sum, hex_int_duck, hex_int_sql
 from ..functions.staging import sink_dir
 from ..functions.zorder import (
     hilbert_ctes,
@@ -486,10 +486,8 @@ def agg_sketch_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cms_oracle() -> str:
     """DuckDB spec for the portable CMS: same sketch, same estimates,
     same ranked heavy-hitter report — md5 in place of xxhash64."""
-    from .llm_dedup import _hex6_sql
-
     def bkt(r: int) -> str:
-        return f"({_hex6_sql('h', 6 * r + 1)} % {_CMS_W})"
+        return f"({hex_int_duck('h', 6 * r + 1, 6)} % {_CMS_W})"
 
     rows = ", ".join(
         f"({r}, {bkt(r)})" for r in range(_CMS_D)
@@ -540,8 +538,7 @@ def agg_sketch_cms_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets = F.explode(
         F.expr(
             f"transform(sequence(0, {_CMS_D - 1}), r -> struct(r AS r, "
-            f"pmod(CAST(conv(substring(h, r * 6 + 1, 6), 16, 10) AS BIGINT), "
-            f"{_CMS_W}) AS bkt))"
+            f"pmod({hex_int_sql('h', 'r * 6 + 1', 6)}, {_CMS_W}) AS bkt))"
         )
     ).alias("rb")
     sketch = (

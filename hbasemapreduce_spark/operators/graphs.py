@@ -27,7 +27,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.sqlbuild import sql_over
 from ..registry import query
 
 _SUPPORT = 3  # min co-purchase support, mirrors x_basket_pairs
@@ -57,7 +56,7 @@ def _undirected_edges(
     # lazy localCheckpoint: every graph operator reads the edge list 2-4
     # times (wedge sides, degree table, anti-join, per-round relaxation);
     # without it each read re-runs the pair derivation from the fact
-    # table.  r12: ONE sql_over call, and the pair generation is
+    # table.  r12: ONE spark.sql call, and the pair generation is
     # per-order in-row — collect each order's parts once (ONE exchange
     # keyed on l_orderkey), emit the sorted-set pairs, then the support
     # aggregate (the second and last exchange); the items-distinct +
@@ -72,7 +71,7 @@ def _undirected_edges(
     # — edge stage 1.24 -> 0.97 s interleaved at sf0.1, output pair
     # multiset digest-identical (also vs the self-join spelling).
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    return sql_over(
+    return spark.sql(
         "WITH sets AS (SELECT array_distinct(array_sort(collect_list(l_partkey))) AS ps "
         "  FROM {li} GROUP BY l_orderkey), "
         "und AS (SELECT part_a, part_b FROM ("
@@ -150,7 +149,7 @@ def pagerank_integer(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
     reimplementation of the same integer recurrence."""
     # integer base rank via DIV (cast-of-true-division would ROUND;
     # the oracle's `//` floors) — 1-row scalar subquery per iteration.
-    # r12: the unrolled recurrence is ONE sql_over call (identical
+    # r12: the unrolled recurrence is ONE spark.sql call (identical
     # integer expressions, A/B-proven bit-identical; the per-op
     # DataFrame chain re-analyzed the growing tree every round).
     tele = f"({_DAMP_DEN - _DAMP_NUM} * (SELECT b FROM base)) DIV {_DAMP_DEN}"
@@ -170,7 +169,7 @@ def pagerank_integer(edges: DataFrame, *, rounds: int = 3) -> DataFrame:
             f"  + ({_DAMP_NUM} * COALESCE(s{j}.s, CAST(0 AS BIGINT))) DIV {_DAMP_DEN} AS pr "
             f"  FROM deg d LEFT JOIN s{j} ON d.node = s{j}.node)"
         )
-    return sql_over(
+    return edges.sparkSession.sql(
         "WITH " + ", ".join(ctes) + f" SELECT node, pr FROM r{rounds}",
         edges=edges,
     )
@@ -214,10 +213,10 @@ def graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).localCheckpoint(eager=False)  # read by 4 census branches below
     # the census stays ONE declarative plan: each relation collapses to
     # a 1-row aggregate attached as a scalar subquery — no driver-side
-    # .count() actions anywhere.  r12: one sql_over call (the scalar-
+    # .count() actions anywhere.  r12: one spark.sql call (the scalar-
     # subquery form replaces the former broadcast cross-joins; same
     # values, fewer BNLJ nodes, A/B-proven bit-identical).
-    return sql_over(
+    return spark.sql(
         "WITH wedge AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c "
         "  FROM {und} e1 JOIN {und} e2 ON e1.b = e2.a), "
         "tri AS (SELECT w.a FROM wedge w LEFT SEMI JOIN {und} e3 "
@@ -290,7 +289,7 @@ def label_prop_core(edges: DataFrame) -> DataFrame:
     """2 synchronous LPA rounds over an already-checkpointed edge list
     — shared by x_graph_label_prop and x_graph_modularity so the judge
     query doesn't rebuild the edge self-join a second time."""
-    # r12: both synchronous rounds in ONE sql_over call (identical
+    # r12: both synchronous rounds in ONE spark.sql call (identical
     # max_by/struct argmax expressions, A/B-proven bit-identical).
     ctes = ["l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM {edges})"]
     for i in range(2):
@@ -303,7 +302,7 @@ def label_prop_core(edges: DataFrame) -> DataFrame:
             f"l{j} AS (SELECT node, max_by(lbl, struct(c, -lbl)) AS lbl "
             f"  FROM c{j} GROUP BY node)"
         )
-    return sql_over(
+    return edges.sparkSession.sql(
         "WITH " + ", ".join(ctes) + " SELECT node, lbl AS community FROM l2",
         edges=edges,
     )
@@ -392,7 +391,7 @@ def bfs_hops(
     (tests/test_random_differential.py) can drive it with arbitrary
     seeded graphs against a pure-Python reimplementation of the same
     relaxation recurrence."""
-    # r12: the unrolled relaxation rounds in ONE sql_over call
+    # r12: the unrolled relaxation rounds in ONE spark.sql call
     # (identical join/min-union recurrence, A/B-proven bit-identical).
     ctes = ["d0 AS (SELECT node, hops FROM {seeds})"]
     for i in range(rounds):
@@ -405,7 +404,7 @@ def bfs_hops(
             f"d{j} AS (SELECT node, MIN(hops) AS hops FROM "
             f"  (SELECT * FROM d{i} UNION ALL SELECT * FROM e{j}) GROUP BY node)"
         )
-    return sql_over(
+    return edges.sparkSession.sql(
         "WITH " + ", ".join(ctes) + f" SELECT node, hops FROM d{rounds}",
         edges=edges,
         seeds=seeds,
@@ -452,9 +451,9 @@ def graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     joins on the |nodes|-row degree table, and the top-20 is a
     tie-broken global sort of the |candidates| scored pairs."""
     edges = _undirected_edges(spark, sf_dir)
-    # r12: one sql_over call (identical wedge-join / anti-join / degree
+    # r12: one spark.sql call (identical wedge-join / anti-join / degree
     # tree and the same single-division jacc, A/B-proven bit-identical).
-    return sql_over(
+    return spark.sql(
         "WITH cand AS (SELECT e1.src AS part_a, e2.dst AS part_b, "
         "    COUNT(*) AS cn "
         "  FROM {edges} e1 JOIN {edges} e2 "
@@ -515,12 +514,12 @@ def graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = label_prop_core(edges).select(
         F.col("node"), F.col("community").alias("lbl")
     ).localCheckpoint(eager=False)
-    # r12: one sql_over call; the edge-total arrives as a scalar
+    # r12: one spark.sql call; the edge-total arrives as a scalar
     # subquery instead of the former broadcast cross-join (same value
     # everywhere, one fewer BNLJ node; A/B-proven bit-identical — the
     # q_contrib IEEE tree is unchanged).
     ed = "CAST((SELECT COUNT(*) FROM {edges}) AS DOUBLE)"
-    return sql_over(
+    return spark.sql(
         "WITH deg AS (SELECT src AS node, COUNT(*) AS d FROM {edges} GROUP BY src), "
         "intra AS (SELECT a.lbl AS community, COUNT(*) AS ec "
         "  FROM {edges} e JOIN {labels} a ON e.src = a.node "
@@ -600,13 +599,14 @@ def kcore_core(
     see x_graph_kcore for semantics.  Exposed separately so the
     randomized differential test can drive it with seeded graphs
     against a pure-Python peel of the same recurrence."""
-    # r12: each peel round is one sql_over call (identical degree +
+    # r12: each peel round is one spark.sql call (identical degree +
     # double-semi-restriction tree, A/B-proven bit-identical); the
     # per-round lazy localCheckpoint — round r must not re-run rounds
     # 0..r-1 — is unchanged.
+    spark = edges.sparkSession
     e = edges
     for _ in range(rounds):
-        e = sql_over(
+        e = spark.sql(
             "WITH deg AS (SELECT src AS node, COUNT(*) AS deg "
             "  FROM {e} GROUP BY src), "
             f"keep AS (SELECT node FROM deg WHERE deg >= {k}) "
@@ -614,7 +614,7 @@ def kcore_core(
             "JOIN keep a ON e.src = a.node JOIN keep b ON e.dst = b.node",
             e=e,
         ).localCheckpoint(eager=False)
-    return sql_over(
+    return spark.sql(
         "SELECT node, deg FROM (SELECT src AS node, COUNT(*) AS deg "
         f"FROM {{e}} GROUP BY src) WHERE deg >= {k}",
         e=e,
@@ -699,7 +699,8 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
     edge list is lazily checkpointed here (all four half-steps re-read
     it)."""
     e = e.localCheckpoint(eager=False)
-    # r12: every half-step is one sql_over call; the 1-row totals arrive
+    spark = e.sparkSession
+    # r12: every half-step is one spark.sql call; the 1-row totals arrive
     # as scalar subqueries instead of the former broadcast cross-joins
     # (same value everywhere, fewer BNLJ nodes; A/B-proven
     # bit-identical).
@@ -715,7 +716,7 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
         df = df.localCheckpoint(eager=False)
         # decimal(38,0) sandwich: score * 10^12 can exceed int64
         # mid-product; the quotient is back under 10^12
-        return sql_over(
+        return spark.sql(
             f"SELECT {key}, CAST(CAST({_SCALE} AS DECIMAL(38,0)) * {col} "
             f"DIV (SELECT SUM({col}) FROM {{df}}) AS BIGINT) AS {col} "
             "FROM {df}",
@@ -723,7 +724,7 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
         )
 
     def auth_step(hdf: DataFrame) -> DataFrame:
-        raw = sql_over(
+        raw = spark.sql(
             "SELECT part, SUM(h) AS a FROM {e} JOIN {h} USING (cust) "
             "GROUP BY part",
             e=e,
@@ -732,7 +733,7 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
         return renorm(raw, "part", "a")
 
     def hub_step(adf: DataFrame) -> DataFrame:
-        raw = sql_over(
+        raw = spark.sql(
             "SELECT cust, SUM(a) AS h FROM {e} JOIN {a} USING (part) "
             "GROUP BY cust",
             e=e,
@@ -750,7 +751,7 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
     # Bit-identical by definition; pinned by the seeded randomized
     # differential against pure Python, NULL-cust edges included.
     a1 = renorm(
-        sql_over(
+        spark.sql(
             "SELECT part, COUNT(*) * (SELECT CAST("
             f"{_SCALE} AS BIGINT) DIV COUNT(DISTINCT cust) FROM {{e}}) AS a "
             "FROM {e} WHERE cust IS NOT NULL GROUP BY part",
@@ -761,7 +762,7 @@ def co_hits_integer(e: DataFrame) -> DataFrame:
     )
     h1 = hub_step(a1)
     a2 = auth_step(h1)
-    return sql_over(
+    return spark.sql(
         "SELECT 'auth' AS kind, part AS node, a AS score FROM {a2} "
         "UNION ALL SELECT 'hub', cust, h FROM {h1}",
         a2=a2,
@@ -829,11 +830,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a degree-REGULAR surviving graph (it happens: at sf0.1 the
     # support threshold leaves all-equal degrees) has zero variance —
     # assortativity is undefined there, NULL in both engines, never a
-    # divide-by-zero under ANSI mode.  r12: one sql_over call with the
+    # divide-by-zero under ANSI mode.  r12: one spark.sql call with the
     # identical exact-int -> double IEEE tree (A/B-proven bit-identical).
     vx = "(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE) - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))"
     vy = "(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE) - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))"
-    return sql_over(
+    return spark.sql(
         "WITH deg AS (SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS d "
         "  FROM {edges} GROUP BY src), "
         "de AS (SELECT da.d AS x, db.d AS y FROM {edges} e "
@@ -901,9 +902,9 @@ def graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("src").alias("a"), F.col("dst").alias("b"))
         .localCheckpoint(eager=False)
     )
-    # r12: one sql_over call (identical wedge/closing joins, per-node
+    # r12: one spark.sql call (identical wedge/closing joins, per-node
     # rollup and exact ppm DIV tree, A/B-proven bit-identical).
-    return sql_over(
+    return spark.sql(
         "WITH wedge AS (SELECT e1.a AS a, e1.b AS b, e2.b AS c "
         "  FROM {und} e1 JOIN {und} e2 ON e1.b = e2.a), "
         "tri AS (SELECT w.a, w.b, w.c FROM wedge w "

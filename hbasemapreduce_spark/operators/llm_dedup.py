@@ -24,13 +24,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.minhash import (
-    expand_bag,
-    minhash_pairs,
-    minhash_pairs_from_occurrences,
-    simhash_pairs,
-)
-from ..functions.sqlbuild import sql_over
+from ..functions.determinism import KNUTH, hex_digit_duck, hex_int, hex_int_duck, hex_int_sql
+from ..functions.minhash import minhash_pairs_from_occurrences, simhash_pairs
 from ..functions.text import tokens
 from ..registry import query
 
@@ -471,15 +466,12 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INC_KNUTH = 2654435761  # portable split hash (pipeline.py convention)
-
-
 @query(
     "x_dedup_incremental",
     category="llm_dedup",
     oracle=(
         f"WITH tagged AS (SELECT doc_id, lower(trim(text)) AS norm, "
-        f"  (doc_id * {_INC_KNUTH}) % 10 < 8 AS in_base FROM documents), "
+        f"  (doc_id * {KNUTH}) % 10 < 8 AS in_base FROM documents), "
         "base AS (SELECT DISTINCT norm FROM tagged WHERE in_base), "
         "delta AS (SELECT doc_id, norm FROM tagged WHERE NOT in_base), "
         "survivors AS (SELECT d.doc_id, d.norm FROM delta d "
@@ -509,7 +501,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.lower(F.trim(F.col("text"))).alias("norm"),
-        (F.pmod(F.col("doc_id") * _INC_KNUTH, F.lit(10)) < 8).alias("in_base"),
+        (F.pmod(F.col("doc_id") * KNUTH, F.lit(10)) < 8).alias("in_base"),
     )
     base = tagged.filter("in_base").select("norm").distinct()
     delta = tagged.filter(~F.col("in_base")).select("doc_id", "norm")
@@ -580,42 +572,16 @@ _BLOOM_M = 65536  # bit positions
 _BLOOM_J = 3  # hash functions (Kirsch-Mitzenmacher double hashing)
 
 
-def _hex12_sql(expr: str) -> str:
-    """12 hex chars of ``expr`` parsed to ONE 48-bit BIGINT — the
-    shared-span parse (VERDICT r9 item 5, the x_agg_distinct_kmv
-    discipline): both 24-bit permutation operands come from a single
-    parse, split arithmetically (w DIV 2^24, w % 2^24), instead of two
-    independent 6-char parses over the same md5 string."""
-    terms = " + ".join(
-        f"(strpos('0123456789abcdef', substr({expr}, {1 + i}, 1)) - 1) "
-        f"* {16 ** (11 - i)}"
-        for i in range(12)
-    )
-    return "CAST(" + terms + " AS BIGINT)"
-
-
-def _hex6_sql(expr: str, off: int) -> str:
-    """6 hex chars of ``expr`` starting at 1-based ``off``, parsed to a
-    BIGINT — DuckDB has no base-16 conv(), so spell out the digits; the
-    Spark twin uses conv(substr, 16, 10) over the same characters."""
-    terms = " + ".join(
-        f"(strpos('0123456789abcdef', substr({expr}, {off + i}, 1)) - 1) "
-        f"* {16 ** (5 - i)}"
-        for i in range(6)
-    )
-    return "CAST(" + terms + " AS BIGINT)"
-
-
 @query(
     "x_filter_bloom",
     category="llm_dedup",
     oracle=(
         f"WITH tagged AS (SELECT doc_id, "
         "  array_to_string((string_split(lower(trim(text)), ' '))[1:16], ' ') AS norm, "
-        f"  (doc_id * {_INC_KNUTH}) % 10 < 8 AS in_base FROM documents), "
+        f"  (doc_id * {KNUTH}) % 10 < 8 AS in_base FROM documents), "
         "sig AS (SELECT doc_id, norm, in_base, md5(norm) AS h FROM tagged), "
-        f"hv AS (SELECT doc_id, norm, in_base, {_hex6_sql('h', 1)} AS v1, "
-        f"  {_hex6_sql('h', 7)} AS v2 FROM sig), "
+        f"hv AS (SELECT doc_id, norm, in_base, {hex_int_duck('h', 1, 6)} AS v1, "
+        f"  {hex_int_duck('h', 7, 6)} AS v2 FROM sig), "
         f"bits AS (SELECT DISTINCT (v1 + t.i * v2) % {_BLOOM_M} AS pos "
         f"  FROM hv, unnest(range(0, {_BLOOM_J})) AS t(i) WHERE in_base), "
         "basen AS (SELECT DISTINCT norm FROM tagged WHERE in_base), "
@@ -652,9 +618,9 @@ def filter_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     of O(batch) at 100 TB (Spark itself applies the same idea as
     runtime row-group Bloom pruning).
 
-    Determinism: positions derive from md5 hex parsed base-16 — Spark's
-    conv() and the oracle's spelled-out digit expansion read the SAME
-    characters — and every output is an exact integer count.
+    Determinism: positions derive from md5 hex digits (the portable
+    parse in functions/determinism.py) and every output is an exact
+    integer count.
 
     Scale shape: the bit SET is content-bounded (<= m=65536 rows ->
     one collect_set into a broadcast ARRAY scalar); the delta pass is
@@ -666,15 +632,15 @@ def filter_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_join(
             F.slice(F.split(F.lower(F.trim(F.col("text"))), " "), 1, 16), " "
         ).alias("norm"),
-        (F.pmod(F.col("doc_id") * _INC_KNUTH, F.lit(10)) < 8).alias("in_base"),
+        (F.pmod(F.col("doc_id") * KNUTH, F.lit(10)) < 8).alias("in_base"),
     )
     h = F.md5("norm")
     hv = tagged.select(
         "doc_id",
         "norm",
         "in_base",
-        F.conv(F.substring(h, 1, 6), 16, 10).cast("long").alias("v1"),
-        F.conv(F.substring(h, 7, 6), 16, 10).cast("long").alias("v2"),
+        hex_int(h, 1, 6).alias("v1"),
+        hex_int(h, 7, 6).alias("v2"),
     )
     base = hv.filter("in_base")
     bits = (
@@ -749,7 +715,7 @@ _PMH_BANDS = _PMH_PERMS // _PMH_BAND_ROWS
         "el AS (SELECT doc_id, tok || '#' || CAST(row_number() OVER ("
         "  PARTITION BY doc_id, tok ORDER BY pos) AS VARCHAR) AS elem FROM tk), "
         "hw AS (SELECT doc_id, "
-        f"  {_hex12_sql('md5(elem)')} AS w FROM el), "
+        f"  {hex_int_duck('md5(elem)', 1, 12)} AS w FROM el), "
         "hv AS (SELECT doc_id, w // 16777216 AS v1, w % 16777216 AS v2 FROM hw), "
         f"sig AS (SELECT doc_id, t.i AS i, MIN((v1 + t.i * v2) % {_PMH_P}) AS s "
         f"  FROM hv, unnest(range(0, {_PMH_PERMS})) AS t(i) GROUP BY 1, 2), "
@@ -775,8 +741,9 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64 permutations exist only in Spark).  Every hash here is
     engine-portable: elements are the bag expansion ('token#k' per k-th
     occurrence, bag Jaccard per dedup_minhash's corpus analysis),
-    hashed by parsing md5 hex base-16 (the x_filter_bloom trick), with
-    an affine permutation family (v1 + i*v2) mod p — so signatures,
+    hashed by parsing 12 md5 hex digits ONCE and splitting the 48 bits
+    into the two 24-bit operands (w DIV 2^24, w % 2^24) of an affine
+    permutation family (v1 + i*v2) mod p — so signatures,
     band keys, candidate pairs, AND the exact bag-Jaccard verify are
     bit-identical in DuckDB, closing the one structural rows-only gap
     in the dedup family.
@@ -804,11 +771,11 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # full operator (and a far cheaper cold plan), so the window stays;
     # the produced element multiset {tok#1..tok#c} is identical either
     # way and every downstream consumer is order-independent.
-    # r12 build-cost optimization: the whole pipeline is TWO sql_over
+    # r12 build-cost optimization: the whole pipeline is TWO spark.sql
     # calls (element table, then everything below the checkpoint) —
     # identical operator tree to the former DataFrame chain (A/B-proven
     # bit-identical), analyzed once per stage instead of per op.
-    el = sql_over(
+    el = spark.sql(
         "SELECT doc_id, concat_ws('#', tok, CAST(row_number() OVER ("
         "  PARTITION BY doc_id, tok ORDER BY pos) AS STRING)) AS elem "
         "FROM (SELECT doc_id, pos, tok FROM {al} "
@@ -839,10 +806,10 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     # duplicated in-plan aggregate it would save (4.55 s vs 3.25 s total
     # at sf0.1) — the extra materialization + stage barrier loses; the
     # one-SQL tree below keeps exchange reuse available to the planner.
-    return sql_over(
+    return spark.sql(
         "WITH hv AS (SELECT doc_id, shiftrightunsigned(w, 24) AS v1, "
         f"  w & {(1 << 24) - 1} AS v2 "
-        "  FROM (SELECT doc_id, CAST(conv(substring(md5(elem), 1, 12), 16, 10) AS BIGINT) AS w "
+        f"  FROM (SELECT doc_id, {hex_int_sql('md5(elem)', 1, 12)} AS w "
         "        FROM {el})), "
         f"sig AS (SELECT doc_id, {mins}, COUNT(*) AS n FROM hv GROUP BY doc_id), "
         "bands AS (SELECT doc_id, n, bk.b AS b, bk.key AS key "
@@ -883,7 +850,7 @@ _PSH_MAX_HAMMING = 3
         "cnt AS (SELECT doc_id, tok, CAST(COUNT(*) AS BIGINT) AS c "
         "  FROM tok WHERE tok <> '' GROUP BY 1, 2), "
         "bits AS (SELECT doc_id, c, t.j AS j, "
-        "  ((strpos('0123456789abcdef', substr(md5(tok), t.j // 4 + 1, 1)) - 1) "
+        f"  ({hex_digit_duck('md5(tok)', 't.j // 4 + 1')} "
         "   // (CASE t.j % 4 WHEN 0 THEN 8 WHEN 1 THEN 4 WHEN 2 THEN 2 ELSE 1 END)) % 2 AS bit "
         f"  FROM cnt, unnest(range(0, {_PSH_BITS})) AS t(j)), "
         "sj AS (SELECT doc_id, j, CASE WHEN SUM((2 * bit - 1) * c) > 0 "
@@ -932,26 +899,21 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def bit_expr(j: int) -> str:
-        # bit j of the md5: hex char j//4, nibble bit 3-(j%4) — same
-        # characters the oracle's strpos expansion reads
-        div = 8 >> (j % 4)
-        return (
-            f"pmod(CAST(conv(substring(h, {j // 4 + 1}, 1), 16, 10) AS BIGINT) "
-            f"DIV {div}, 2)"
-        )
+        # bit j of the md5: hex char j//4, nibble bit 3-(j%4)
+        return f"pmod({hex_int_sql('h', j // 4 + 1, 1)} DIV {8 >> (j % 4)}, 2)"
 
     # one corpus-aggregate pass: 60 signed bit-sums as COLUMNS (the
     # minhash-signature discipline) — measured 2x faster than the
     # 60-way exploded (doc, j) aggregate it replaces, and the fp/band
     # packings become pure projections instead of second aggregates.
     # r12 build-cost optimization: the aggregate and everything below it
-    # are one sql_over call each (identical operator tree, A/B-proven
-    # bit-identical; see sqlbuild.py); the sig checkpoint — read by fp
+    # are one spark.sql call each (identical operator tree, A/B-proven
+    # bit-identical); the sig checkpoint — read by fp
     # AND bands — is unchanged.
     sums = ", ".join(
         f"SUM((2 * {bit_expr(j)} - 1) * c) AS b{j}" for j in range(_PSH_BITS)
     )
-    sig = sql_over(
+    sig = spark.sql(
         f"SELECT doc_id, {sums} FROM {{cnt}} GROUP BY doc_id", cnt=cnt
     ).localCheckpoint(eager=False)
 
@@ -967,7 +929,7 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"struct({b} AS b, {packed(b * _PSH_BAND_BITS, _PSH_BAND_BITS, _PSH_BAND_BITS)} AS bv)"
         for b in range(_PSH_BITS // _PSH_BAND_BITS)
     )
-    return sql_over(
+    return spark.sql(
         "WITH fp AS (SELECT doc_id, "
         f"  {packed(0, _PSH_BITS, _PSH_BITS + 1)} AS fp FROM {{sig}}), "
         "bands AS (SELECT doc_id, bk.b AS b, bk.bv AS bv "

@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.sqlbuild import sql_over
+from ..functions.determinism import hex_int, hex_int_duck
 from ..functions.text import (
     STOPWORDS,
     stopword_ratio,
@@ -535,8 +535,8 @@ def _bpe_train_frames(spark: SparkSession, sf_dir: str):
 # One merge round's greedy left-to-right replacement as a single SQL
 # statement (the run-parity window trick; the Spark twin of
 # _bpe_round_sql above).  r12: the former ~10-op DataFrame chain per
-# round re-analyzed a growing tree at every op — one sql_over per
-# stage analyzes once (A/B at sf0.1: train 2.99 -> 1.76 s, apply
+# round re-analyzed a growing tree at every op — one spark.sql call
+# per stage analyzes once (A/B at sf0.1: train 2.99 -> 1.76 s, apply
 # 3.40 -> 2.23 s, outputs bit-identical; the seeded pure-Python
 # differential in tests/test_random_differential.py gates the greedy
 # semantics).
@@ -578,11 +578,12 @@ def bpe_train_core(w: DataFrame, rounds: int = _BPE_ROUNDS):
     notes.  Exposed separately so the randomized differential test
     (tests/test_random_differential.py) can drive it with seeded
     random vocabularies against a pure-Python reimplementation of the
-    same greedy recurrence.  Each round is two sql_over stages (the
+    same greedy recurrence.  Each round is two spark.sql stages (the
     1-row argmax, then the merge — _BPE_MERGE_SQL above); checkpoint
     boundaries are unchanged from the DataFrame-chain form: syms and
     the per-round best are each consumed by two branches."""
-    syms = sql_over(
+    spark = w.sparkSession
+    syms = spark.sql(
         "SELECT word, freq, CAST(pos AS BIGINT) AS pos, "
         "  substring(word, pos, 1) AS sym "
         "FROM (SELECT word, freq, "
@@ -592,7 +593,7 @@ def bpe_train_core(w: DataFrame, rounds: int = _BPE_ROUNDS):
 
     bests = []
     for rank in range(1, rounds + 1):
-        best = sql_over(
+        best = spark.sql(
             "SELECT sym AS pa, nxt AS pb, SUM(freq) AS cnt "
             "FROM (SELECT freq, sym, lead(sym) OVER ("
             "  PARTITION BY word ORDER BY pos) AS nxt FROM {syms}) "
@@ -608,7 +609,7 @@ def bpe_train_core(w: DataFrame, rounds: int = _BPE_ROUNDS):
                 "cnt",
             )
         )
-        syms = sql_over(_BPE_MERGE_SQL, syms=syms, best=best).localCheckpoint(
+        syms = spark.sql(_BPE_MERGE_SQL, syms=syms, best=best).localCheckpoint(
             eager=False
         )
     return bests, syms
@@ -1234,11 +1235,6 @@ def text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- feature hashing (the hashing-trick vectorizer) ----------------------
 
 _FH_DIM = 64  # hashed feature dimension
-_FH_HEX = " + ".join(
-    f"(strpos('0123456789abcdef', substr(md5(term), {1 + i}, 1)) - 1) "
-    f"* {16 ** (5 - i)}"
-    for i in range(6)
-)
 
 
 @query(
@@ -1247,7 +1243,7 @@ _FH_HEX = " + ".join(
     oracle=(
         "WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term "
         "  FROM documents), "
-        f"h AS (SELECT doc_id, CAST({_FH_HEX} AS BIGINT) AS hv "
+        f"h AS (SELECT doc_id, {hex_int_duck('md5(term)', 1, 6)} AS hv "
         "  FROM toks WHERE term <> ''), "
         f"sgn AS (SELECT doc_id, hv % {_FH_DIM} AS idx, "
         f"  CASE WHEN (hv // {_FH_DIM}) % 2 = 0 THEN 1 ELSE -1 END AS sg FROM h) "
@@ -1269,13 +1265,11 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: pure projection (tokenize + hash, JVM codegen) into
     ONE hash aggregate on (doc_id, slot) — map-side partials absorb
     repeated tokens; nothing is vocabulary-sized anywhere, which is
-    the entire point of the trick.  md5-hex-to-int follows the
-    repo-wide portable-hash idiom (conv(substr,16,10) on Spark, the
-    spelled-out digit expansion on DuckDB — same 24 bits)."""
+    the entire point of the trick."""
     toks = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.explode(F.split("text", " ")).alias("term")
     ).filter(F.col("term") != "")
-    hv = F.conv(F.substring(F.md5("term"), 1, 6), 16, 10).cast("long")
+    hv = hex_int(F.md5("term"), 1, 6)
     sgn = toks.select("doc_id", hv.alias("hv")).select(
         "doc_id",
         F.expr(f"CAST(hv % {_FH_DIM} AS BIGINT)").alias("idx"),

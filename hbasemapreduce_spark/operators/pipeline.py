@@ -19,17 +19,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, read_parquet
-from ..functions.sqlbuild import sql_over
+from ..functions.determinism import KNUTH, hex_int
 from ..functions.staging import sink_dir, staged
 from ..functions.text import tokens
 from ..registry import query
 from .stats_ml import KMEANS_CENT_SQL as _KM_SQL
-
-# Knuth multiplicative hash: deterministic, engine-portable (plain
-# bigint arithmetic — unlike rand(seed), identical in DuckDB), and
-# uncorrelated with key order, so samples are unbiased even on sorted
-# ids.  doc_id * K stays far below 2^63 at any realistic id range.
-_KNUTH = 2654435761
 
 
 @query(
@@ -37,7 +31,7 @@ _KNUTH = 2654435761
     category="pipeline",
     oracle=(
         "SELECT doc_id, lang FROM documents "
-        f"WHERE (doc_id * {_KNUTH}) % 100 < "
+        f"WHERE (doc_id * {KNUTH}) % 100 < "
         "(CASE WHEN lang = 'en' THEN 10 ELSE 30 END)"
     ),
 )
@@ -51,7 +45,7 @@ def sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     rate = F.when(F.col("lang") == "en", 10).otherwise(30)
     return (
         load_table(spark, sf_dir, "documents")
-        .filter(F.pmod(F.col("doc_id") * _KNUTH, F.lit(100)) < rate)
+        .filter(F.pmod(F.col("doc_id") * KNUTH, F.lit(100)) < rate)
         .select("doc_id", "lang")
     )
 
@@ -357,7 +351,7 @@ _CURATE_SQL = (
     "SELECT q.doc_id, docs.lang FROM quality q "
     "JOIN documents docs USING (doc_id) "
     "WHERE q.doc_id NOT IN (SELECT doc_id FROM dropped_dups) "
-    f"AND (q.doc_id * {_KNUTH}) % 100 < 50"
+    f"AND (q.doc_id * {KNUTH}) % 100 < 50"
 )
 
 
@@ -392,7 +386,7 @@ def pipeline_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         quality.join(docs.select("doc_id", "lang"), "doc_id")
         .join(dropped, "doc_id", "left_anti")
-        .filter(F.pmod(F.col("doc_id") * _KNUTH, F.lit(100)) < 50)
+        .filter(F.pmod(F.col("doc_id") * KNUTH, F.lit(100)) < 50)
         .select("doc_id", "lang")
     )
 
@@ -441,7 +435,7 @@ def profile_table(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"CAST(MAX({c}) AS DOUBLE) AS max_v FROM {{li}}"
         for c in cols
     ]
-    return sql_over(" UNION ALL ".join(parts), li=li)
+    return spark.sql(" UNION ALL ".join(parts), li=li)
 
 
 @query(
@@ -690,8 +684,8 @@ def incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "  FROM grams g LEFT JOIN bgrams b USING (gram) GROUP BY g.doc_id), "
         "clean AS (SELECT d.doc_id, d.n_toks FROM d "
         "  LEFT JOIN cont USING (doc_id) WHERE COALESCE(cont.c, 0) <= 0.1), "
-        f"train AS (SELECT * FROM clean WHERE (doc_id * {_KNUTH}) % 100 < 80) "
-        f"SELECT (doc_id * {_KNUTH}) % 16 AS shard, COUNT(*) AS n_docs, "
+        f"train AS (SELECT * FROM clean WHERE (doc_id * {KNUTH}) % 100 < 80) "
+        f"SELECT (doc_id * {KNUTH}) % 16 AS shard, COUNT(*) AS n_docs, "
         "CAST(SUM(n_toks) AS BIGINT) AS n_tokens FROM train GROUP BY 1"
     ),
 )
@@ -738,9 +732,9 @@ def pipeline_pretrain_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     clean = d.join(cont, "doc_id", "left").filter(
         F.coalesce(F.col("c"), F.lit(0.0)) <= 0.1
     )
-    train = clean.filter(F.pmod(F.col("doc_id") * _KNUTH, F.lit(100)) < 80)
+    train = clean.filter(F.pmod(F.col("doc_id") * KNUTH, F.lit(100)) < 80)
     return train.groupBy(
-        F.pmod(F.col("doc_id") * _KNUTH, F.lit(16)).alias("shard")
+        F.pmod(F.col("doc_id") * KNUTH, F.lit(16)).alias("shard")
     ).agg(
         F.count("*").alias("n_docs"),
         F.sum("n_toks").cast("long").alias("n_tokens"),
@@ -1082,7 +1076,7 @@ _MASK_POS_K = 40503  # position mixer (16-bit Knuth-style odd constant)
         "tk AS (SELECT doc_id, CAST(len(a) AS BIGINT) AS n_tokens FROM al), "
         "pos AS (SELECT doc_id, i FROM al, unnest(range(1, len(a) + 1)) AS t(i)), "
         f"m AS (SELECT doc_id, i FROM pos "
-        f"  WHERE (doc_id * {_KNUTH} + i * {_MASK_POS_K}) % 1000 < {_MASK_PERMILLE}), "
+        f"  WHERE (doc_id * {KNUTH} + i * {_MASK_POS_K}) % 1000 < {_MASK_PERMILLE}), "
         "isl AS (SELECT doc_id, i - row_number() OVER ("
         "  PARTITION BY doc_id ORDER BY i) AS g FROM m), "
         "sp AS (SELECT doc_id, g, CAST(COUNT(*) AS BIGINT) AS len FROM isl GROUP BY 1, 2), "
@@ -1120,7 +1114,7 @@ def mask_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = pos.filter(
         F.pmod(
-            F.col("doc_id") * _KNUTH + F.col("i") * _MASK_POS_K, F.lit(1000)
+            F.col("doc_id") * KNUTH + F.col("i") * _MASK_POS_K, F.lit(1000)
         )
         < _MASK_PERMILLE
     )
@@ -1452,8 +1446,8 @@ def _sync_dirty(src: DataFrame, tgt: DataFrame) -> DataFrame:
         return (
             df.select(
                 F.expr(f"o_orderkey DIV {_SYNC_BUCKET}").alias("bkt"),
-                F.conv(F.substring(h, 1, 6), 16, 10).cast("long").alias("w1"),
-                F.conv(F.substring(h, 7, 6), 16, 10).cast("long").alias("w2"),
+                hex_int(h, 1, 6).alias("w1"),
+                hex_int(h, 7, 6).alias("w2"),
             )
             .groupBy("bkt")
             .agg(
@@ -1869,14 +1863,14 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> dict:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderstatus", "o_totalprice"
         )
-        base = orders.filter(F.pmod(F.col("o_orderkey") * _KNUTH, F.lit(10)) < 8)
+        base = orders.filter(F.pmod(F.col("o_orderkey") * KNUTH, F.lit(10)) < 8)
         c1 = os.path.join(root, "c1")
         base.repartition(2).write.mode("overwrite").parquet(c1)
         s1_files = _files(c1)
         with open(os.path.join(root, "manifest_s1.json"), "w") as fh:
             json.dump({"snapshot": "s1", "files": s1_files}, fh)
         # post-snapshot commit: late rows + repriced rewrites of the base
-        late = orders.filter(F.pmod(F.col("o_orderkey") * _KNUTH, F.lit(10)) >= 8)
+        late = orders.filter(F.pmod(F.col("o_orderkey") * KNUTH, F.lit(10)) >= 8)
         repriced = base.filter(F.col("o_orderkey") % 5 == 0).withColumn(
             "o_totalprice", F.col("o_totalprice") * 2
         )
@@ -1908,7 +1902,7 @@ def _stage_versioned_orders(spark: SparkSession, sf_dir: str) -> dict:
         "CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) "
         "  AS BIGINT) AS sum_cents, "
         "CAST(MAX(o_orderkey) AS BIGINT) AS max_key "
-        f"FROM orders WHERE (o_orderkey * {_KNUTH}) % 10 < 8 "
+        f"FROM orders WHERE (o_orderkey * {KNUTH}) % 10 < 8 "
         "GROUP BY o_orderstatus"
     ),
 )
@@ -1950,10 +1944,10 @@ def source_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=(
         "WITH delta AS ("
         f"  SELECT o_orderkey, o_orderstatus, o_totalprice FROM orders "
-        f"  WHERE (o_orderkey * {_KNUTH}) % 10 >= 8 "
+        f"  WHERE (o_orderkey * {KNUTH}) % 10 >= 8 "
         "  UNION ALL "
         f"  SELECT o_orderkey, o_orderstatus, o_totalprice * 2 FROM orders "
-        f"  WHERE (o_orderkey * {_KNUTH}) % 10 < 8 AND o_orderkey % 5 = 0) "
+        f"  WHERE (o_orderkey * {KNUTH}) % 10 < 8 AND o_orderkey % 5 = 0) "
         "SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS cnt, "
         "CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) "
         "  AS BIGINT) AS sum_cents, "
@@ -1999,7 +1993,7 @@ def source_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT o_orderstatus, CAST(COUNT(*) AS BIGINT) AS cnt, "
         "CAST(SUM(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)) "
         "  AS BIGINT) AS sum_cents "
-        f"FROM orders WHERE (o_orderkey * {_KNUTH}) % 10 < 8 "
+        f"FROM orders WHERE (o_orderkey * {KNUTH}) % 10 < 8 "
         "AND o_orderkey % 7 = 3 GROUP BY o_orderstatus"
     ),
 )
@@ -2070,7 +2064,7 @@ def _stage_posdelete_table(spark: SparkSession, sf_dir: str) -> dict:
             "o_orderkey",
             "o_orderstatus",
             "o_totalprice",
-            F.pmod(F.col("o_orderkey") * _KNUTH, F.lit(4)).alias("bucket"),
+            F.pmod(F.col("o_orderkey") * KNUTH, F.lit(4)).alias("bucket"),
         )
         (
             orders.repartition(4, "bucket")

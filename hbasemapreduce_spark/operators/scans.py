@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..catalog import load_table, read_parquet
+from ..functions.determinism import hex_int, hex_int_duck
 from ..functions.staging import sink_dir, staged
 from ..registry import query
 from .common import LINEITEM_SQL, lineitem_select
@@ -514,14 +515,7 @@ _RSP_RATE = 10  # keep keys whose md5 draw is 0 mod 10 (~10% sample)
     category="sink",
     oracle=(
         "WITH s AS (SELECT o_orderkey FROM orders WHERE "
-        "  ("
-        + "CAST("
-        + " + ".join(
-            "(strpos('0123456789abcdef', substr(md5(CAST(o_orderkey AS VARCHAR)), "
-            f"{1 + i}, 1)) - 1) * {16 ** (5 - i)}"
-            for i in range(6)
-        )
-        + " AS BIGINT)"
+        f"  ({hex_int_duck('md5(CAST(o_orderkey AS VARCHAR))', 1, 6)}"
         f"  ) % {_RSP_RATE} = 0), "
         f"t AS (SELECT o_orderkey, ntile({_RSP_REGIONS}) OVER "
         "  (ORDER BY o_orderkey) AS tile FROM s), "
@@ -559,9 +553,7 @@ def region_split_points(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     orders = load_table(spark, sf_dir, "orders").select("o_orderkey")
-    draw = F.conv(
-        F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 6), 16, 10
-    ).cast("long")
+    draw = hex_int(F.md5(F.col("o_orderkey").cast("string")), 1, 6)
     s = orders.filter(draw % _RSP_RATE == 0)
     t = s.select(
         "o_orderkey",

@@ -31,16 +31,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..functions.determinism import KNUTH
 from ..registry import query
-
-_KNUTH = 2654435761  # engine-portable multiplicative hash (pipeline.py)
 
 
 @query(
     "x_stats_abtest",
     category="agg",
     oracle=(
-        f"WITH e AS (SELECT event_type, value, (user_id * {_KNUTH}) % 2 AS variant "
+        f"WITH e AS (SELECT event_type, value, (user_id * {KNUTH}) % 2 AS variant "
         "           FROM events), "
         "m AS ("
         "  SELECT event_type, variant, COUNT(*) AS n, "
@@ -75,7 +74,7 @@ def stats_abtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "value",
-        (F.pmod(F.col("user_id") * _KNUTH, F.lit(2))).alias("variant"),
+        (F.pmod(F.col("user_id") * KNUTH, F.lit(2))).alias("variant"),
     )
     v = F.col("value")
 
@@ -180,7 +179,7 @@ def stats_linreg(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_shard_manifest",
     category="pipeline",
     oracle=(
-        f"WITH s AS (SELECT doc_id, n_chars, (doc_id * {_KNUTH}) % 16 AS shard, "
+        f"WITH s AS (SELECT doc_id, n_chars, (doc_id * {KNUTH}) % 16 AS shard, "
         "            length(string_split(text, ' ')) AS n_toks FROM documents) "
         "SELECT shard, COUNT(*) AS n_docs, "
         "CAST(SUM(n_toks) AS BIGINT) AS n_tokens, "
@@ -203,7 +202,7 @@ def shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = docs.select(
         "doc_id",
         "n_chars",
-        F.pmod(F.col("doc_id") * _KNUTH, F.lit(16)).alias("shard"),
+        F.pmod(F.col("doc_id") * KNUTH, F.lit(16)).alias("shard"),
         F.size(F.split("text", " ")).alias("n_toks"),
     )
     return s.groupBy("shard").agg(
@@ -796,7 +795,7 @@ _PQ_K = 16  # codes per subspace -> 16^4 = 65536 cells, 16 bits/vector
 PQ_SEED_SQL = (
     "pseeds AS (SELECT vec_id, row_number() OVER (ORDER BY vec_id) - 1 AS cid "
     "  FROM (SELECT vec_id FROM e "
-    f"        ORDER BY (vec_id * 2654435761) % 4294967296, vec_id LIMIT {_PQ_K}))"
+    f"        ORDER BY (vec_id * {KNUTH}) % 4294967296, vec_id LIMIT {_PQ_K}))"
 )
 
 
@@ -901,7 +900,7 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
     # corpus-sized sub x seeds equi-join and its aggregate are gone
     seeds = (
         e.select("vec_id", "m")
-        .orderBy(F.pmod(F.col("vec_id") * 2654435761, F.lit(4294967296)), "vec_id")
+        .orderBy(F.pmod(F.col("vec_id") * KNUTH, F.lit(4294967296)), "vec_id")
         .limit(_PQ_K)
     )
     seeds = seeds.select(
@@ -2202,8 +2201,8 @@ def eval_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="stats_ml",
     oracle=(
         "WITH r AS (SELECT o.o_custkey AS user_id, "
-        f"  (l.l_partkey * {_KNUTH}) % 16 + 1 AS v1, "
-        f"  ((l.l_partkey + 1) * {_KNUTH}) % 16 + 1 AS v2, "
+        f"  (l.l_partkey * {KNUTH}) % 16 + 1 AS v1, "
+        f"  ((l.l_partkey + 1) * {KNUTH}) % 16 + 1 AS v2, "
         "  CAST(CAST(l.l_quantity AS DECIMAL(12,2)) * 100 AS BIGINT) AS rc "
         "  FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey), "
         "m AS (SELECT user_id, CAST(COUNT(*) AS BIGINT) AS n, "
@@ -2248,8 +2247,8 @@ def ml_als_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     compose across jobs, as in production ALS)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey",
-        ((F.col("l_partkey") * _KNUTH) % 16 + 1).alias("v1"),
-        (((F.col("l_partkey") + 1) * _KNUTH) % 16 + 1).alias("v2"),
+        ((F.col("l_partkey") * KNUTH) % 16 + 1).alias("v1"),
+        (((F.col("l_partkey") + 1) * KNUTH) % 16 + 1).alias("v2"),
         (F.col("l_quantity").cast("decimal(12,2)") * 100)
         .cast("long")
         .alias("rc"),
@@ -2311,7 +2310,7 @@ _BOOT_W_SQL = (
         "full_est AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n, "
         "  CAST(SUM(cents) AS BIGINT) AS sum_cents FROM r GROUP BY 1), "
         "reps AS (SELECT r.event_type, t.b, "
-        f"  (r.event_id * {_KNUTH} + (t.b + 1) * {_BOOT_H2}) % 1000000 AS u, "
+        f"  (r.event_id * {KNUTH} + (t.b + 1) * {_BOOT_H2}) % 1000000 AS u, "
         "  r.cents "
         f"  FROM r, range(0, {_BOOT_B}) AS t(b)), "
         f"w AS (SELECT event_type, b, {_BOOT_W_SQL} AS w, cents FROM reps), "
@@ -2374,7 +2373,7 @@ def stats_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "b",
         (
-            (F.col("event_id") * _KNUTH + (F.col("b") + 1) * _BOOT_H2)
+            (F.col("event_id") * KNUTH + (F.col("b") + 1) * _BOOT_H2)
             % 1_000_000
         ).alias("u"),
         "cents",
@@ -2681,7 +2680,7 @@ def funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_stats_srm",
     category="stats_ml",
     oracle=(
-        f"WITH e AS (SELECT event_type, (user_id * {_KNUTH}) % 2 AS variant "
+        f"WITH e AS (SELECT event_type, (user_id * {KNUTH}) % 2 AS variant "
         "           FROM events), "
         "m AS (SELECT event_type, "
         "  CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) "
@@ -2719,7 +2718,7 @@ def stats_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: one fact-scan hash aggregate, |types| rows out."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.col("user_id") * _KNUTH) % 2).alias("variant"),
+        ((F.col("user_id") * KNUTH) % 2).alias("variant"),
     )
     m = ev.groupBy("event_type").agg(
         F.sum(F.when(F.col("variant") == 0, 1).otherwise(0))
@@ -3389,7 +3388,7 @@ _JK_B = 32  # user buckets; delete-one-bucket jackknife replicates
     category="stats_ml",
     oracle=(
         "WITH u AS (SELECT event_type, user_id, "
-        f"  (user_id * {_KNUTH}) % {_JK_B} AS b, "
+        f"  (user_id * {KNUTH}) % {_JK_B} AS b, "
         "  CAST(SUM(CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)) "
         "    AS BIGINT) AS uc "
         "  FROM events GROUP BY 1, 2, 3), "
@@ -3438,7 +3437,7 @@ def stats_jackknife(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "user_id",
-            F.pmod(F.col("user_id") * _KNUTH, F.lit(_JK_B)).alias("b"),
+            F.pmod(F.col("user_id") * KNUTH, F.lit(_JK_B)).alias("b"),
             (F.col("value").cast("decimal(18,2)") * 100)
             .cast("long")
             .alias("cents"),
@@ -3684,7 +3683,7 @@ _MOM_B = 32  # estimator buckets
     category="stats_ml",
     oracle=(
         "WITH e AS (SELECT event_type, "
-        f"  (event_id * {_KNUTH}) % {_MOM_B} AS b, "
+        f"  (event_id * {KNUTH}) % {_MOM_B} AS b, "
         "  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
         "  FROM events), "
         "bk AS (SELECT event_type, b, CAST(COUNT(*) AS BIGINT) AS n_b, "
@@ -3727,7 +3726,7 @@ def agg_median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.pmod(F.col("event_id") * _KNUTH, F.lit(_MOM_B)).alias("b"),
+        F.pmod(F.col("event_id") * KNUTH, F.lit(_MOM_B)).alias("b"),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
     )
     bk = e.groupBy("event_type", "b").agg(
@@ -4069,7 +4068,7 @@ def time_sax(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="stats_ml",
     oracle=(
         "WITH ev AS (SELECT event_type, "
-        f"  (user_id * {_KNUTH}) % 2 AS variant, "
+        f"  (user_id * {KNUTH}) % 2 AS variant, "
         "  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents, "
         "  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS day "
         "  FROM events), "
@@ -4118,7 +4117,7 @@ def stats_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     midpoint, |types| rows out."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.col("user_id") * _KNUTH) % 2).alias("variant"),
+        ((F.col("user_id") * KNUTH) % 2).alias("variant"),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
         F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01").cast("date"))
         .cast("long")
@@ -5140,7 +5139,7 @@ def eval_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_stats_mann_whitney",
     category="stats_ml",
     oracle=(
-        f"WITH e AS (SELECT event_type, (user_id * {_KNUTH}) % 2 AS variant, "
+        f"WITH e AS (SELECT event_type, (user_id * {KNUTH}) % 2 AS variant, "
         "  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
         "  FROM events), "
         "g AS (SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS m, "
@@ -5184,7 +5183,7 @@ def stats_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     final aggregate.  The corpus is touched exactly once."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        (F.col("user_id") * _KNUTH % 2).alias("variant"),
+        (F.col("user_id") * KNUTH % 2).alias("variant"),
         (F.col("value").cast("decimal(18,2)") * 100).cast("long").alias("cents"),
     )
     from pyspark.sql import Window
@@ -5232,22 +5231,22 @@ _PERM_B = 32  # deterministic label permutations (salted Knuth re-hash)
         "  CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents "
         "  FROM events), "
         f"obs AS (SELECT event_type, "
-        f"  CAST(SUM(cents) FILTER (WHERE (user_id * {_KNUTH}) % 2 = 1) "
+        f"  CAST(SUM(cents) FILTER (WHERE (user_id * {KNUTH}) % 2 = 1) "
         "    AS HUGEINT) AS s1, "
-        f"  CAST(COUNT(*) FILTER (WHERE (user_id * {_KNUTH}) % 2 = 1) "
+        f"  CAST(COUNT(*) FILTER (WHERE (user_id * {KNUTH}) % 2 = 1) "
         "    AS HUGEINT) AS n1, "
-        f"  CAST(SUM(cents) FILTER (WHERE (user_id * {_KNUTH}) % 2 = 0) "
+        f"  CAST(SUM(cents) FILTER (WHERE (user_id * {KNUTH}) % 2 = 0) "
         "    AS HUGEINT) AS s0, "
-        f"  CAST(COUNT(*) FILTER (WHERE (user_id * {_KNUTH}) % 2 = 0) "
+        f"  CAST(COUNT(*) FILTER (WHERE (user_id * {KNUTH}) % 2 = 0) "
         "    AS HUGEINT) AS n0 FROM e GROUP BY 1), "
         f"p AS (SELECT event_type, t.b AS b, "
-        f"  CAST(SUM(cents) FILTER (WHERE ((user_id + t.b) * {_KNUTH}) % 2 = 1) "
+        f"  CAST(SUM(cents) FILTER (WHERE ((user_id + t.b) * {KNUTH}) % 2 = 1) "
         "    AS HUGEINT) AS s1, "
-        f"  CAST(COUNT(*) FILTER (WHERE ((user_id + t.b) * {_KNUTH}) % 2 = 1) "
+        f"  CAST(COUNT(*) FILTER (WHERE ((user_id + t.b) * {KNUTH}) % 2 = 1) "
         "    AS HUGEINT) AS n1, "
-        f"  CAST(SUM(cents) FILTER (WHERE ((user_id + t.b) * {_KNUTH}) % 2 = 0) "
+        f"  CAST(SUM(cents) FILTER (WHERE ((user_id + t.b) * {KNUTH}) % 2 = 0) "
         "    AS HUGEINT) AS s0, "
-        f"  CAST(COUNT(*) FILTER (WHERE ((user_id + t.b) * {_KNUTH}) % 2 = 0) "
+        f"  CAST(COUNT(*) FILTER (WHERE ((user_id + t.b) * {KNUTH}) % 2 = 0) "
         "    AS HUGEINT) AS n0 "
         f"  FROM e, unnest(range(1, {_PERM_B} + 1)) AS t(b) GROUP BY 1, 2), "
         "x AS (SELECT p.event_type, p.b, "
@@ -5322,7 +5321,7 @@ def stats_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.explode(F.sequence(F.lit(0), F.lit(_PERM_B))).alias("b"),
         )
         .groupBy("event_type", "b")
-        .agg(*halves(e, (F.col("user_id") + F.col("b")) * _KNUTH % 2))
+        .agg(*halves(e, (F.col("user_id") + F.col("b")) * KNUTH % 2))
         .localCheckpoint(eager=False)
     )
     obs = ab.filter(F.col("b") == 0).drop("b")

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..functions.determinism import srm_chi2_micro
+from ..functions.determinism import KNUTH, srm_chi2_micro
 from ..functions.sessionize import sessionize
 from ..registry import query
 
@@ -525,7 +525,7 @@ def srm_expr(ev: DataFrame) -> DataFrame:
     v = ev.select(
         "ts",
         "event_type",
-        ((F.col("user_id") * 2654435761) % 2).alias("variant"),
+        ((F.col("user_id") * KNUTH) % 2).alias("variant"),
     )
     chi2 = srm_chi2_micro()
     return (
@@ -557,7 +557,7 @@ def srm_expr(ev: DataFrame) -> DataFrame:
         "  FROM events), "
         "v AS (SELECT CAST(floor(epoch(date_trunc('hour', "
         "    CAST(ts AS TIMESTAMP)))) AS BIGINT) AS hs, event_type, "
-        "  (user_id * 2654435761) % 2 AS variant FROM events), "
+        f"  (user_id * {KNUTH}) % 2 AS variant FROM events), "
         "m AS (SELECT hs, event_type, "
         "  CAST(SUM(CASE WHEN variant = 0 THEN 1 ELSE 0 END) AS BIGINT) "
         "    AS obs_a, "

@@ -103,16 +103,6 @@ def session(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return (
-        events_stream(spark, sf_dir)
-        .withWatermark("ts", "1 hour")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("cnt"))
-        .select(F.unix_timestamp("w.start").alias("ws"), "event_type", "cnt")
-    )
-
-
 def dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         events_stream(spark, sf_dir)
@@ -156,7 +146,7 @@ MIRRORS = {
     "stream_tumbling": tumbling,
     "stream_sliding": sliding,
     "stream_session": session,
-    "stream_late_data": late_data,
+    "stream_late_data": tumbling,  # the same 1-hour watermarked window
     "stream_dedup": dedup,
     "x_time_ohlc": ohlc,
 }

@@ -10,6 +10,7 @@ must be fixed in the query, not the test.
 
 from __future__ import annotations
 
+import ast
 import contextlib
 import io
 import os
@@ -98,6 +99,19 @@ def oracle():
         )
     yield con
     con.close()
+
+
+def docstring_ids(tree: ast.AST) -> set[int]:
+    """ids of the docstring constants in ``tree``, for source guards
+    that scan string constants but let prose name an idiom."""
+    return {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
 
 
 def canonicalize(pdf: pd.DataFrame) -> pd.DataFrame:

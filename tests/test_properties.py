@@ -4,13 +4,16 @@ at ANY scale factor, complementing the value-exact oracle tests.
 
 from __future__ import annotations
 
+import ast
+
 import pytest
 from pyspark.sql import functions as F
 
 from hbasemapreduce_spark.catalog import load_table
+from hbasemapreduce_spark.functions.determinism import KNUTH
 from hbasemapreduce_spark.registry import all_specs
 
-from .conftest import SF_DIR, assert_frames_match
+from .conftest import SF_DIR, assert_frames_match, docstring_ids
 
 SPECS = all_specs()
 
@@ -866,12 +869,10 @@ def test_abtest_tstat_antisymmetric_under_variant_swap(spark):
     # Swapping variant labels must exactly negate every t-statistic and
     # swap the per-variant columns — checked by recomputing with the
     # hash parity flipped.
-    import hbasemapreduce_spark.operators.stats_ml as sm
-
     base = {r.event_type: r for r in q(spark, "x_stats_abtest").collect()}
     ev = load_table(spark, SF_DIR, "events").select(
         "event_type", "value",
-        (1 - F.pmod(F.col("user_id") * sm._KNUTH, F.lit(2))).alias("variant"),
+        (1 - F.pmod(F.col("user_id") * KNUTH, F.lit(2))).alias("variant"),
     )
     v = F.col("value")
     m = ev.groupBy("event_type").agg(
@@ -3440,3 +3441,93 @@ def test_split_long_sum_matches_decimal_sandwich(spark):
             repr(got[g]),
             repr(want[g]),
         )
+
+
+# -- engine-portable hashes: one definition, four agreeing spellings ----
+
+_HASH_STRINGS = ("0123456789abcdef", "conv(", str(KNUTH))
+
+
+def _portable_hash_spellings(path) -> list[str]:
+    tree = ast.parse(path.read_text())
+    docstrings = docstring_ids(tree)
+    found = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            if id(node) not in docstrings:
+                found += [f"{path}:{node.lineno} {s!r}" for s in _HASH_STRINGS if s in node.value]
+        elif isinstance(node, ast.Constant) and node.value == KNUTH:
+            found.append(f"{path}:{node.lineno} {KNUTH}")
+        elif (
+            isinstance(node, ast.Attribute)
+            and node.attr == "conv"
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "F"
+        ):
+            found.append(f"{path}:{node.lineno} F.conv")
+    return found
+
+
+def test_only_determinism_module_spells_portable_hashes():
+    # The md5-hex parse and the Knuth constant are spelled once, in
+    # functions/determinism.py; every operator and oracle calls them.
+    from pathlib import Path
+
+    from hbasemapreduce_spark.functions import determinism
+
+    own = Path(determinism.__file__).resolve()
+    found = [
+        use
+        for path in sorted(own.parents[1].rglob("*.py"))
+        if path != own
+        for use in _portable_hash_spellings(path)
+    ]
+    assert found == [], found
+    assert _portable_hash_spellings(own)  # the scan does see the spellings where they live
+
+
+def test_portable_hex_parse_agrees_across_spellings(spark):
+    # Spark Column, Spark SQL and DuckDB spellings of the hex parse all
+    # equal Python's int(md5 hex span, 16), for fixed spans and for one
+    # digit at a SQL-computed position.
+    import hashlib
+
+    import duckdb
+
+    from hbasemapreduce_spark.functions.determinism import (
+        hex_digit_duck,
+        hex_int,
+        hex_int_duck,
+        hex_int_sql,
+    )
+
+    spans = [(1, 12), (1, 6), (7, 6), (19, 6)]
+    pos = "k % 32 + 1"  # walks every digit of the 32-char md5
+    keys = range(300)
+    want = {}
+    for k in keys:
+        h = hashlib.md5(str(k).encode()).hexdigest()
+        want[k] = tuple(int(h[s - 1 : s - 1 + n], 16) for s, n in spans) + (int(h[k % 32], 16),)
+
+    base = spark.range(keys.start, keys.stop).select(
+        F.col("id").alias("k"), F.md5(F.col("id").cast("string")).alias("h")
+    )
+    spark_col = base.select(
+        "k", *[hex_int("h", s, n) for s, n in spans], F.expr(hex_int_sql("h", pos, 1))
+    )
+    spark_sql = base.select(
+        "k", *[F.expr(hex_int_sql("h", s, n)) for s, n in spans], F.expr(hex_int_sql("h", pos, 1))
+    )
+    duck = duckdb.connect().execute(
+        "SELECT k, "
+        + ", ".join([hex_int_duck("h", s, n) for s, n in spans] + [hex_digit_duck("h", pos)])
+        + f" FROM (SELECT range AS k, md5(CAST(range AS VARCHAR)) AS h "
+        f"FROM range({keys.start}, {keys.stop}))"
+    ).fetchall()
+    for name, rows in [
+        ("spark column", [tuple(r) for r in spark_col.collect()]),
+        ("spark sql", [tuple(r) for r in spark_sql.collect()]),
+        ("duckdb", duck),
+    ]:
+        got = {r[0]: tuple(r[1:]) for r in rows}
+        assert got == want, name

@@ -893,12 +893,8 @@ def test_bootstrap_weights_census_matches_poisson_design(spark):
     # lesson: engine agreement is blind to a degenerate draw stream,
     # so the draw law must be asserted against its DESIGN directly,
     # with hashes recomputed independently of both engines).
-    from hbasemapreduce_spark.operators.stats_ml import (
-        _BOOT_B,
-        _BOOT_CDF,
-        _BOOT_H2,
-        _KNUTH,
-    )
+    from hbasemapreduce_spark.functions.determinism import KNUTH
+    from hbasemapreduce_spark.operators.stats_ml import _BOOT_B, _BOOT_CDF, _BOOT_H2
     from hbasemapreduce_spark.registry import all_specs
 
     from .conftest import SF_DIR
@@ -915,7 +911,7 @@ def test_bootstrap_weights_census_matches_poisson_design(spark):
     # weight's observed frequency lands within ~5 sigma of design.
     n_ids = 4096
     census: Counter[int] = Counter(
-        weight((eid * _KNUTH + (b + 1) * _BOOT_H2) % 1_000_000)
+        weight((eid * KNUTH + (b + 1) * _BOOT_H2) % 1_000_000)
         for eid in range(1, n_ids + 1)
         for b in range(_BOOT_B)
     )
@@ -931,7 +927,7 @@ def test_bootstrap_weights_census_matches_poisson_design(spark):
     assert len(census) >= 5
     some_id = 17
     per_b = {
-        weight((some_id * _KNUTH + (b + 1) * _BOOT_H2) % 1_000_000)
+        weight((some_id * KNUTH + (b + 1) * _BOOT_H2) % 1_000_000)
         for b in range(_BOOT_B)
     }
     assert len(per_b) > 1, "replicate index does not perturb the draw"
@@ -950,11 +946,8 @@ def test_rr_coin_census_matches_design_probabilities(spark):
     # and lie-category draw (VERDICT r7 item 5), recomputed over the
     # ACTUAL customer keys so a key-pattern/hash interaction (the
     # 2-adic-valuation failure mode) cannot hide.
-    from hbasemapreduce_spark.operators.analytics import (
-        _KNUTH,
-        _RR_H2,
-        _RR_KEEP_PPM,
-    )
+    from hbasemapreduce_spark.functions.determinism import KNUTH
+    from hbasemapreduce_spark.operators.analytics import _RR_H2, _RR_KEEP_PPM
 
     from .conftest import SF_DIR
 
@@ -965,7 +958,7 @@ def test_rr_coin_census_matches_design_probabilities(spark):
     assert n > 0 and k_dom > 1
 
     # Keep-coin: P(report truth) = _RR_KEEP_PPM ppm by design.
-    keeps = sum(1 for c in keys if (c * _KNUTH) % 1_000_000 < _RR_KEEP_PPM)
+    keeps = sum(1 for c in keys if (c * KNUTH) % 1_000_000 < _RR_KEEP_PPM)
     p = _RR_KEEP_PPM / 1_000_000
     tol = 5 * (p * (1 - p) / n) ** 0.5 + 0.01
     assert abs(keeps / n - p) <= tol, (keeps / n, p)

@@ -33,6 +33,8 @@ from hbasemapreduce_spark.functions.staging import (
     staged,
 )
 
+from .conftest import docstring_ids
+
 
 def _mk(path: str) -> None:
     os.makedirs(path, exist_ok=True)
@@ -179,14 +181,7 @@ _STAGING_NAMES = {"SCRATCH", "fingerprinted_dir", "prune_superseded", "repo_root
 
 def _staging_idiom_uses(path: Path) -> list[str]:
     tree = ast.parse(path.read_text())
-    docstrings = {
-        id(node.body[0].value)
-        for node in ast.walk(tree)
-        if isinstance(node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef))
-        and node.body
-        and isinstance(node.body[0], ast.Expr)
-        and isinstance(node.body[0].value, ast.Constant)
-    }
+    docstrings = docstring_ids(tree)
     found = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Constant) and isinstance(node.value, str):

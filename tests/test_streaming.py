@@ -14,9 +14,10 @@ from hbasemapreduce_spark.streaming.mirrors import run_mirror_to_memory
 from .conftest import SF_DIR
 
 
-def test_stream_tumbling_matches_batch(spark):
-    got = run_mirror_to_memory(spark, SF_DIR, "stream_tumbling", output_mode="complete")
-    batch = all_specs()["stream_tumbling"].fn(spark, SF_DIR)
+@pytest.mark.parametrize("key", ["stream_tumbling", "stream_sliding"])
+def test_stream_window_mirror_matches_batch(spark, key):
+    got = run_mirror_to_memory(spark, SF_DIR, key, output_mode="complete")
+    batch = all_specs()[key].fn(spark, SF_DIR)
     g = {tuple(r) for r in got.collect()}
     b = {tuple(r) for r in batch.collect()}
     assert g == b
