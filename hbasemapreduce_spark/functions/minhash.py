@@ -60,9 +60,10 @@ Portable-twin stage profile (r7, sf0.1, warm, this box cpu_probe
 ~0.11 s): element table 0.85 s, +md5/conv hashes to 0.9 s, +64-pmod
 signature aggregate to 1.4 s, full operator 2.5-2.6 s — the remaining
 ~1.2 s is the band self-join + bounded verify's four stage barriers.
-BENCH_r07's 4.11 s median for the same plan is box-state variance
-(see BENCH_TREND "Box-speed normalization"); no stage dominates
-anomalously and every corpus-sized stage is a single codegen'd pass.
+The round-7 bench's 4.11 s median for the same plan is box-state
+variance: the same plan ran 2.5-2.6 s warm on a quiet box, no stage
+dominates anomalously and every corpus-sized stage is a single
+codegen'd pass.
 """
 
 from __future__ import annotations

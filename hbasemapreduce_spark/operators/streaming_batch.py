@@ -110,8 +110,9 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
 )
 def stream_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark emulation: keep only events within 1h of max(ts), then
-    aggregate.  (Streaming twin: withWatermark('ts', '1 hour').)
+    """Late-data cut: keep only events within 1h of the global max(ts),
+    then aggregate.  No streaming mirror: a watermark bounds state, it
+    does not filter on the final max(ts).
 
     The scalar max is computed as a 1-row DataFrame and broadcast-cross-
     joined — no collect(), so the plan stays fully distributed.

@@ -9,7 +9,6 @@ the *same logical expression* as its batch twin:
     batch  groupBy(window(ts, '1 hour'))         = stream_tumbling
     batch  window(ts, '1 hour', '15 minutes')    = stream_sliding
     batch  lag+cumsum sessionize                 = session_window(ts, '30 min')
-    batch  filter ts >= max(ts) - 1h             = withWatermark('ts', '1 hour')
     batch  row_number over event_id = 1          = dropDuplicates after watermark
 
 State-store notes for a real cluster: watermarks bound state (eviction
@@ -142,11 +141,11 @@ def ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# No stream_late_data mirror: its 1 h cut is from the global max(ts), not a watermark.
 MIRRORS = {
     "stream_tumbling": tumbling,
     "stream_sliding": sliding,
     "stream_session": session,
-    "stream_late_data": tumbling,  # the same 1-hour watermarked window
     "stream_dedup": dedup,
     "x_time_ohlc": ohlc,
 }

@@ -5,7 +5,8 @@ Round 3's driver bench died with rc=1 and ZERO timings because one key
 loop had no per-query try/except.  These tests prove the rewritten loop
 survives a deliberately-broken spec: the breakage costs exactly one
 `errors` entry and every other key still gets a timing and its executor
-CPU-seconds.  The final summary line must fit the driver's stdout tail.
+CPU-seconds and layer record.  The final summary line must fit the
+driver's stdout tail.
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import bench
+import etlbench.harness
 
 
 @dataclass(frozen=True)
@@ -43,7 +45,9 @@ def test_broken_key_cannot_void_the_bench(spark, tmp_path):
         "broken_build": _FakeSpec("broken_build", _broken_at_build_time),
         "good_b": _FakeSpec("good_b", _good),
     }
-    timings, passes, errors, cpu_sec = bench.time_queries(spark, specs, str(tmp_path))
+    timings, passes, errors, cpu_sec, layers = bench.time_queries(
+        spark, specs, str(tmp_path)
+    )
     # the two good keys timed; the two broken keys isolated into errors
     assert set(timings) == {"good_a", "good_b"}
     assert set(errors) == {"broken_plan", "broken_build"}
@@ -53,27 +57,39 @@ def test_broken_key_cannot_void_the_bench(spark, tmp_path):
     # executor CPU-seconds for every good key, none for a broken one
     assert set(cpu_sec) == {"good_a", "good_b"}
     assert all(v >= 0 for v in cpu_sec.values())
+    # a layer record for every good key, none for a broken one
+    assert set(layers) == {"good_a", "good_b"}
+    for record in layers.values():
+        assert {"build_s", "plan_s", "exec_s", "stages", "jobs.build", "jobs.exec"} <= set(record)
+        assert any(k.startswith("plan.") for k in record)
+        assert record["exec_s"] >= 0 and record["stages"] >= 1
 
 
 def test_all_good_keys_have_no_errors(spark, tmp_path):
     specs = {f"k{i}": _FakeSpec(f"k{i}", _good) for i in range(3)}
-    timings, passes, errors, cpu_sec = bench.time_queries(spark, specs, str(tmp_path))
+    timings, passes, errors, cpu_sec, layers = bench.time_queries(
+        spark, specs, str(tmp_path)
+    )
     assert errors == {}
     assert set(timings) == set(specs)
     assert set(cpu_sec) == set(specs)
     assert all(v >= 0 for v in cpu_sec.values())
+    assert set(layers) == set(specs)
 
 
 def test_failed_cpu_read_keeps_the_timing(spark, tmp_path, monkeypatch):
     # The status store raises once a stage is evicted; that costs the
-    # key its CPU figure, never its timing.
+    # key its CPU figure and layer record, never its timing.
     def evicted(self, groups, full):
         raise RuntimeError("No stage with id 0")
 
-    monkeypatch.setattr(bench.StatusStore, "counters", evicted)
+    monkeypatch.setattr(etlbench.harness.StatusStore, "counters", evicted)
     specs = {"k": _FakeSpec("k", _good)}
-    timings, passes, errors, cpu_sec = bench.time_queries(spark, specs, str(tmp_path))
+    timings, passes, errors, cpu_sec, layers = bench.time_queries(
+        spark, specs, str(tmp_path)
+    )
     assert set(timings) == {"k"} and errors == {} and cpu_sec == {}
+    assert layers == {}
 
 
 def test_summary_line_fits_the_tail_at_full_registry_width():
@@ -86,9 +102,7 @@ def test_summary_line_fits_the_tail_at_full_registry_width():
     timings = {k: 1000.0 + i / 7 for i, k in enumerate(keys)}
     cpu_sec = {k: 100.0 + i / 7 for i, k in enumerate(keys)}
     errors = {k: "RuntimeError: " + "e" * 280 for k in keys[:10]}
-    line = bench.summary_line(
-        timings, errors, cpu_sec, 0.1, 12.345, [0.336, 0.351]
-    )
+    line = bench.summary_line(timings, errors, cpu_sec, 0.1, 12.345)
     summary = json.loads(line)
     assert {
         "metric", "value", "unit", "queries", "sf", "n_queries",
@@ -125,3 +139,14 @@ def test_dataset_bytes_handles_files_dirs_and_missing(tmp_path):
 
     with pytest.raises(OSError):
         dataset_bytes(str(tmp_path / "missing.parquet"))
+
+
+def test_trend_table_is_the_script_output():
+    # BENCH_TREND.md is generated, never edited by hand: a committed
+    # bench detail without its row (or a hand edit) fails here.
+    import os
+
+    import bench_trend
+
+    with open(os.path.join(os.path.dirname(bench_trend.__file__), "BENCH_TREND.md")) as f:
+        assert f.read() == bench_trend.render()
