@@ -138,25 +138,16 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact token-set Jaccard >= 0.8 between docs blocked on
     (lang, token count) — deterministic int/int division, so the oracle
     hash-matches despite the float threshold."""
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        F.array_distinct(tokens()).alias("toks"),
-        F.size(tokens()).alias("n_toks"),
-    )
-    a, b = d.alias("a"), d.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks")))
-    union = F.size(F.col("a.toks")) + F.size(F.col("b.toks")) - inter
-    jac = inter.cast("double") / union
-    return (
-        a.join(
-            b,
-            (F.col("a.lang") == F.col("b.lang"))
-            & (F.col("a.n_toks") == F.col("b.n_toks"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"), jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.8)
+    return spark.sql(
+        "WITH d AS (SELECT doc_id, lang, array_distinct(split(text, ' ')) AS toks, "
+        "  size(split(text, ' ')) AS n_toks FROM {docs}) "
+        "SELECT id_a, id_b, jaccard FROM (SELECT a.doc_id AS id_a, b.doc_id AS id_b, "
+        "  CAST(size(array_intersect(a.toks, b.toks)) AS DOUBLE) / (size(a.toks) "
+        "    + size(b.toks) - size(array_intersect(a.toks, b.toks))) AS jaccard "
+        "  FROM d a JOIN d b "
+        "  ON a.lang = b.lang AND a.n_toks = b.n_toks AND a.doc_id < b.doc_id) "
+        "WHERE jaccard >= 0.8D",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -484,29 +484,17 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     always named as the real-decode shape.  Integer energies are
     order-free, so the kernel is bit-identical to the former
     interpreted per-byte JVM fold (digest-proven at sf0.001/0.01/0.1);
-    measured 1.58 -> 0.25 s at sf0.1.  Task width is sized by input
-    bytes (the x_emb_gram_gemm rule) so the Python stage never pays
-    per-roundtrip scheduling for KB-sized slices.  Still no shuffle;
-    the operator output remains the only thing that grows."""
-    import os
-    from collections.abc import Iterator
-
+    measured 1.58 -> 0.25 s at sf0.1.  The kernel runs straight on the
+    scan's own splits, which Spark already sizes by bytes
+    (``spark.sql.files.maxPartitionBytes``), so Python tasks stay
+    MB-sized at any corpus size: one job, no shuffle.  Do not
+    repartition here: it shuffles the whole payload, and a width
+    capped at ``shuffle.partitions`` funnels a large corpus into too few
+    Python tasks.  The operator output remains the only thing that
+    grows."""
     import numpy as np
-    import pandas as pd
 
-    from .llm_similarity import dataset_bytes
-
-    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    try:
-        nbytes = dataset_bytes(os.path.join(sf_dir, "documents.parquet"))
-        width = max(1, min(n_part, nbytes // (16 << 20)))
-    except OSError:  # non-local sf_dir: keep full parallelism
-        width = n_part
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .repartition(width)
-    )
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
     def frame_energies(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -1422,57 +1422,33 @@ def sim_sparse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     once (IEEE multiplication commutes, so both directions carry the
     same sim) and one two-element ``inline`` emits both directions.
     The rest is the posting self-join, one hash aggregate and a
-    per-src WindowGroupLimit top-k."""
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
-    tf = toks.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    st = docs.agg(F.count("*").alias("n"))
-    kept = (
-        tf.select("*", F.count("*").over(Window.partitionBy("term")).alias("df"))
-        .crossJoin(F.broadcast(st))
-        .filter(F.col("df") <= F.expr("n DIV 10"))
-        .select("doc_id", "term", "df", F.expr("tf * (1000000 DIV df)").alias("w"))
-    )
-    ww = F.sum(F.col("w") * F.col("w")).over(Window.partitionBy("doc_id"))
-    p = (
-        kept.select("*", F.sqrt(ww.cast("double")).alias("nrm"))
-        .filter(F.col("df") >= 2)
-        .select("doc_id", "term", "w", "nrm")
-    )
-    a, b = p.alias("a"), p.alias("b")
-    sims = (
-        a.join(b, (F.col("a.term") == F.col("b.term")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("src"),
-            F.col("b.doc_id").alias("dst"),
-            F.col("a.nrm").alias("nrm_a"),
-            F.col("b.nrm").alias("nrm_b"),
-        )
-        .agg(F.sum(F.col("a.w") * F.col("b.w")).alias("dot"))
-        .select(
-            "src",
-            "dst",
-            F.round(F.col("dot").cast("double") / (F.col("nrm_a") * F.col("nrm_b")), 6).alias("sim"),
-        )
-    )
-    scored = sims.select(
-        F.inline(
-            F.array(
-                F.struct("src", "dst", "sim"),
-                F.struct(F.col("dst").alias("src"), F.col("src").alias("dst"), "sim"),
-            )
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    return (
-        scored.select("src", "dst", "sim", F.row_number().over(w).alias("rnk"))
-        .filter(F.col("rnk") <= 3)
-        .select(
-            F.col("src").alias("doc_id"),
-            F.col("dst").alias("neighbor_id"),
-            "sim",
-            "rnk",
-        )
+    per-src WindowGroupLimit top-k.
+
+    The whole dataflow is ONE SQL text over the documents scan: the
+    same plan as a Column-API chain (equal modulo expression ids), but
+    built in 23 py4j round trips instead of 975, which took 0.17 s of
+    build time per call at sf0.01."""
+    return spark.sql(
+        "WITH tf AS (SELECT doc_id, term, count(*) AS tf FROM ("
+        "  SELECT doc_id, explode(split(text, ' ')) AS term FROM {docs}) "
+        "  GROUP BY doc_id, term), "
+        "st AS (SELECT count(*) AS n FROM {docs}), "
+        "kept AS (SELECT /*+ BROADCAST(st) */ doc_id, term, df, tf * (1000000 DIV df) AS w "
+        "  FROM (SELECT *, count(*) OVER (PARTITION BY term) AS df FROM tf) CROSS JOIN st "
+        "  WHERE df <= n DIV 10), "
+        "p AS (SELECT doc_id, term, w, nrm FROM (SELECT *, "
+        "  sqrt(CAST(sum(w * w) OVER (PARTITION BY doc_id) AS DOUBLE)) AS nrm FROM kept) "
+        "  WHERE df >= 2), "
+        "sims AS (SELECT src, dst, round(CAST(dot AS DOUBLE) / (nrm_a * nrm_b), 6) AS sim "
+        "  FROM (SELECT a.doc_id AS src, b.doc_id AS dst, a.nrm AS nrm_a, b.nrm AS nrm_b, "
+        "    sum(a.w * b.w) AS dot FROM p a JOIN p b ON a.term = b.term AND a.doc_id < b.doc_id "
+        "    GROUP BY a.doc_id, b.doc_id, a.nrm, b.nrm)), "
+        "scored AS (SELECT inline(array(struct(src, dst, sim), "
+        "  struct(dst AS src, src AS dst, sim))) FROM sims) "
+        "SELECT src AS doc_id, dst AS neighbor_id, sim, rnk FROM (SELECT src, dst, sim, "
+        "  row_number() OVER (PARTITION BY src ORDER BY sim DESC, dst) AS rnk FROM scored) "
+        "WHERE rnk <= 3",
+        docs=load_table(spark, sf_dir, "documents"),
     )
 
 

@@ -419,46 +419,48 @@ def _micros_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _count_of_dim(vec: str, dim: int, msg: str):
-    """``COUNT(*)`` for a per-dimension-sum aggregate that raises ``msg``
-    on a vector whose size is not ``dim`` (a NULL vector included): the
-    NULL-tolerant ``get`` sums beside it would skip the missing
-    coordinates while the row still counts in the divisor."""
-    bad = F.coalesce(F.size(vec), F.lit(-1)) != dim
-    return F.count(F.when(bad, F.raise_error(F.lit(msg))).otherwise(F.lit(1)))
+def _count_of_dim(vec: str, dim: int, msg: str) -> str:
+    """SQL ``COUNT(*)`` for a per-dimension-sum aggregate that raises
+    ``msg`` on a vector whose size is not ``dim`` (a NULL vector
+    included): the NULL-tolerant ``get`` sums beside it would skip the
+    missing coordinates while the row still counts in the divisor."""
+    return (
+        f"count(CASE WHEN coalesce(size({vec}), -1) != {dim} "
+        f"THEN raise_error('{msg}') ELSE 1 END)"
+    )
+
+
+def _argmin_sql(cents: str, vec: str) -> str:
+    """SQL for the (d2, cid) struct of the centroid in the array-of-(cid,
+    cm) ``cents`` nearest ``vec``: k exact-integer squared distances by
+    JVM higher-order functions, argmin via array_sort(struct(d2, cid))[0]
+    (ties on cid)."""
+    return (
+        f"array_sort(transform({cents}, c -> struct(aggregate(zip_with({vec}, c.cm, "
+        "(a, b) -> (a - b) * (a - b)), CAST(0 AS BIGINT), (acc, x) -> acc + x) AS d2, "
+        "c.cid AS cid)))[0]"
+    )
 
 
 def _collapse(cent_rows: DataFrame) -> DataFrame:
     """(cid, cm) rows -> ONE array-of-structs row, the broadcastable
     scalar the zero-shuffle assignment pass consumes."""
-    return cent_rows.select(
-        F.struct(F.col("cid"), F.col("cm")).alias("c")
-    ).agg(F.sort_array(F.collect_list("c")).alias("cents"))
+    return cent_rows.sparkSession.sql(
+        "SELECT sort_array(collect_list(c)) AS cents "
+        "FROM (SELECT struct(cid, cm) AS c FROM {rows})",
+        rows=cent_rows,
+    )
 
 
 def _assign(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """Zero-shuffle Lloyd assignment: broadcast the centroid arrays,
-    score k squared distances per vector with JVM higher-order
-    functions, argmin via array_sort(struct(d2, cid))[0]."""
-
-    def scored(c):
-        d2 = F.aggregate(
-            F.zip_with(F.col("m"), c["cm"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        return F.struct(d2.alias("d2"), c["cid"].alias("cid"))
-
-    best = F.array_sort(F.transform(F.col("cents"), scored))[0]
-    return (
-        e.crossJoin(F.broadcast(cents))
-        .withColumn("best", best)
-        .select(
-            "vec_id",
-            "m",
-            F.col("best.cid").alias("cluster"),
-            F.col("best.d2").alias("d2"),
-        )
+    """Zero-shuffle Lloyd assignment: broadcast the centroid arrays and
+    take each vector's :func:`_argmin_sql`."""
+    return e.sparkSession.sql(
+        "SELECT vec_id, m, best.cid AS cluster, best.d2 AS d2 FROM ("
+        f"  SELECT /*+ BROADCAST(k) */ *, {_argmin_sql('cents', 'm')} AS best "
+        "  FROM {e} CROSS JOIN {cents} k)",
+        e=e,
+        cents=cents,
     )
 
 
@@ -488,28 +490,20 @@ def kmeans_centroids(
     if e is None:
         e = _micros_table(spark, sf_dir)
     c0 = _collapse(
-        e.filter(F.col("vec_id") < _KM_K).select(
-            F.col("vec_id").alias("cid"), F.col("m").alias("cm")
-        )
+        spark.sql(f"SELECT vec_id AS cid, m AS cm FROM {{e}} WHERE vec_id < {_KM_K}", e=e)
     )
-    a1 = _assign(e, c0)
     # r13 centroid update (guide §2.3/§2.4): one groupBy(cluster) with a
     # per-dimension sum column each instead of posexplode(m) -> 64x row
     # blowup -> groupBy(cluster, i) -> second groupBy(cluster) with a
     # sorted collect_list.  Same integers (per-dim long sum, DIV by the
     # same per-cluster count, array order = dim order); one exchange and
     # no 64x intermediate.
-    out = (
-        a1.groupBy("cluster")
-        .agg(
-            *[F.sum(F.get("m", i)).alias(f"s{i}") for i in range(dim)],
-            _count_of_dim("m", dim, f"kmeans_centroids: vectors must have {dim} dims")
-            .alias("n"),
-        )
-        .select(
-            F.col("cluster").alias("cid"),
-            F.array(*[F.expr(f"s{i} DIV n") for i in range(dim)]).alias("cm"),
-        )
+    msg = f"kmeans_centroids: vectors must have {dim} dims"
+    out = spark.sql(
+        f"SELECT cluster AS cid, array({', '.join(f's{i} DIV n' for i in range(dim))}) AS cm "
+        f"FROM (SELECT cluster, {', '.join(f'sum(get(m, {i})) AS s{i}' for i in range(dim))}, "
+        f"  {_count_of_dim('m', dim, msg)} AS n FROM {{a1}} GROUP BY cluster)",
+        a1=_assign(e, c0),
     )
     return out.localCheckpoint(eager=False) if checkpoint else out
 
@@ -877,8 +871,8 @@ def emb_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pq_sub(col, s):
-    return F.slice(col, s * _PQ_DSUB + 1, _PQ_DSUB)
+def _pq_slice(vec: str, s: int) -> str:
+    return f"slice({vec}, {s * _PQ_DSUB + 1}, {_PQ_DSUB})"
 
 
 def pq_codebooks(e: DataFrame) -> DataFrame:
@@ -893,117 +887,65 @@ def pq_codebooks(e: DataFrame) -> DataFrame:
     Returns ONE 1-row DataFrame with columns ``cents_0..cents_3`` — the
     broadcastable array-of-(cid, cm) scalars.  Shared by x_emb_pq and
     the IVF-PQ probe (llm_similarity.py)."""
-    from pyspark.sql import Window
-
     # r13 (guide §2.4): the seed rows carry their vectors, so all 4 init
     # codebooks come straight off the 16 seed rows — the former
-    # corpus-sized sub x seeds equi-join and its aggregate are gone
-    seeds = (
-        e.select("vec_id", "m")
-        .orderBy(F.pmod(F.col("vec_id") * KNUTH, F.lit(4294967296)), "vec_id")
-        .limit(_PQ_K)
-    )
-    seeds = seeds.select(
-        "m", (F.row_number().over(Window.orderBy("vec_id")) - 1).alias("cid")
-    )
-    sub = e.select(
-        "vec_id",
-        F.posexplode(
-            F.array(*[_pq_sub(F.col("m"), s) for s in range(_PQ_M)])
-        ).alias("s", "sm"),
-    )
-    c0 = seeds.groupBy().agg(
-        *[
-            F.sort_array(
-                F.collect_list(
-                    F.struct(F.col("cid"), _pq_sub(F.col("m"), s).alias("cm"))
-                )
-            ).alias(f"cents_{s}")
-            for s in range(_PQ_M)
-        ]
-    )
-
-    def scored(c):
-        d2 = F.aggregate(
-            F.zip_with(F.col("sm"), c["cm"], lambda a, b: (a - b) * (a - b)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-        return F.struct(d2.alias("d2"), c["cid"].alias("cid"))
-
-    cents_for_s = F.element_at(
-        F.array(*[F.col(f"cents_{s}") for s in range(_PQ_M)]),
-        (F.col("s") + 1).cast("int"),
-    )
-    a1 = (
-        sub.crossJoin(F.broadcast(c0))
-        .withColumn("best", F.array_sort(F.transform(cents_for_s, scored))[0])
-        .select("s", "sm", F.col("best.cid").alias("cluster"))
-    )
+    # corpus-sized sub x seeds equi-join and its aggregate are gone.
     # r13 centroid update: one groupBy(s, cluster) with 16 per-dimension
     # sums instead of posexplode(sm) -> groupBy(s, cluster, i) ->
     # groupBy(s, cluster) (same integers, one exchange, no 16x rows —
-    # the kmeans_centroids discipline)
-    c1 = (
-        a1.groupBy("s", "cluster")
-        .agg(
-            *[F.sum(F.get("sm", i)).alias(f"v{i}") for i in range(_PQ_DSUB)],
-            _count_of_dim(
-                "sm", _PQ_DSUB, f"pq_codebooks: vectors must have {_PQ_M * _PQ_DSUB} dims"
-            ).alias("n"),
+    # the kmeans_centroids discipline).
+    subs = range(_PQ_M)
+    msg = f"pq_codebooks: vectors must have {_PQ_M * _PQ_DSUB} dims"
+    cents = ", ".join(f"cents_{s}" for s in subs)
+    books = e.sparkSession.sql(
+        "WITH seeds AS (SELECT m, row_number() OVER (ORDER BY vec_id) - 1 AS cid FROM ("
+        f"  SELECT vec_id, m FROM {{e}} ORDER BY pmod(vec_id * {KNUTH}, 4294967296), vec_id "
+        f"  LIMIT {_PQ_K})), "
+        f"sub AS (SELECT vec_id, posexplode(array({', '.join(_pq_slice('m', s) for s in subs)})) "
+        "  AS (s, sm) FROM {e}), "
+        "c0 AS (SELECT "
+        + ", ".join(
+            f"sort_array(collect_list(struct(cid, {_pq_slice('m', s)} AS cm))) AS cents_{s}"
+            for s in subs
         )
-        .select(
-            "s",
-            F.col("cluster").alias("cid"),
-            F.array(*[F.expr(f"v{i} DIV n") for i in range(_PQ_DSUB)]).alias("cm"),
+        + " FROM seeds), "
+        "a1 AS (SELECT s, sm, best.cid AS cluster FROM (SELECT /*+ BROADCAST(c0) */ *, "
+        f"  {_argmin_sql(f'element_at(array({cents}), CAST(s + 1 AS INT))', 'sm')} AS best "
+        "  FROM sub CROSS JOIN c0)), "
+        f"c1 AS (SELECT s, cluster AS cid, array({', '.join(f'v{i} DIV n' for i in range(_PQ_DSUB))}) "
+        f"  AS cm FROM (SELECT s, cluster, {', '.join(f'sum(get(sm, {i})) AS v{i}' for i in range(_PQ_DSUB))}, "
+        f"  {_count_of_dim('sm', _PQ_DSUB, msg)} AS n FROM a1 GROUP BY s, cluster)) "
+        "SELECT "
+        + ", ".join(
+            f"sort_array(collect_list(CASE WHEN s = {s} THEN struct(cid, cm) END)) AS cents_{s}"
+            for s in subs
         )
+        + " FROM c1",
+        e=e,
     )
-    return (
-        c1.groupBy()
-        .agg(
-            *[
-                F.sort_array(
-                    F.collect_list(
-                        F.when(F.col("s") == s, F.struct(F.col("cid"), F.col("cm")))
-                    )
-                ).alias(f"cents_{s}")
-                for s in range(_PQ_M)
-            ]
-        )
-        # the 1-row all-codebooks scalar is broadcast by every consumer
-        # (encode + the IVF-PQ distance tables) — checkpoint it so a
-        # second broadcast doesn't re-run the fused Lloyd round
-        .localCheckpoint(eager=False)
-    )
+    # the 1-row all-codebooks scalar is broadcast by every consumer
+    # (encode + the IVF-PQ distance tables) — checkpoint it so a
+    # second broadcast doesn't re-run the fused Lloyd round
+    return books.localCheckpoint(eager=False)
 
 
 def pq_encode(e: DataFrame, books: DataFrame) -> DataFrame:
     """Fused PQ encode: one pass over ``e``, one broadcast of the 1-row
     all-codebooks scalar, no joins — adds ``code_{s}``/``err_{s}``
     columns for every subspace."""
-
-    def make_scored(s):
-        subvec = _pq_sub(F.col("m"), s)
-
-        def scored(c):
-            d2 = F.aggregate(
-                F.zip_with(subvec, c["cm"], lambda a, b: (a - b) * (a - b)),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            )
-            return F.struct(d2.alias("d2"), c["cid"].alias("cid"))
-
-        return scored
-
-    out = e.crossJoin(F.broadcast(books))
-    for s in range(_PQ_M):
-        best = F.array_sort(F.transform(F.col(f"cents_{s}"), make_scored(s)))[0]
-        out = out.withColumn(f"best_{s}", best).drop(f"cents_{s}")
-    return out.select(
-        "*",
-        *[F.col(f"best_{s}.cid").alias(f"code_{s}") for s in range(_PQ_M)],
-        *[F.col(f"best_{s}.d2").alias(f"err_{s}") for s in range(_PQ_M)],
-    ).drop(*[f"best_{s}" for s in range(_PQ_M)])
+    cols = ", ".join(e.columns)
+    return e.sparkSession.sql(
+        f"SELECT {cols}, "
+        + ", ".join(f"best_{s}.cid AS code_{s}" for s in range(_PQ_M)) + ", "
+        + ", ".join(f"best_{s}.d2 AS err_{s}" for s in range(_PQ_M))
+        + f" FROM (SELECT /*+ BROADCAST(k) */ {cols}, "
+        + ", ".join(
+            f"{_argmin_sql(f'cents_{s}', _pq_slice('m', s))} AS best_{s}" for s in range(_PQ_M)
+        )
+        + " FROM {e} CROSS JOIN {books} k)",
+        e=e,
+        books=books,
+    )
 
 
 # log10(1 + 1/d) in ppm for d = 1..9 — fixed public constants, so no

@@ -63,6 +63,7 @@ def test_broken_key_cannot_void_the_bench(spark, tmp_path):
         assert {"build_s", "plan_s", "exec_s", "stages", "jobs.build", "jobs.exec"} <= set(record)
         assert any(k.startswith("plan.") for k in record)
         assert record["exec_s"] >= 0 and record["stages"] >= 1
+        assert record["py4j_calls"] >= 1  # spark.range(5).toDF is a few round trips
 
 
 def test_all_good_keys_have_no_errors(spark, tmp_path):
@@ -75,6 +76,39 @@ def test_all_good_keys_have_no_errors(spark, tmp_path):
     assert set(cpu_sec) == set(specs)
     assert all(v >= 0 for v in cpu_sec.values())
     assert set(layers) == set(specs)
+
+
+def test_slow_keys_record_the_median_of_three_traced_passes(spark, tmp_path, monkeypatch):
+    # One traced pass can land on a stall: a key timed over the re-time
+    # threshold records the median build/plan/exec of three traced
+    # passes (counts from the first), a faster key one traced pass.
+    import time
+
+    builds = {"slow": 0, "fast": 0}
+
+    def build(key, stall_on):
+        def fn(spark, sf_dir):
+            builds[key] += 1
+            time.sleep(2.0 if builds[key] == stall_on else 0.5 if key == "slow" else 0.0)
+            return spark.range(5).toDF("id")
+
+        return fn
+
+    monkeypatch.setattr(bench, "RETIME_THRESHOLD_SEC", 0.4)
+    spark.range(5).write.format("noop").mode("overwrite").save()  # keep "fast" under it
+    # slow: 1 timed pass + 2 re-timed + 3 traced, the 4th build (the
+    # first traced pass) stalls; fast: 1 timed pass + 1 traced
+    specs = {
+        "slow": _FakeSpec("slow", build("slow", stall_on=4)),
+        "fast": _FakeSpec("fast", build("fast", stall_on=0)),
+    }
+    timings, passes, errors, cpu_sec, layers = bench.time_queries(spark, specs, str(tmp_path))
+    assert errors == {} and passes == {"slow": 3, "fast": 1}
+    assert builds == {"slow": 6, "fast": 2}
+    assert 0.5 <= layers["slow"]["build_s"] < 1.0  # median of 2.0, 0.5, 0.5
+    assert layers["fast"]["build_s"] < 0.4
+    for record in layers.values():
+        assert record["py4j_calls"] >= 1 and record["stages"] >= 1
 
 
 def test_failed_cpu_read_keeps_the_timing(spark, tmp_path, monkeypatch):

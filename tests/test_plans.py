@@ -876,6 +876,44 @@ def test_sparse_topk_job_budget(spark):
     assert n_jobs <= 9, f"x_sim_sparse_topk ran {n_jobs} jobs (budget 9)"
 
 
+def test_audio_energy_runs_one_job(spark):
+    # The frame-energy kernel runs on the scan's own splits: build plus
+    # the final write is one job with no shuffle (two when a
+    # repartition by input bytes put an exchange under the kernel).
+    from hbasemapreduce_spark.catalog import load_table
+
+    load_table(spark, SF_DIR, "documents")
+    group = "test_audio_energy_runs_one_job"
+    n_jobs = _count_jobs(spark, group, lambda: _build_and_write(spark, "x_multimodal_audio_energy"))
+    assert n_jobs == 1, f"x_multimodal_audio_energy ran {n_jobs} jobs (budget 1)"
+
+
+@pytest.mark.parametrize(
+    "key, budget",
+    [
+        # warm-build py4j round trips at sf0.001 as one SQL text per step;
+        # the Column-API chains they replace made the counts on the right
+        ("x_sim_sparse_topk", 40),  # 23; was 975
+        ("x_dedup_ngram_jaccard", 40),  # 23; was 439
+        ("x_dedup_clusters", 200),  # 152; was 1080
+        ("x_ml_kmeans", 250),  # 193; was 2890
+        ("x_emb_pq", 350),  # 281; was 3250
+    ],
+)
+def test_sql_text_builders_round_trip_budget(spark, key, budget):
+    # Every Column-API call is several py4j round trips (plus a Python
+    # call-site capture), so a builder that chains hundreds of them
+    # spends more time building than a small key spends executing.
+    import bench
+
+    spec = all_specs()[key]
+    spec.fn(spark, SF_DIR)  # warm: schema cache and staged inputs
+    with bench.Py4jCalls(spark) as py4j:
+        py4j.wrap(key, spec).fn(spark, SF_DIR)
+    calls = py4j.calls[key][0]
+    assert calls <= budget, f"{key} build made {calls} py4j round trips (budget {budget})"
+
+
 @pytest.mark.parametrize("key", ["x_source_snapshot", "x_etl_vacuum"])
 def test_staged_snapshot_rebuild_runs_no_jobs(spark, key):
     # The staged commit files never change once staged, so their footer
