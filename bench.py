@@ -46,6 +46,8 @@ import statistics
 import sys
 import time
 
+from py4j.protocol import MEMORY_COMMAND_NAME, MEMORY_DEL_SUBCOMMAND_NAME
+
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
@@ -69,6 +71,9 @@ ALWAYS_RETIME_SEC = 2.5
 BUDGET_SEC = 900.0
 
 
+_RELEASE = MEMORY_COMMAND_NAME + MEMORY_DEL_SUBCOMMAND_NAME
+
+
 class Py4jCalls:
     """Counts the py4j round trips of each wrapped builder's build while
     installed (``with``); py4j's asynchronous object-release messages
@@ -76,10 +81,12 @@ class Py4jCalls:
 
     def __init__(self, spark) -> None:
         self.client = spark.sparkContext._gateway._gateway_client
-        self.send, self.n, self.calls = self.client.send_command, None, {}
+        self.send = self.client.send_command
+        self.n: int | None = None  # the count of the build in progress
+        self.calls: dict[str, list[int]] = {}
 
     def _send(self, command: str, *args, **kwargs):
-        if self.n is not None and not command.startswith("m\nd"):
+        if self.n is not None and not command.startswith(_RELEASE):
             self.n += 1
         return self.send(command, *args, **kwargs)
 

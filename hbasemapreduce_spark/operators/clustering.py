@@ -59,9 +59,14 @@ _PAIRS_SQL = (
 def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id) for every doc in a near-dup pair; cluster_id
     = smallest doc_id in the connected component."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("id_a", "id_b")
-    return min_label_components(pairs).select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+    return _doc_clusters(dedup_ngram_jaccard(spark, sf_dir))
+
+
+def _doc_clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id) of :func:`min_label_components` over ``pairs``."""
+    return pairs.sparkSession.sql(
+        "SELECT id AS doc_id, label AS cluster_id FROM {labels}",
+        labels=min_label_components(pairs),
     )
 
 
@@ -70,10 +75,11 @@ _ROUNDS_PER_CHECKPOINT = 3
 
 def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     """Iterative min-label connected components over an (id_a, id_b)
-    pair list — the shared harness behind x_dedup_clusters,
-    x_dedup_phash_clusters and x_pipeline_entity_resolution (string
-    ids).  Returns (id, label) for every endpoint, label = component
-    minimum.  Pairs with a NULL endpoint are dropped (NULL names no node).
+    pair list (other columns are ignored) — the shared harness behind
+    x_dedup_clusters, x_dedup_phash_clusters and
+    x_pipeline_entity_resolution (string ids).  Returns (id, label) for
+    every endpoint, label = component minimum.  Pairs with a NULL
+    endpoint are dropped (NULL names no node).
 
     Each pair becomes four edges, both directions plus a self-loop per
     endpoint, so a round is one join + one ``min(label)`` per id_a; the
@@ -84,7 +90,7 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
     cost), and ``max(chg)`` of the last round is observed on that same
     job; a round that changed nothing is the fixpoint (labels only
     decrease).  Each step is one SQL text: x_dedup_clusters builds in
-    152 py4j round trips at sf0.01, against 1080 as a Column-API chain.
+    85 py4j round trips at sf0.01, against 1080 as a Column-API chain.
 
     Refuted: pointer-doubling (rounds 6 -> 5, wall time flat-to-worse
     at shallow near-dup diameters) and self-loops built with
@@ -123,7 +129,7 @@ def min_label_components(pairs: DataFrame, max_rounds: int = 20) -> DataFrame:
             seen = Observation()
             labels = labels.observe(seen, F.expr("max(chg) AS chg")).localCheckpoint()
             if not seen.get["chg"]:
-                return labels.select("id", "label")
+                return spark.sql("SELECT id, label FROM {labels}", labels=labels)
         labelled = "SELECT e.id_a, e.id_b, l.label FROM {edges} e JOIN {labels} l ON e.id_b = l.id"
     # fail LOUDLY: truncated propagation would return intermediate
     # labels as if they were component minima — a wrong answer, not an
@@ -178,9 +184,9 @@ def dedup_phash_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate over the edge endpoints."""
     from .llm_multimodal import multimodal_phash_dedup
 
-    pairs = multimodal_phash_dedup(spark, sf_dir).select(
-        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
-    )
-    return min_label_components(pairs).select(
-        F.col("id").alias("doc_id"), F.col("label").alias("cluster_id")
+    return _doc_clusters(
+        spark.sql(
+            "SELECT doc_a AS id_a, doc_b AS id_b FROM {pairs}",
+            pairs=multimodal_phash_dedup(spark, sf_dir),
+        )
     )

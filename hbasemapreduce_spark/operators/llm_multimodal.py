@@ -527,13 +527,10 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-    return docs.mapInPandas(
-        frame_energies, schema="doc_id long, frame_idx long, energy long"
-    ).select(
-        "doc_id",
-        "frame_idx",
-        F.lit(_AUDIO_FRAME).cast("long").alias("n_samples"),
-        "energy",
+    return spark.sql(
+        f"SELECT doc_id, frame_idx, CAST({_AUDIO_FRAME} AS BIGINT) AS n_samples, energy "
+        "FROM {frames}",
+        frames=docs.mapInPandas(frame_energies, schema="doc_id long, frame_idx long, energy long"),
     )
 
 

@@ -895,7 +895,7 @@ def test_audio_energy_runs_one_job(spark):
         # the Column-API chains they replace made the counts on the right
         ("x_sim_sparse_topk", 40),  # 23; was 975
         ("x_dedup_ngram_jaccard", 40),  # 23; was 439
-        ("x_dedup_clusters", 200),  # 152; was 1080
+        ("x_dedup_clusters", 120),  # 85; was 1080
         ("x_ml_kmeans", 250),  # 193; was 2890
         ("x_emb_pq", 350),  # 281; was 3250
     ],
